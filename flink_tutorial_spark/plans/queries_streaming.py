@@ -2706,7 +2706,7 @@ def streaming_uv_kmv_trailing(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("shard", F.pmod("hv", F.lit(S)))
         .withWatermark("ts", "0 seconds")
     )
-    # pipeline (a): fixed-state per-(day, shard) k-min fold, live
+    # pipeline (a): fixed-state k-min fold bucketed by shard, live
     folded = kmv_day_fold(
         stream.withColumn("day", F.date_trunc("day", "ts")),
         "day", "shard", "hv", K,
@@ -2814,7 +2814,7 @@ def streaming_uv_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
         hll_rank().alias("rank"),
         hll_shard().alias("shard"),
     )
-    # pipeline (a): fixed-state per-(day, shard) register fold, live.
+    # pipeline (a): fixed-state register fold bucketed by shard, live.
     # pipeline (b): exact distinct (day, hv) pairs — calibration only.
     # Independent sinks of the same source: run CONCURRENTLY (start
     # both, drain both), wall is max(a, b), not the sum.

@@ -14,6 +14,7 @@ import threading
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 #: sessions whose runtime confs were already ensured (weak: a stopped
 #: session must not be pinned alive by this cache, and a NEW session
@@ -22,6 +23,13 @@ from pyspark.sql import DataFrame, SparkSession
 #: from several driver threads (ADVICE r19).
 _CONFS_ENSURED: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 _CONFS_LOCK = threading.Lock()
+
+#: per-session inferred Parquet schemas, keyed by file identity (see
+#: parquet_schema). Weak on the session for the same reason as
+#: _CONFS_ENSURED, and guarded by the same lock.
+_SCHEMAS: "weakref.WeakKeyDictionary[SparkSession, dict[tuple, StructType]]" = (
+    weakref.WeakKeyDictionary()
+)
 
 TABLES = (
     "region",
@@ -126,10 +134,46 @@ def ensure_runtime_confs(spark: SparkSession) -> None:
         spark.conf.set("spark.sql.shuffle.partitions", str(os.cpu_count() or 32))
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one synthetic table (parquet scan; pushdown/pruning apply)."""
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema `spark.read.parquet(path)` infers, cached per session.
+
+    Inference runs a Spark job that reads the Parquet footers, and every
+    query loads its tables afresh; a read given its schema launches no
+    job. So a file pays inference once per session: the first call runs
+    exactly that inference read, after ensure_runtime_confs has pinned
+    nanosAsLong (which decides how TIMESTAMP(NANOS) columns infer);
+    later calls return the stored StructType.
+
+    Cache contract: an entry is keyed by the file's identity from one
+    os.stat — (abspath, st_ino, st_size, st_mtime_ns). Replacing or
+    rewriting the file changes at least one of them in practice and
+    re-infers. A file rewritten in place with the same inode, size and
+    mtime_ns is NOT detected; that is the same contract as Spark's own
+    file-index caching. The entry also assumes the session's other
+    Parquet inference confs (binaryAsString, int96AsTimestamp, ...) do
+    not change mid-session.
+
+    Out of scope: the engine's re-reads of directories it wrote itself
+    (sink tables such as the dedup registry's meta dir, MergeAggSink
+    parts) still infer on every read — their contents change between
+    reads by design."""
     ensure_runtime_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    st = os.stat(path)
+    key = (os.path.abspath(path), st.st_ino, st.st_size, st.st_mtime_ns)
+    with _CONFS_LOCK:
+        schema = _SCHEMAS.get(spark, {}).get(key)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+        with _CONFS_LOCK:
+            _SCHEMAS.setdefault(spark, {})[key] = schema
+    return schema
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one synthetic table (parquet scan; pushdown/pruning apply)
+    with its cached inferred schema (parquet_schema)."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     return normalize_event_time(df, name)
 
 

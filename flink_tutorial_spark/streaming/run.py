@@ -12,21 +12,18 @@ import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
 
 from flink_tutorial_spark import plan_capture
-from flink_tutorial_spark.session import ensure_runtime_confs, normalize_event_time
+from flink_tutorial_spark.session import normalize_event_time, parquet_schema
 
 
 def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """readStream over a testdata parquet table (file-arrival source)."""
-    ensure_runtime_confs(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    schema: StructType = spark.read.parquet(path).schema
     # the file source wants a directory: watch sf_dir, filter to this table
     df = (
         spark.readStream.format("parquet")
-        .schema(schema)
+        .schema(parquet_schema(spark, path))
         .option("pathGlobFilter", f"{name}.parquet")
         .load(sf_dir)
     )
