@@ -1151,7 +1151,10 @@ def bm25_topk(
     partial-aggregable groupBy bounded by |matched docs| x |query|;
     df rides a count() window over partitionBy(term) on the same tf
     rows (r20 pass 2: the former groupBy(term) + broadcast join-back
-    computed the scan+filter+explode+tf subtree twice); N and avgdl
+    computed the scan+filter+explode+tf subtree twice). Skew bound: the
+    DF window's exchange has at most |query_terms| keys, so each term's
+    matched tf rows land in one task; the sf1 measurement that settles
+    this form against a broadcast DF is ROADMAP.md direction 5. N and avgdl
     ride in as a 1-row broadcast crossJoin. The final top-k is
     orderBy + limit — Spark's TakeOrdered (per-partition heap +
     driver merge of k rows), never a global sort shuffle; the rank

@@ -11,7 +11,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
@@ -22,6 +21,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from flink_tutorial_spark.streaming import buckets
 from flink_tutorial_spark.streaming.stateful import one_frame, ts_us
 
 SEQ_OUT = StructType(
@@ -42,7 +42,7 @@ _SEQ_STATE = StructType(
 
 def _bucket_segments(pdf: pd.DataFrame, key_col: str):
     """Yield (entity, row-position array) per entity of a bucket frame —
-    the shared inner-dispatch loop of the r20 bucket-keyed CEP ops. A
+    the shared inner-dispatch loop of the bucket-keyed CEP ops. A
     stable argsort keeps each entity's rows in frame order, so kernels
     that sort by ts themselves see exactly the rows their per-key form
     received."""
@@ -118,7 +118,6 @@ def detect_consecutive(
     n: int,
     within_seconds: int,
     n_max: int | None = None,
-    n_buckets: int = 64,
 ) -> DataFrame:
     """Strict-contiguity CEP: n consecutive flagged events within T —
     LoginFailWithCep.scala:38-67 (Pattern.begin.next....within) and the
@@ -140,11 +139,11 @@ def detect_consecutive(
     of cumsum(~flag); match positions are one shifted subtraction per
     run per count — no per-row Python.
 
-    KEYED BY HASH BUCKET (r20, the key-cardinality rule): one Python
-    dispatch per bucket per batch; entity sequences advance through the
-    SAME _consecutive_advance_batch kernel in an in-process loop. State
-    per bucket: the trailing <= n_max-1 flagged run timestamps of every
-    active entity, flattened as (users, recent) parallel arrays.
+    Keyed by hash bucket of the entity (buckets.py); entity sequences
+    advance through the SAME _consecutive_advance_batch kernel in an
+    in-process loop. State per bucket: the trailing <= n_max-1 flagged
+    run timestamps of every active entity, flattened as (users, recent)
+    parallel arrays.
 
     Input must arrive time-ordered per key (watermarked upstream, same
     as Flink with out-of-orderness 0)."""
@@ -153,41 +152,23 @@ def detect_consecutive(
         raise ValueError("n_max must be >= n")
 
     def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        users, recents = state.get if state.exists else ([], [])
-        carry: dict[int, list[int]] = {}
-        for u, t in zip(users, recents):
-            carry.setdefault(int(u), []).append(int(t))
+        carry = buckets.unflatten(*buckets.load(state, 2))
         out: list = []
         pdf = one_frame(pdfs)
         if pdf is not None:
             for u, seg in _bucket_segments(pdf, key_col):
                 rows, c = _consecutive_advance_batch(
-                    u, pdf.iloc[seg], carry.get(u, []), n, hi,
+                    u, pdf.iloc[seg], carry.get(u, ([],))[0], n, hi,
                     ts_col, flag_col, within_seconds,
                 )
                 out.extend(rows)
-                if c:
-                    carry[u] = c
-                else:
-                    carry.pop(u, None)
-        if carry:
-            us: list[int] = []
-            ts_flat: list[int] = []
-            for u, lst in carry.items():
-                us.extend([u] * len(lst))
-                ts_flat.extend(lst)
-            state.update((us, ts_flat))
-        elif state.exists:
-            state.remove()
+                carry[u] = (c,)
+        buckets.save(state, buckets.flatten(carry, 1))
         if out:
             yield pd.DataFrame(out, columns=[f.name for f in SEQ_OUT.fields])
 
-    bucketed = df.select(key_col, ts_col, flag_col).withColumn(
-        "_bucket",
-        F.pmod(F.col(key_col).cast("long"), F.lit(n_buckets)).cast("long"),
-    )
-    return bucketed.groupBy("_bucket").applyInPandasWithState(
-        fn, SEQ_OUT, _SEQ_STATE, "append", GroupStateTimeout.NoTimeout
+    return buckets.by_bucket(
+        df, "detect_consecutive", key_col, [ts_col, flag_col], fn, SEQ_OUT, _SEQ_STATE
     )
 
 
@@ -337,7 +318,6 @@ def detect_sequence(
     within_seconds: int,
     veto_col: str | None = None,
     optional: list[bool] | None = None,
-    n_buckets: int = 64,
 ) -> DataFrame:
     """Generalized CEP sequence detection, relaxed contiguity (Flink's
     `followedBy` chain, LoginFailWithCep.scala/OrderTimeoutWithCEP.scala
@@ -371,8 +351,10 @@ def detect_sequence(
     relational UNION) apply distinct() downstream. Step 0 cannot be
     optional (a match needs an anchor).
 
-    State per key: parallel arrays of in-flight (start_us, progress,
-    chain id) plus veto timestamps inside the `within` horizon.
+    Keyed by hash bucket of the entity (buckets.py). State per bucket:
+    entity-tagged parallel arrays of in-flight (start_us, progress,
+    last_us, chain id) plus, separately tagged, veto timestamps inside
+    the `within` horizon.
     In-flight count is bounded by step-0 events inside the horizon —
     the watermark-expired ones drop on every batch.
 
@@ -402,55 +384,35 @@ def detect_sequence(
     ]
 
     def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        # unflatten the bucket state into per-entity kernel tuples
-        # (firsts, progress, lasts, vetoes, var_ids)
-        per: dict[int, tuple] = {}
-        if state.exists:
-            b_us, b_f, b_p, b_l, b_v, v_us, v_ts = state.get
-            for u, f0, p0, l0, vid in zip(b_us, b_f, b_p, b_l, b_v):
-                per.setdefault(int(u), ([], [], [], [], []))
-                t = per[int(u)]
-                t[0].append(int(f0)); t[1].append(int(p0))
-                t[2].append(int(l0)); t[4].append(int(vid))
-            for u, vt in zip(v_us, v_ts):
-                per.setdefault(int(u), ([], [], [], [], []))
-                per[int(u)][3].append(int(vt))
+        arrays = buckets.load(state, 7)
+        # per entity: (firsts, progress, lasts, var_ids) and (vetoes,)
+        branches = buckets.unflatten(*arrays[:5])
+        vetoes = buckets.unflatten(*arrays[5:])
         out: list = []
         pdf = one_frame(pdfs)
         if pdf is not None:
             for u, seg in _bucket_segments(pdf, key_col):
-                rows, st = _sequence_advance_batch(
-                    u, pdf.iloc[seg], per.get(u), chains, step_cols,
-                    ts_col, veto_col, within_us,
+                firsts, prog, lasts, var_ids = branches.get(u, ([], [], [], []))
+                rows, (firsts, prog, lasts, vts, var_ids) = _sequence_advance_batch(
+                    u, pdf.iloc[seg],
+                    (firsts, prog, lasts, vetoes.get(u, ([],))[0], var_ids),
+                    chains, step_cols, ts_col, veto_col, within_us,
                 )
                 out.extend(rows)
-                if st is not None and (len(st[0]) or len(st[3])):
-                    per[u] = st
-                else:
-                    per.pop(u, None)
-        if per:
-            b_us, b_f, b_p, b_l, b_v, v_us, v_ts = [], [], [], [], [], [], []
-            for u, (f0, p0, l0, vt, vid) in per.items():
-                b_us.extend([u] * len(f0))
-                b_f.extend(int(x) for x in f0)
-                b_p.extend(int(x) for x in p0)
-                b_l.extend(int(x) for x in l0)
-                b_v.extend(int(x) for x in vid)
-                v_us.extend([u] * len(vt))
-                v_ts.extend(int(x) for x in vt)
-            state.update((b_us, b_f, b_p, b_l, b_v, v_us, v_ts))
-        elif state.exists:
-            state.remove()
+                branches[u] = (firsts, prog, lasts, var_ids)
+                vetoes[u] = (vts,)
+        buckets.save(state, buckets.flatten(branches, 4) + buckets.flatten(vetoes, 1))
         if out:
             yield pd.DataFrame(out, columns=[f.name for f in SEQUENCE_OUT.fields])
 
-    cols = [key_col, ts_col, *step_cols] + ([veto_col] if veto_col else [])
-    bucketed = df.select(*cols).withColumn(
-        "_bucket",
-        F.pmod(F.col(key_col).cast("long"), F.lit(n_buckets)).cast("long"),
-    )
-    return bucketed.groupBy("_bucket").applyInPandasWithState(
-        fn, SEQUENCE_OUT, _SEQUENCE_STATE, "append", GroupStateTimeout.NoTimeout
+    return buckets.by_bucket(
+        df,
+        "detect_sequence",
+        key_col,
+        [ts_col, *step_cols] + ([veto_col] if veto_col else []),
+        fn,
+        SEQUENCE_OUT,
+        _SEQUENCE_STATE,
     )
 
 
@@ -610,37 +572,26 @@ def match_or_timeout(
     start_kind: str,
     end_kind: str,
     within_seconds: int,
-    n_buckets: int = 64,
 ) -> DataFrame:
     """Match-or-timeout — OrderTimeoutWithCEP.scala:38-71 / OrderTimeout.
     scala:50-127: a start event must be followed by an end event within
     T, else emit a timeout row.
 
-    EventTimeTimeout + setTimeoutTimestamp IS Flink's
-    registerEventTimeTimer: the timeout branch fires when the watermark
-    passes start_ts + T, exactly like onTimer. Requires withWatermark
-    on the input stream.
+    An EventTimeTimeout timer IS Flink's registerEventTimeTimer: the
+    timeout branch fires when the watermark passes start_ts + T,
+    exactly like onTimer. Requires withWatermark on the input stream.
 
-    KEYED BY HASH BUCKET (r20, the blacklist/transition key-cardinality
-    rule): per-entity keying paid one Python dispatch per entity per
-    batch PLUS one per expired timer in the trailing no-data batch.
-    The bucket holds the pending (start_ts, value) per entity in
-    parallel arrays; per-entity sequences run through the SAME
-    _match_advance_batch kernel in an in-process loop. Timer parity
-    with the per-key form, batch by batch:
-      * data batch — entities WITH data decide their pendings from
-        events alone (their per-key timers would not fire in a batch
-        where they have data); entities WITHOUT data emit iff
-        deadline_ms < watermark, exactly the per-key fire rule
-        evaluated in the same micro-batch their own timers would fire;
-      * no-data batch — the bucket timer sits at the MIN pending
-        deadline, so it fires iff at least one per-key timer would;
-        the sweep emits exactly the expired subset and re-arms at the
-        next min. Re-arming clamps to watermark+1 ms (Spark rejects
-        timers <= watermark); the clamp can only engage when a kept
-        pending's deadline EQUALS the current watermark, and it never
-        changes which rows are emitted or their content — only, in
-        that 1 ms corner, which later micro-batch commits the row.
+    Keyed by hash bucket of the entity (buckets.py). State per bucket:
+    the pending (start_ts, value) per entity as (users, start_ts,
+    start_values) parallel arrays; per-entity sequences run through
+    the SAME _match_advance_batch kernel in an in-process loop. Timer
+    parity with a per-entity timer, batch by batch: entities WITH data
+    decide their pendings from events alone (a per-entity timer does
+    not fire in a batch where its key has data); every other pending
+    emits iff deadline_ms < watermark, the per-key fire rule evaluated
+    in the micro-batch its own timer would fire in. The bucket timer
+    sits at the MIN pending deadline, so a no-data batch invokes the
+    bucket iff at least one per-entity timer would fire.
 
     Output timestamps are int64 MICROSECONDS. The converged output is
     deterministic (batching-independent) — see _match_advance_batch —
@@ -649,83 +600,58 @@ def match_or_timeout(
     overwritten; otherwise timeout, emitted iff (start+T) in ms floors
     strictly below the achieved watermark (Spark fires event-time
     timers on `timeoutTimestamp < watermark`, both ms-floored)."""
-    import numpy as np
-
     within_us = within_seconds * 1_000_000
 
     def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        users, sts, svs = state.get if state.exists else ([], [], [])
-        pend = {int(u): (int(st), float(sv)) for u, st, sv in zip(users, sts, svs)}
+        pend = {u: (st, sv) for u, st, sv in zip(*buckets.load(state, 3))}
         out = []
+        seen: set = set()
+        pdf = None if state.hasTimedOut else one_frame(pdfs)
+        if pdf is not None:
+            # deterministic order: ts, then kind ascending (stable
+            # mergesort) so equal-ts start/end pairs always process
+            # end-first, mirroring the oracle's ORDER BY ts, kind;
+            # _bucket_segments' stable grouping sort by entity keeps the
+            # (ts, kind) order inside each entity's segment
+            pdf = pdf.sort_values([ts_col, kind_col], kind="mergesort")
+            ts_all = ts_us(pdf[ts_col]).to_numpy()
+            kind_all = pdf[kind_col].to_numpy()
+            val_all = pdf["value"].to_numpy(dtype="float64")
+            for u, seg in _bucket_segments(pdf, key_col):
+                seen.add(u)
+                rows, (st, sv) = _match_advance_batch(
+                    ts_all[seg], kind_all[seg], val_all[seg],
+                    start_kind, end_kind, within_us, *pend.get(u, (0, 0.0)),
+                )
+                out.extend((u, a, b, s, v) for a, b, s, v in rows)
+                if st > 0:
+                    pend[u] = (st, sv)
+                else:
+                    pend.pop(u, None)
+        # pendings of entities without data this batch fire on the
+        # per-key timer rule: deadline_ms < watermark
         wm_ms = state.getCurrentWatermarkMs()
-        if state.hasTimedOut:
-            for u, (st, sv) in list(pend.items()):
-                if (st + within_us) // 1_000 < wm_ms:
-                    out.append((u, st, st + within_us, "timeout", sv))
-                    del pend[u]
-        else:
-            pdf = one_frame(pdfs)
-            seen: set = set()
-            if pdf is not None:
-                # deterministic order: ts, then kind ascending (stable
-                # mergesort) so equal-ts start/end pairs always process
-                # end-first, mirroring the oracle's ORDER BY ts, kind;
-                # then a stable grouping sort by entity, which keeps the
-                # (ts, kind) order inside each entity's segment
-                pdf = pdf.sort_values([ts_col, kind_col], kind="mergesort")
-                ts_all = ts_us(pdf[ts_col]).to_numpy()
-                kind_all = pdf[kind_col].to_numpy()
-                val_all = pdf["value"].to_numpy(dtype="float64")
-                u_all = pdf[key_col].to_numpy(dtype="int64")
-                order = np.argsort(u_all, kind="stable")
-                u_sorted = u_all[order]
-                bounds = np.flatnonzero(
-                    np.concatenate(([True], u_sorted[1:] != u_sorted[:-1]))
-                )
-                for seg_i, lo in enumerate(bounds):
-                    hi = bounds[seg_i + 1] if seg_i + 1 < len(bounds) else len(order)
-                    seg = order[lo:hi]
-                    u = int(u_sorted[lo])
-                    seen.add(u)
-                    st0, sv0 = pend.get(u, (0, 0.0))
-                    rows, (st, sv) = _match_advance_batch(
-                        ts_all[seg], kind_all[seg], val_all[seg],
-                        start_kind, end_kind, within_us, st0, sv0,
-                    )
-                    out.extend((u, a, b, s, v) for a, b, s, v in rows)
-                    if st > 0:
-                        pend[u] = (st, sv)
-                    else:
-                        pend.pop(u, None)
-            # entities without data this batch: their per-key timers
-            # would fire in this same micro-batch — apply the identical
-            # deadline_ms < watermark rule here
-            if wm_ms > 0:
-                for u, (st, sv) in list(pend.items()):
-                    if u not in seen and (st + within_us) // 1_000 < wm_ms:
-                        out.append((u, st, st + within_us, "timeout", sv))
-                        del pend[u]
-        if pend:
-            state.update(
-                (
-                    list(pend.keys()),
-                    [st for st, _ in pend.values()],
-                    [sv for _, sv in pend.values()],
-                )
-            )
-            min_dl = min((st + within_us) // 1_000 for st, _ in pend.values())
-            state.setTimeoutTimestamp(max(min_dl, wm_ms + 1))
-        elif state.exists:
-            state.remove()
+        for u, (st, sv) in list(pend.items()):
+            if u not in seen and (st + within_us) // 1_000 < wm_ms:
+                out.append((u, st, st + within_us, "timeout", sv))
+                del pend[u]
+        users = list(pend)
+        starts = [pend[u][0] for u in users]
+        buckets.save(
+            state,
+            (users, starts, [pend[u][1] for u in users]),
+            [(st + within_us) // 1_000 for st in starts],
+        )
         if out:
             yield pd.DataFrame(out, columns=[f.name for f in TIMEOUT_OUT.fields])
 
-    # project to exactly the columns fn reads before the Python boundary
-    # (guide §4.1), then bucket the entity key
-    bucketed = df.select(key_col, ts_col, kind_col, "value").withColumn(
-        "_bucket",
-        F.pmod(F.col(key_col).cast("long"), F.lit(n_buckets)).cast("long"),
-    )
-    return bucketed.groupBy("_bucket").applyInPandasWithState(
-        fn, TIMEOUT_OUT, _TIMEOUT_STATE, "append", GroupStateTimeout.EventTimeTimeout
+    return buckets.by_bucket(
+        df,
+        "match_or_timeout",
+        key_col,
+        [ts_col, kind_col, "value"],
+        fn,
+        TIMEOUT_OUT,
+        _TIMEOUT_STATE,
+        GroupStateTimeout.EventTimeTimeout,
     )

@@ -8,9 +8,9 @@ Semantic mapping (documented deltas):
   struct per key (model all Flink state slots as fields of one tuple;
   lists/maps become array fields).
 - registerEventTimeTimer/onTimer (ProcessingTimeTimerDemo.java:45-55,
-  LoginFail.scala:65-103) -> GroupStateTimeout.EventTimeTimeout +
-  state.setTimeoutTimestamp; the callback is the `state.hasTimedOut`
-  branch of the same function.
+  LoginFail.scala:65-103) -> GroupStateTimeout.EventTimeTimeout plus a
+  timeout timestamp (armed by buckets.save); the callback is the
+  `state.hasTimedOut` branch of the same function.
 - State TTL (KeyedStateTTLDemo.java:62-72) -> ProcessingTimeTimeout +
   state.remove() on timeout.
 - Per-record emission (keyed.sum emits one row per input) -> one row
@@ -43,6 +43,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from flink_tutorial_spark.streaming import buckets
 
 
 def keyed_process(
@@ -300,7 +302,6 @@ def blacklist_filter(
     day_col: str,
     max_count: int,
     order_col: str = "event_id",
-    n_buckets: int = 64,
 ) -> DataFrame:
     """Ad-click blacklist filter — AdClickAnalysis.scala:85-123
     (FliterBlackListUserResult): per (user, ad) the first `max_count`
@@ -312,16 +313,10 @@ def blacklist_filter(
     so the daily reset is by construction — deterministic, and the
     idiomatic shape for event-time replay.
 
-    KEYED BY HASH BUCKET (r20) — the same key-cardinality lesson the
-    transition/SCD2 operators already apply: applyInPandasWithState
-    pays a per-key Python dispatch, so the key should be a bounded
-    bucket, not an entity. This operator's history IS the measurement:
-    (user, ad, day) keying = ~17k near-singleton dispatches = 51 s at
-    sf0.1 (r7); per-user keying = ~1.5k dispatches = ~3 s per pipeline;
-    ``n_buckets`` hash buckets = 64 dispatches of pure vectorized
-    pandas (one frame per bucket, ranks via groupby([user, ad, day])
-    .cumcount()). State per bucket: four parallel arrays (users, items,
-    days, counts) of the bucket's ACTIVE (user, ad, day) counters.
+    Keyed by hash bucket of the user (buckets.py). One frame per bucket
+    ranks clicks via groupby([user, ad, day]).cumcount(). State per
+    bucket: four parallel arrays (users, items, days, counts) of the
+    bucket's ACTIVE (user, ad, day) counters.
 
     GC moves from per-user timers to per-entry watermark pruning: a
     (user, ad, day) counter is dead once the watermark passes
@@ -347,92 +342,68 @@ def blacklist_filter(
             # in the bucket is at least a day past its late horizon
             state.remove()
             return
-        users, items, days, cnts = state.get if state.exists else ([], [], [], [])
-        carried = (
-            pd.DataFrame({"_us": users, "_it": items, "_dy": days, "_base": cnts})
-            if len(users)
-            else None
-        )
         pdf = one_frame(pdfs)
-        if pdf is not None:
-            merged = pdf.sort_values([ts_col, order_col], kind="mergesort").assign(
-                _us=pdf[user_col].astype("int64"),
-                _it=pdf[ad_col].astype("int64"),
-                _dy=ts_us(pdf[day_col]),
-            )
-            grp = merged.groupby(["_us", "_it", "_dy"], sort=False)
-            if carried is not None:  # splice counts carried across batches
-                merged = merged.merge(carried, on=["_us", "_it", "_dy"], how="left")
-                base = merged["_base"].fillna(0).to_numpy(dtype="int64")
-            else:  # fast path: no prior state for this bucket
-                base = 0
-            rank = base + grp.cumcount().to_numpy() + 1
-            main = merged.iloc[np.flatnonzero(rank <= max_count)]
-            warn = merged.iloc[np.flatnonzero(rank == max_count + 1)]
-            out = pd.DataFrame(
-                {
-                    "user_id": np.concatenate(
-                        [main["_us"].to_numpy(), warn["_us"].to_numpy()]
-                    ),
-                    "item_id": np.concatenate(
-                        [main["_it"].to_numpy(), warn["_it"].to_numpy()]
-                    ),
-                    "ts": np.concatenate(
-                        [main[ts_col].to_numpy(), warn[ts_col].to_numpy()]
-                    ),
-                    "channel": ["main"] * len(main) + ["warning"] * len(warn),
-                }
-            )
-            if len(out):
-                yield out
-            totals = grp.size().reset_index(name="_n")
-            if carried is not None:
-                totals = totals.merge(carried, on=["_us", "_it", "_dy"], how="outer")
-                totals["_n"] = (
-                    totals["_n"].fillna(0) + totals["_base"].fillna(0)
-                ).astype("int64")
-            carried = totals[["_us", "_it", "_dy", "_n"]].rename(
-                columns={"_n": "_base"}
-            )
-        if carried is not None:
-            # per-entry watermark GC (see docstring: output-identical)
-            wm_us = state.getCurrentWatermarkMs() * 1_000
-            if wm_us > 0:
-                live = carried["_dy"] + DAY2_US > wm_us
-                if not live.all():
-                    carried = carried[live]
-            if len(carried):
-                state.update(
-                    (
-                        carried["_us"].tolist(),
-                        carried["_it"].tolist(),
-                        carried["_dy"].tolist(),
-                        carried["_base"].tolist(),
-                    )
-                )
-                # idle-bucket GC: fire one day after the bucket's newest
-                # active day ends
-                state.setTimeoutTimestamp(
-                    (int(carried["_dy"].max()) + DAY2_US) // 1_000
-                )
-            elif state.exists:
-                state.remove()
+        if pdf is None:
+            return
+        users, items, days, cnts = buckets.load_int64(state, 4)
+        carried = pd.DataFrame({"_us": users, "_it": items, "_dy": days, "_base": cnts})
+        merged = pdf.sort_values([ts_col, order_col], kind="mergesort").assign(
+            _us=pdf[user_col].astype("int64"),
+            _it=pdf[ad_col].astype("int64"),
+            _dy=ts_us(pdf[day_col]),
+        )
+        grp = merged.groupby(["_us", "_it", "_dy"], sort=False)
+        if len(carried):  # splice counts carried across batches
+            merged = merged.merge(carried, on=["_us", "_it", "_dy"], how="left")
+            base = merged["_base"].fillna(0).to_numpy(dtype="int64")
+        else:  # fast path: no prior state for this bucket
+            base = 0
+        rank = base + grp.cumcount().to_numpy() + 1
+        main = merged.iloc[np.flatnonzero(rank <= max_count)]
+        warn = merged.iloc[np.flatnonzero(rank == max_count + 1)]
+        out = pd.DataFrame(
+            {
+                "user_id": np.concatenate(
+                    [main["_us"].to_numpy(), warn["_us"].to_numpy()]
+                ),
+                "item_id": np.concatenate(
+                    [main["_it"].to_numpy(), warn["_it"].to_numpy()]
+                ),
+                "ts": np.concatenate(
+                    [main[ts_col].to_numpy(), warn[ts_col].to_numpy()]
+                ),
+                "channel": ["main"] * len(main) + ["warning"] * len(warn),
+            }
+        )
+        if len(out):
+            yield out
+        totals = grp.size().reset_index(name="_n")
+        if len(carried):
+            totals = totals.merge(carried, on=["_us", "_it", "_dy"], how="outer")
+            totals["_n"] = (
+                totals["_n"].fillna(0) + totals["_base"].fillna(0)
+            ).astype("int64")
+        carried = totals[["_us", "_it", "_dy", "_n"]]
+        # per-entry watermark GC (see docstring: output-identical)
+        wm_us = state.getCurrentWatermarkMs() * 1_000
+        if wm_us > 0:
+            carried = carried[carried["_dy"] + DAY2_US > wm_us]
+        # idle-bucket GC: fire one day after the bucket's newest active
+        # day ends
+        buckets.save(
+            state,
+            tuple(carried[c] for c in ("_us", "_it", "_dy", "_n")),
+            (int(carried["_dy"].max()) + DAY2_US) // 1_000 if len(carried) else None,
+        )
 
-    # project to exactly the columns fn touches BEFORE the Python
-    # boundary (guide §4.1): groupBy+applyInPandasWithState is opaque to
-    # column pruning, so without this every input column (incl. the raw
-    # props json) crosses Arrow per row
-    bucketed = df.select(user_col, ad_col, ts_col, day_col, order_col).withColumn(
-        "_bucket",
-        F.pmod(F.col(user_col).cast("long"), F.lit(n_buckets)).cast("long"),
-    )
-    return keyed_process(
-        bucketed,
-        ["_bucket"],
+    return buckets.by_bucket(
+        df,
+        "blacklist_filter",
+        user_col,
+        [ad_col, ts_col, day_col, order_col],
         fn,
         BLACKLIST_OUT,
         _BLACKLIST_STATE,
-        "append",
         GroupStateTimeout.EventTimeTimeout,
     )
 
@@ -453,7 +424,6 @@ def transition_pairs(
     key_col: str,
     ts_cols: list[str],
     item_col: str,
-    n_buckets: int = 64,
 ) -> DataFrame:
     """Per-entity consecutive-item transition extraction: each entity's
     last item carries across micro-batches, so a transition spanning a
@@ -461,14 +431,9 @@ def transition_pairs(
     operators/graph.py:transition_edges' lag window). Self-loops drop,
     matching the batch operator.
 
-    KEYED BY HASH BUCKET with the per-entity last-item held in parallel
-    state arrays and all per-entity logic vectorized (boundary masks +
-    carry merge) — the key-cardinality lesson from the ad-click
-    blacklist redesign (stateful.py keyed-state notes): per-user keying
-    paid one python dispatch per user per batch (~10s at sf1's 15k
-    users); bucketing to ``n_buckets`` groups cut the same work to the
-    vectorized cost. State per bucket: 2 arrays of |users/bucket|
-    longs.
+    Keyed by hash bucket of the entity (buckets.py), all per-entity
+    logic vectorized (boundary masks + carry merge). State per bucket:
+    two parallel arrays (users, last_items) of |users/bucket| longs.
 
     NULL items break the chain exactly like the batch twin's lag():
     no edge into or out of a null, and the null becomes the carried
@@ -479,64 +444,34 @@ def transition_pairs(
     def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        if state.exists:
-            su, sl = (np.asarray(x, dtype="int64") for x in state.get)
-        else:
-            su = sl = np.empty(0, dtype="int64")
         pdf = one_frame(pdfs)
-        if pdf is not None:
-            pdf = pdf.sort_values([key_col, *ts_cols], kind="mergesort")
-            u = pdf[key_col].to_numpy(dtype="int64")
-            it = pdf["_item_s"].to_numpy(dtype="int64")
-            n = len(u)
-            first = np.empty(n, dtype=bool)
-            first[0] = True
-            first[1:] = u[1:] != u[:-1]
-            fi = np.flatnonzero(first)
-            prev_it = np.empty(n, dtype="int64")
-            prev_it[1:] = it[:-1]
-            # first row per user: carried last item, or NULL_SENTINEL for
-            # never-seen users ("no previous row" == "null previous item"
-            # under the lag() contract)
-            pf = np.full(len(fi), NULL_SENTINEL, dtype="int64")
-            if len(su):
-                pos = {int(x): i for i, x in enumerate(su)}
-                cp = np.array([pos.get(int(x), -1) for x in u[fi]], dtype="int64")
-                hc = cp >= 0
-                if hc.any():
-                    pf[hc] = sl[cp[hc]]
-            prev_it[fi] = pf
-            emit = (
-                (prev_it != NULL_SENTINEL)
-                & (it != NULL_SENTINEL)
-                & (prev_it != it)
-            )
-            if emit.any():
-                ei = np.flatnonzero(emit)
-                yield pd.DataFrame({"src": prev_it[ei], "dst": it[ei]})
-            # new last item per entity = its last row in this batch
-            last = np.empty(n, dtype=bool)
-            last[:-1] = u[1:] != u[:-1]
-            last[-1] = True
-            li = np.flatnonzero(last)
-            upd = {int(u[i]): int(it[i]) for i in li}
-            keep = (
-                np.array([int(x) not in upd for x in su], dtype=bool)
-                if len(su)
-                else np.empty(0, dtype=bool)
-            )
-            nu = np.array(sorted(upd), dtype="int64")
-            su = np.concatenate([su[keep], nu])
-            sl = np.concatenate(
-                [sl[keep], np.array([upd[int(x)] for x in nu], dtype="int64")]
-            )
-        state.update(([int(x) for x in su], [int(x) for x in sl]))
+        if pdf is None:
+            return
+        su, sl = buckets.load_int64(state, 2)
+        pdf = pdf.sort_values([key_col, *ts_cols], kind="mergesort")
+        u = pdf[key_col].to_numpy(dtype="int64")
+        it = pdf["_item_s"].to_numpy(dtype="int64")
+        first, pos = buckets.first_rows(u, su)
+        prev_it = np.empty(len(u), dtype="int64")
+        prev_it[1:] = it[:-1]
+        # first row per user: carried last item, or NULL_SENTINEL for
+        # never-seen users ("no previous row" == "null previous item"
+        # under the lag() contract)
+        prev_it[first] = buckets.take(sl, pos, NULL_SENTINEL)
+        emit = (prev_it != NULL_SENTINEL) & (it != NULL_SENTINEL) & (prev_it != it)
+        if emit.any():
+            yield pd.DataFrame({"src": prev_it[emit], "dst": it[emit]})
+        buckets.save(state, buckets.write_back((su, sl), (u, it)))
 
-    bucketed = df.withColumn(
-        "_item_s", F.coalesce(F.col(item_col).cast("long"), F.lit(NULL_SENTINEL))
-    ).withColumn("_bucket", F.pmod(F.col(key_col), F.lit(n_buckets)).cast("long"))
-    return bucketed.groupBy("_bucket").applyInPandasWithState(
-        fn, TRANSITION_OUT, _TRANSITION_STATE, "append", GroupStateTimeout.NoTimeout
+    item = F.coalesce(F.col(item_col).cast("long"), F.lit(NULL_SENTINEL))
+    return buckets.by_bucket(
+        df,
+        "transition_pairs",
+        key_col,
+        [*ts_cols, item.alias("_item_s")],
+        fn,
+        TRANSITION_OUT,
+        _TRANSITION_STATE,
     )
 
 
@@ -663,7 +598,6 @@ def scd2_closed_intervals(
     key_col: str,
     ts_cols: list[str],
     item_col: str,
-    n_buckets: int = 64,
 ) -> DataFrame:
     """Live SCD Type-2 builder: per entity, hold the OPEN interval
     (current item, its start, a version counter) in state; when the
@@ -675,15 +609,10 @@ def scd2_closed_intervals(
     close arrives; a serving layer reads it from the state store /
     latest snapshot instead).
 
-    KEYED BY HASH BUCKET, not by entity — the key-cardinality lesson
-    the ad-click blacklist redesign measured (stateful.py:256 notes:
-    17k near-singleton keys = 51s of pure python dispatch): at sf1 the
-    per-user version of this op spent 15.1s mostly invoking python 15k
-    times per batch. Bucketing to ``n_buckets`` groups with the
-    per-user state held as parallel arrays and ALL per-user logic
+    Keyed by hash bucket of the entity (buckets.py), ALL per-user logic
     vectorized (boundary masks + carry merge + cumcount, zero per-row
-    python) cut it to ~3s. State per bucket: 4 arrays of
-    |users/bucket| longs.
+    python). State per bucket: five parallel arrays (users, items,
+    from_us, vers, lasts) of |users/bucket| longs.
 
     Input must arrive time-ordered per entity across batches (same
     contract as transition_pairs). NULL items follow the oracle's exact
@@ -698,127 +627,89 @@ def scd2_closed_intervals(
     def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        if state.exists:
-            su, si, sf_, sv, sla = (np.asarray(x, dtype="int64") for x in state.get)
-        else:
-            su = si = sf_ = sv = sla = np.empty(0, dtype="int64")
         pdf = one_frame(pdfs)
-        if pdf is not None:
-            pdf = pdf.sort_values([key_col, *ts_cols], kind="mergesort")
-            u = pdf[key_col].to_numpy(dtype="int64")
-            t = ts_us(pdf[ts_cols[0]]).to_numpy()
-            it = pdf["_item_s"].to_numpy(dtype="int64")
-            n = len(u)
-            first = np.empty(n, dtype=bool)
-            first[0] = True
-            first[1:] = u[1:] != u[:-1]
-            # carried open interval per first-row user (position in state,
-            # -1 = no carry)
-            carry_pos = np.full(n, -1, dtype="int64")
-            if len(su):
-                pos = {int(x): i for i, x in enumerate(su)}
-                fi = np.flatnonzero(first)
-                carry_pos[fi] = [pos.get(int(x), -1) for x in u[fi]]
-            has_carry = carry_pos >= 0
-            prev_it = np.empty(n, dtype="int64")
-            prev_it[1:] = it[:-1]
-            fi0 = np.flatnonzero(first)
-            hc = has_carry[fi0]
-            # first row per user: previous ROW's item from state, or
-            # NULL_SENTINEL for never-seen users (lag() returns NULL)
-            prev_first = np.full(len(fi0), NULL_SENTINEL, dtype="int64")
-            if hc.any():
-                prev_first[hc] = sla[carry_pos[fi0][hc]]
-            prev_it[fi0] = prev_first
-            # oracle ch: prev IS NULL OR prev <> item (three-valued)
-            change = (prev_it == NULL_SENTINEL) | (
-                (it != NULL_SENTINEL) & (it != prev_it)
+        if pdf is None:
+            return
+        su, si, sf_, sv, sla = buckets.load_int64(state, 5)
+        pdf = pdf.sort_values([key_col, *ts_cols], kind="mergesort")
+        u = pdf[key_col].to_numpy(dtype="int64")
+        t = ts_us(pdf[ts_cols[0]]).to_numpy()
+        it = pdf["_item_s"].to_numpy(dtype="int64")
+        first, pos = buckets.first_rows(u, su)
+        has_carry = pos >= 0
+        prev_it = np.empty(len(u), dtype="int64")
+        prev_it[1:] = it[:-1]
+        # first row per user: previous ROW's item from state, or
+        # NULL_SENTINEL for never-seen users (lag() returns NULL)
+        prev_it[first] = buckets.take(sla, pos, NULL_SENTINEL)
+        # oracle ch: prev IS NULL OR prev <> item (three-valued)
+        change = (prev_it == NULL_SENTINEL) | (
+            (it != NULL_SENTINEL) & (it != prev_it)
+        )
+        # start rows of this batch = change rows; prepend the carried
+        # interval as a synthetic start for users that have one
+        ch = np.flatnonzero(change)
+        cu = u[first][has_carry]
+        cpos = pos[has_carry]
+        s_u = np.concatenate([cu, u[ch]])
+        s_t = np.concatenate([sf_[cpos], t[ch]])
+        s_i = np.concatenate([si[cpos], it[ch]])
+        s_base = np.concatenate(
+            [sv[cpos], np.ones(len(ch), dtype="int64")]
+        )
+        order0 = np.concatenate(
+            [np.zeros(len(cu), dtype="int64"), np.ones(len(ch), dtype="int64")]
+        )
+        o = np.lexsort((order0, s_t, s_u))
+        s_u, s_t, s_i, s_base = s_u[o], s_t[o], s_i[o], s_base[o]
+        # m > 0 always: every user with rows has either a carried
+        # synthetic start or a change first row (prev IS NULL)
+        m = len(s_u)
+        sfirst = np.empty(m, dtype=bool)
+        sfirst[0] = True
+        sfirst[1:] = s_u[1:] != s_u[:-1]
+        gstart = np.flatnonzero(sfirst)
+        cum = np.arange(m, dtype="int64") - np.repeat(gstart, np.diff(np.append(gstart, m)))
+        base = np.repeat(s_base[gstart], np.diff(np.append(gstart, m)))
+        version = base + cum
+        # closed = every start whose successor is the same user
+        closed = np.empty(m, dtype=bool)
+        closed[:-1] = s_u[1:] == s_u[:-1]
+        closed[-1] = False
+        if closed.any():
+            ci = np.flatnonzero(closed)
+            iv = s_i[ci]
+            yield pd.DataFrame(
+                {
+                    "user_id": s_u[ci],
+                    "item_id": pd.Series(iv, dtype="Int64").mask(
+                        pd.Series(iv == NULL_SENTINEL)
+                    ),
+                    "effective_from": pd.to_datetime(s_t[ci], unit="us"),
+                    "effective_to": pd.to_datetime(s_t[ci + 1], unit="us"),
+                    "version": version[ci],
+                }
             )
-            # start rows of this batch = change rows; prepend the carried
-            # interval as a synthetic start for users that have one
-            ch = np.flatnonzero(change)
-            fi = np.flatnonzero(first)
-            cu = u[fi][has_carry[fi]]
-            cpos = carry_pos[fi][has_carry[fi]]
-            s_u = np.concatenate([cu, u[ch]])
-            s_t = np.concatenate([sf_[cpos], t[ch]])
-            s_i = np.concatenate([si[cpos], it[ch]])
-            s_base = np.concatenate(
-                [sv[cpos], np.ones(len(ch), dtype="int64")]
-            )
-            order0 = np.concatenate(
-                [np.zeros(len(cu), dtype="int64"), np.ones(len(ch), dtype="int64")]
-            )
-            o = np.lexsort((order0, s_t, s_u))
-            s_u, s_t, s_i, s_base = s_u[o], s_t[o], s_i[o], s_base[o]
-            # m > 0 always: every user with rows has either a carried
-            # synthetic start or a change first row (prev IS NULL)
-            m = len(s_u)
-            sfirst = np.empty(m, dtype=bool)
-            sfirst[0] = True
-            sfirst[1:] = s_u[1:] != s_u[:-1]
-            gstart = np.flatnonzero(sfirst)
-            cum = np.arange(m, dtype="int64") - np.repeat(gstart, np.diff(np.append(gstart, m)))
-            base = np.repeat(s_base[gstart], np.diff(np.append(gstart, m)))
-            version = base + cum
-            # closed = every start whose successor is the same user
-            closed = np.empty(m, dtype=bool)
-            closed[:-1] = s_u[1:] == s_u[:-1]
-            closed[-1] = False
-            if closed.any():
-                ci = np.flatnonzero(closed)
-                iv = s_i[ci]
-                yield pd.DataFrame(
-                    {
-                        "user_id": s_u[ci],
-                        "item_id": pd.Series(iv, dtype="Int64").mask(
-                            pd.Series(iv == NULL_SENTINEL)
-                        ),
-                        "effective_from": pd.to_datetime(s_t[ci], unit="us"),
-                        "effective_to": pd.to_datetime(s_t[ci + 1], unit="us"),
-                        "version": version[ci],
-                    }
-                )
-            # new open interval per user in this batch = its LAST start;
-            # the carried last-ROW item comes from the raw batch (it may
-            # be a null or a repeat that is not a start row)
-            last = np.empty(m, dtype=bool)
-            last[:-1] = s_u[1:] != s_u[:-1]
-            last[-1] = True
-            li = np.flatnonzero(last)
-            upd = {
-                int(s_u[i]): (int(s_i[i]), int(s_t[i]), int(version[i]))
-                for i in li
-            }
-            lastr = np.empty(n, dtype=bool)
-            lastr[:-1] = u[1:] != u[:-1]
-            lastr[-1] = True
-            last_item = {int(u[i]): int(it[i]) for i in np.flatnonzero(lastr)}
-            keep = np.array(
-                [int(x) not in upd for x in su], dtype=bool
-            ) if len(su) else np.empty(0, dtype=bool)
-            # every batch user is in upd (synthetic or change start), so
-            # kept rows are exactly the users untouched this batch
-            nu = np.array(sorted(upd), dtype="int64")
-            sla_k = sla[keep]
-            su = np.concatenate([su[keep], nu])
-            si = np.concatenate([si[keep], np.array([upd[int(x)][0] for x in nu], dtype="int64")])
-            sf_ = np.concatenate([sf_[keep], np.array([upd[int(x)][1] for x in nu], dtype="int64")])
-            sv = np.concatenate([sv[keep], np.array([upd[int(x)][2] for x in nu], dtype="int64")])
-            sla = np.concatenate(
-                [sla_k, np.array([last_item[int(x)] for x in nu], dtype="int64")]
-            )
-        state.update(
-            ([int(x) for x in su], [int(x) for x in si],
-             [int(x) for x in sf_], [int(x) for x in sv],
-             [int(x) for x in sla])
+        # new open interval per user = its LAST start; the carried
+        # last-ROW item comes from the raw batch (it may be a null or a
+        # repeat that is not a start row). Every batch user has a start
+        # (synthetic or change), so both write-backs keep the same users
+        # in the same order.
+        _, sla = buckets.write_back((su, sla), (u, it))
+        buckets.save(
+            state,
+            (*buckets.write_back((su, si, sf_, sv), (s_u, s_i, s_t, version)), sla),
         )
 
-    bucketed = df.withColumn(
-        "_item_s", F.coalesce(F.col(item_col).cast("long"), F.lit(NULL_SENTINEL))
-    ).withColumn("_bucket", F.pmod(F.col(key_col), F.lit(n_buckets)).cast("long"))
-    return bucketed.groupBy("_bucket").applyInPandasWithState(
-        fn, SCD2_OUT, _SCD2_STATE, "append", GroupStateTimeout.NoTimeout
+    item = F.coalesce(F.col(item_col).cast("long"), F.lit(NULL_SENTINEL))
+    return buckets.by_bucket(
+        df,
+        "scd2_closed_intervals",
+        key_col,
+        [*ts_cols, item.alias("_item_s")],
+        fn,
+        SCD2_OUT,
+        _SCD2_STATE,
     )
 
 
@@ -928,7 +819,6 @@ def clamped_ledger(
     key_col: str,
     ts_cols: list[str],
     delta_col: str,
-    n_buckets: int = 64,
 ) -> DataFrame:
     """Live floor-at-zero running balance: the drawdown identity
     x_i = S_i - least(min_{j<=i} S_j, 0) carries across micro-batches
@@ -936,118 +826,87 @@ def clamped_ledger(
     running minimum M) — balance never needs the history, just the
     carried (S, M). The streaming twin of value_clamped_ledger.
 
-    Bucketed keying + vectorized per-entity segmented cumsum (prefix
-    sums restart per entity via a repeat-subtract on segment starts;
-    running mins via np.minimum.accumulate segment-seeded), per the
-    measured key-cardinality rule (SCALING.md r8)."""
+    Keyed by hash bucket of the entity (buckets.py), with a vectorized
+    per-entity segmented cumsum (prefix sums restart per entity via a
+    repeat-subtract on segment starts; running mins via a
+    segment-seeded groupby cummin). State per bucket: four parallel
+    arrays (users, run_s, run_min, seen) of |users/bucket| longs."""
 
     def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        if state.exists:
-            su, ss, sm, sn = (np.asarray(x, dtype="int64") for x in state.get)
-        else:
-            su = ss = sm = sn = np.empty(0, dtype="int64")
         pdf = one_frame(pdfs)
-        if pdf is not None:
-            pdf = pdf.sort_values([key_col, *ts_cols], kind="mergesort")
-            u = pdf[key_col].to_numpy(dtype="int64")
-            nul = pdf["_dnull"].to_numpy(dtype=bool)
-            d = pdf["_dfill"].to_numpy(dtype="int64")
-            n = len(u)
-            first = np.empty(n, dtype=bool)
-            first[0] = True
-            first[1:] = u[1:] != u[:-1]
-            fi = np.flatnonzero(first)
-            seg = np.repeat(np.arange(len(fi)), np.diff(np.append(fi, n)))
-            # carried (S, M, seen) per segment; new users start (0, 0, 0)
-            carry_s = np.zeros(len(fi), dtype="int64")
-            carry_m = np.zeros(len(fi), dtype="int64")
-            carry_n = np.zeros(len(fi), dtype="int64")
-            if len(su):
-                pos = {int(x): i for i, x in enumerate(su)}
-                cp = np.array([pos.get(int(x), -1) for x in u[fi]], dtype="int64")
-                hc = cp >= 0
-                if hc.any():
-                    carry_s[hc] = ss[cp[hc]]
-                    carry_m[hc] = sm[cp[hc]]
-                    carry_n[hc] = sn[cp[hc]]
-            # segmented prefix sums: global cumsum minus the value just
-            # before each segment start, plus the segment's carried S
-            cs = np.cumsum(d)
-            base = np.concatenate(([0], cs))[fi]
-            S = cs - base[seg] + carry_s[seg]
-            # segmented running min seeded by carried M: np.minimum
-            # accumulate per segment via the "reset at starts" trick
-            Mseed = np.minimum(carry_m, S[fi])
-            work = S.copy()
-            work[fi] = Mseed
-            # segmented running min via pandas' C-level groupby cummin —
-            # no value-band offsets, so neither |S| nor the number of
-            # segments per batch has an overflow envelope (a band trick
-            # here would cap segments at ~2^20 per bucket-batch and |S|
-            # at the band width)
-            M = (
-                pd.Series(work).groupby(seg).cummin().to_numpy(dtype="int64")
-            )
-            bal = S - np.minimum(M, 0)
-            # SQL null semantics: delta NULL on null rows; balance NULL
-            # until the user's first non-null delta (sum OVER is NULL on
-            # an all-null prefix). Running count of non-nulls per segment
-            # (carried) decides definedness.
-            nn = (~nul).astype("int64")
-            cnn = np.cumsum(nn)
-            base_nn = np.concatenate(([0], cnn))[fi]
-            seen_cnt = cnn - base_nn[seg] + carry_n[seg]
-            defined = seen_cnt > 0
-            yield pd.DataFrame(
-                {
-                    "user_id": u,
-                    "ts": pdf[ts_cols[0]].to_numpy(),
-                    "event_id": pdf[ts_cols[1]].to_numpy(dtype="int64"),
-                    "delta": np.where(nul, np.nan, np.round(d / 100.0, 2)),
-                    "balance": np.where(
-                        defined, np.round(bal / 100.0, 2), np.nan
-                    ),
-                }
-            )
-            # new state per entity = its last (S, M, seen)
-            last = np.empty(n, dtype=bool)
-            last[:-1] = u[1:] != u[:-1]
-            last[-1] = True
-            li = np.flatnonzero(last)
-            upd = {
-                int(u[i]): (int(S[i]), int(M[i]), int(seen_cnt[i] > 0))
-                for i in li
+        if pdf is None:
+            return
+        su, ss, sm, sn = buckets.load_int64(state, 4)
+        pdf = pdf.sort_values([key_col, *ts_cols], kind="mergesort")
+        u = pdf[key_col].to_numpy(dtype="int64")
+        nul = pdf["_dnull"].to_numpy(dtype=bool)
+        d = pdf["_dfill"].to_numpy(dtype="int64")
+        n = len(u)
+        fi, pos = buckets.first_rows(u, su)
+        seg = np.repeat(np.arange(len(fi)), np.diff(np.append(fi, n)))
+        # carried (S, M, seen) per segment; new users start (0, 0, 0)
+        carry_s, carry_m, carry_n = (buckets.take(c, pos, 0) for c in (ss, sm, sn))
+        # segmented prefix sums: global cumsum minus the value just
+        # before each segment start, plus the segment's carried S
+        cs = np.cumsum(d)
+        base = np.concatenate(([0], cs))[fi]
+        S = cs - base[seg] + carry_s[seg]
+        # segmented running min seeded by carried M: np.minimum
+        # accumulate per segment via the "reset at starts" trick
+        Mseed = np.minimum(carry_m, S[fi])
+        work = S.copy()
+        work[fi] = Mseed
+        # segmented running min via pandas' C-level groupby cummin —
+        # no value-band offsets, so neither |S| nor the number of
+        # segments per batch has an overflow envelope (a band trick
+        # here would cap segments at ~2^20 per bucket-batch and |S|
+        # at the band width)
+        M = (
+            pd.Series(work).groupby(seg).cummin().to_numpy(dtype="int64")
+        )
+        bal = S - np.minimum(M, 0)
+        # SQL null semantics: delta NULL on null rows; balance NULL
+        # until the user's first non-null delta (sum OVER is NULL on
+        # an all-null prefix). Running count of non-nulls per segment
+        # (carried) decides definedness.
+        nn = (~nul).astype("int64")
+        cnn = np.cumsum(nn)
+        base_nn = np.concatenate(([0], cnn))[fi]
+        seen_cnt = cnn - base_nn[seg] + carry_n[seg]
+        defined = seen_cnt > 0
+        yield pd.DataFrame(
+            {
+                "user_id": u,
+                "ts": pdf[ts_cols[0]].to_numpy(),
+                "event_id": pdf[ts_cols[1]].to_numpy(dtype="int64"),
+                "delta": np.where(nul, np.nan, np.round(d / 100.0, 2)),
+                "balance": np.where(
+                    defined, np.round(bal / 100.0, 2), np.nan
+                ),
             }
-            keep = (
-                np.array([int(x) not in upd for x in su], dtype=bool)
-                if len(su)
-                else np.empty(0, dtype=bool)
-            )
-            nu = np.array(sorted(upd), dtype="int64")
-            su = np.concatenate([su[keep], nu])
-            ss = np.concatenate(
-                [ss[keep], np.array([upd[int(x)][0] for x in nu], dtype="int64")]
-            )
-            sm = np.concatenate(
-                [sm[keep], np.array([upd[int(x)][1] for x in nu], dtype="int64")]
-            )
-            sn = np.concatenate(
-                [sn[keep], np.array([upd[int(x)][2] for x in nu], dtype="int64")]
-            )
-        state.update(
-            ([int(x) for x in su], [int(x) for x in ss],
-             [int(x) for x in sm], [int(x) for x in sn])
+        )
+        # new state per entity = its last (S, M, seen)
+        buckets.save(
+            state,
+            buckets.write_back(
+                (su, ss, sm, sn), (u, S, M, defined.astype("int64"))
+            ),
         )
 
-    bucketed = (
-        df.withColumn("_dnull", F.col(delta_col).isNull())
-        .withColumn("_dfill", F.coalesce(F.col(delta_col), F.lit(0)).cast("long"))
-        .withColumn("_bucket", F.pmod(F.col(key_col), F.lit(n_buckets)).cast("long"))
-    )
-    return bucketed.groupBy("_bucket").applyInPandasWithState(
-        fn, LEDGER_OUT, _LEDGER_STATE, "append", GroupStateTimeout.NoTimeout
+    return buckets.by_bucket(
+        df,
+        "clamped_ledger",
+        key_col,
+        [
+            *ts_cols,
+            F.col(delta_col).isNull().alias("_dnull"),
+            F.coalesce(F.col(delta_col), F.lit(0)).cast("long").alias("_dfill"),
+        ],
+        fn,
+        LEDGER_OUT,
+        _LEDGER_STATE,
     )
 
 
@@ -1132,18 +991,15 @@ _KMV_FOLD_STATE = StructType(
     ]
 )
 
-#: shared closed-day emission rule for the bucketed day-folds below —
-#: identical to the per-key EventTimeTimeout contract it replaces:
+#: shared closed-day emission rule for the shard-keyed day-folds below:
 #: Spark fires event-time timers on `timeoutTimestamp < watermark`
-#: (both ms-floored), and the per-key folds set theirs at
-#: day_end_ms - 1, so a day's cell emits iff day_end_ms - 1 < wm_ms
+#: (both ms-floored), so a day's cell emits iff day_end_ms - 1 < wm_ms
 #: iff max_ts >= day_end — the oracles' `day + INTERVAL 1 DAY <=
-#: max(ts)` predicate exactly. Bucketed folds apply the SAME predicate
-#: directly against state.getCurrentWatermarkMs() on every invocation
-#: (data or timeout), so a day emits in the same micro-batch its
-#: per-key timer would have fired in: timers fire for every timed-out
-#: key of a batch regardless of which keys got data, and both forms
-#: see the same batch watermark.
+#: max(ts)` predicate exactly. Each fold checks that predicate per
+#: entry against state.getCurrentWatermarkMs() on every invocation
+#: (data or timeout) and arms its bucket timer at the min open
+#: day_end_ms - 1 (buckets.save), so a bucket without data emits in
+#: the first no-data batch whose watermark passes that day's end.
 _DAY_US = 86_400_000_000
 
 
@@ -1159,14 +1015,8 @@ def kmv_day_fold(
     reference's UV bitmap/state pattern (UniqueVisitorWithBloom.scala:76-120)
     keyed by window, re-expressed as a FIXED-STATE k-min fold.
 
-    KEYED BY SHARD (r20, second pass) — the key-cardinality lesson the
-    blacklist/CEP operators learned this round applies here too:
-    applyInPandasWithState pays a per-key Python dispatch per
-    micro-batch, and keying by (day, shard) is days x shards
-    near-singleton dispatches (480 at sf0.1 — bounded, but 30x the
-    shard count) where keying by shard alone is |shards| dispatches of
-    the same vectorized work. The shard is already a hash of the value
-    space, so the state-partition spread is unchanged. State per
+    Keyed by the upstream hash shard alone (buckets.py): keying by
+    (day, shard) made 480 near-singleton dispatches at sf0.1. State per
     bucket: two parallel arrays (days, kmins) holding, for each OPEN
     day, the k smallest DISTINCT hashes seen so far — a KMV insert is
     duplicate-idempotent, so no dedup stage is needed upstream and
@@ -1178,18 +1028,14 @@ def kmv_day_fold(
     cell emits once, in the first micro-batch whose watermark passes
     the day end — checked per entry against getCurrentWatermarkMs()
     on every invocation, with one EventTimeTimeout per bucket at the
-    MIN open day end (clamped > wm; the clamp can only engage when a
-    kept day's end equals the watermark, where the per-key timer would
-    not have fired either) so buckets without data still emit in the
+    MIN open day end so buckets without data still emit in the
     trailing no-data batch. After a day closes, any further row of it
     is < watermark and dropped by the late filter — a closed cell can
     never reopen."""
     import numpy as np
 
     def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        days, kmins = state.get if state.exists else ([], [])
-        d = np.asarray(days, dtype="int64")
-        h = np.asarray(kmins, dtype="int64")
+        d, h = buckets.load_int64(state, 2)
         if not state.hasTimedOut:
             pdf = one_frame(pdfs)
             if pdf is not None:
@@ -1206,8 +1052,7 @@ def kmv_day_fold(
                 day_start[1:] = d[1:] != d[:-1]
                 rank = pos - np.maximum.accumulate(np.where(day_start, pos, 0))
                 d, h = d[rank < k], h[rank < k]
-        wm_ms = state.getCurrentWatermarkMs()
-        closed = _day_end_ms(d) - 1 < wm_ms
+        closed = _day_end_ms(d) - 1 < state.getCurrentWatermarkMs()
         if closed.any():
             cd, ch = d[closed], h[closed]
             starts = np.flatnonzero(
@@ -1224,16 +1069,10 @@ def kmv_day_fold(
                 }
             )
             d, h = d[~closed], h[~closed]
-        if len(d):
-            state.update((d.tolist(), h.tolist()))
-            state.setTimeoutTimestamp(
-                max(_day_end_ms(int(d.min())) - 1, wm_ms + 1)
-            )
-        elif state.exists:
-            state.remove()
+        buckets.save(state, (d, h), _day_end_ms(d) - 1)
 
-    return df.groupBy(shard_col).applyInPandasWithState(
-        fn, KMV_FOLD_OUT, _KMV_FOLD_STATE, "append", GroupStateTimeout.EventTimeTimeout
+    return buckets.by_shard(
+        df, "kmv_day_fold", shard_col, fn, KMV_FOLD_OUT, _KMV_FOLD_STATE
     )
 
 
@@ -1266,11 +1105,10 @@ def quantile_day_fold(
     (UniqueVisitorWithBloom.scala:76-120) at the quantile sketch's
     footprint.
 
-    KEYED BY SHARD (r20, second pass): keying by (day, event_type,
-    shard) was days x types x shards near-singleton Python dispatches
-    per micro-batch (2400 at sf0.1 — the largest dispatch grid in the
-    engine) for work that vectorizes identically per shard. State per
-    bucket is the same sparse cells, flattened into four parallel
+    Keyed by the upstream hash shard alone (buckets.py): keying by
+    (day, event_type, shard) made 2400 near-singleton dispatches at
+    sf0.1. State per bucket is the sparse cells, flattened into four
+    parallel
     entry-tagged arrays (days, types, idxs, counts) — one element per
     OPEN (day, type, idx) cell, each day bounded by 32 * octaves
     (~512) cells however many EVENTS it has: counts grow but cells do
@@ -1293,9 +1131,7 @@ def quantile_day_fold(
     import numpy as np
 
     def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        days, types, idxs, counts = (
-            state.get if state.exists else ([], [], [], [])
-        )
+        days, types, idxs, counts = buckets.load(state, 4)
         cells = pd.DataFrame(
             {
                 "_d": np.asarray(days, dtype="int64"),
@@ -1320,9 +1156,8 @@ def quantile_day_fold(
                     .groupby(["_d", "_t", "_i"], sort=True, as_index=False)["_c"]
                     .sum()
                 )
-        wm_ms = state.getCurrentWatermarkMs()
-        closed = (_day_end_ms(cells["_d"].to_numpy()) - 1 < wm_ms) if len(cells) else None
-        if closed is not None and closed.any():
+        closed = _day_end_ms(cells["_d"].to_numpy()) - 1 < state.getCurrentWatermarkMs()
+        if closed.any():
             out_d, out_t, out_i, out_c = [], [], [], []
             # state/fold output is (day, type, idx)-sorted, so each
             # (day, type) group's idxs come out ascending — the same
@@ -1342,27 +1177,19 @@ def quantile_day_fold(
                 }
             )
             cells = cells[~closed]
-        if len(cells):
-            state.update(
-                (
-                    cells["_d"].tolist(),
-                    cells["_t"].tolist(),
-                    cells["_i"].tolist(),
-                    cells["_c"].tolist(),
-                )
-            )
-            state.setTimeoutTimestamp(
-                max(_day_end_ms(int(cells["_d"].min())) - 1, wm_ms + 1)
-            )
-        elif state.exists:
-            state.remove()
+        buckets.save(
+            state,
+            tuple(cells[c] for c in ("_d", "_t", "_i", "_c")),
+            _day_end_ms(cells["_d"].to_numpy()) - 1,
+        )
 
-    return df.groupBy(shard_col).applyInPandasWithState(
+    return buckets.by_shard(
+        df,
+        "quantile_day_fold",
+        shard_col,
         fn,
         QUANTILE_FOLD_OUT,
         _QUANTILE_FOLD_STATE,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
     )
 
 
@@ -1394,8 +1221,8 @@ def hll_day_fold(
     UV state pattern, UniqueVisitorWithBloom.scala:76-120, at HLL's 64-long
     footprint).
 
-    KEYED BY SHARD (r20, second pass — the kmv_day_fold
-    dispatch-cardinality note): state per bucket is one m-long register
+    Keyed by the upstream hash shard (buckets.py): state per bucket is
+    one m-long register
     vector per OPEN day, flattened into (days, regs) parallel arrays
     with stride m. Each batch folds in via element-wise max
     (np.maximum.at on (day-row, reg) pairs) — max is idempotent/
@@ -1413,9 +1240,8 @@ def hll_day_fold(
     import numpy as np
 
     def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        days, flat = state.get if state.exists else ([], [])
-        d = np.asarray(days, dtype="int64")
-        regs = np.asarray(flat, dtype="int64").reshape(len(d), m)
+        d, flat = buckets.load_int64(state, 2)
+        regs = flat.reshape(len(d), m)
         if not state.hasTimedOut:
             pdf = one_frame(pdfs)
             if pdf is not None:
@@ -1433,8 +1259,7 @@ def hll_day_fold(
                     pdf[rank_col].to_numpy(dtype="int64"),
                 )
                 d, regs = ud, mat
-        wm_ms = state.getCurrentWatermarkMs()
-        closed = _day_end_ms(d) - 1 < wm_ms
+        closed = _day_end_ms(d) - 1 < state.getCurrentWatermarkMs()
         if closed.any():
             yield pd.DataFrame(
                 {
@@ -1444,14 +1269,8 @@ def hll_day_fold(
                 }
             )
             d, regs = d[~closed], regs[~closed]
-        if len(d):
-            state.update((d.tolist(), regs.reshape(-1).tolist()))
-            state.setTimeoutTimestamp(
-                max(_day_end_ms(int(d.min())) - 1, wm_ms + 1)
-            )
-        elif state.exists:
-            state.remove()
+        buckets.save(state, (d, regs.reshape(-1)), _day_end_ms(d) - 1)
 
-    return df.groupBy(shard_col).applyInPandasWithState(
-        fn, HLL_FOLD_OUT, _HLL_FOLD_STATE, "append", GroupStateTimeout.EventTimeTimeout
+    return buckets.by_shard(
+        df, "hll_day_fold", shard_col, fn, HLL_FOLD_OUT, _HLL_FOLD_STATE
     )

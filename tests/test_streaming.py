@@ -826,27 +826,28 @@ def test_blacklist_filter_daily_reset_and_side_output(spark, tmp_path):
 
 
 def test_blacklist_filter_shared_bucket_isolates_users(spark, tmp_path):
-    """r20 bucket keying: with n_buckets=1 EVERY user lands in one state
-    bucket — per-user counters must still rank independently (within
-    batch and carried across batches), byte-identical to per-user
-    keying. Pins the vectorized 3-key cumcount + the shared-state carry
-    merge."""
+    """Bucket keying: users 1, 65 and 129 land in one state bucket —
+    per-user counters must still rank independently (within batch and
+    carried across batches), byte-identical to per-user keying. Pins
+    the vectorized 3-key cumcount + the shared-state carry merge."""
+    from flink_tutorial_spark.streaming.buckets import N_BUCKETS
     from flink_tutorial_spark.streaming.stateful import blacklist_filter
 
+    assert len({u % N_BUCKETS for u in (1, 65, 129)}) == 1
     src = str(tmp_path / "src")
     write_batches(
         src,
         [
             [
                 _row(10, user=1, value=5.0),
-                _row(11, user=2, value=5.0),
+                _row(11, user=65, value=5.0),
                 _row(20, user=1, value=5.0),  # u1 crossing -> warning
-                _row(21, user=2, value=5.0),  # u2 crossing -> warning
-                _row(30, user=3, value=5.0),
+                _row(21, user=65, value=5.0),  # u65 crossing -> warning
+                _row(30, user=129, value=5.0),
             ],
             [
                 _row(40, user=1, value=5.0),  # carried -> suppressed
-                _row(41, user=3, value=5.0),  # u3 crossing via carry
+                _row(41, user=129, value=5.0),  # u129 crossing via carry
             ],
         ],
     )
@@ -857,9 +858,7 @@ def test_blacklist_filter_shared_bucket_isolates_users(spark, tmp_path):
             .withColumn("day", F.date_trunc("day", F.col("ts")))
             .withWatermark("ts", "0 seconds")
         )
-        return blacklist_filter(
-            clicks, "user", "ad", "ts", "day", 1, order_col="value", n_buckets=1
-        )
+        return blacklist_filter(clicks, "user", "ad", "ts", "day", 1, order_col="value")
 
     rows = run_stream(spark, src, q, "append").collect()
     base = int(T0.timestamp())
@@ -867,11 +866,11 @@ def test_blacklist_filter_shared_bucket_isolates_users(spark, tmp_path):
     assert got == sorted(
         [
             ("main", 1, 10),
-            ("main", 2, 11),
+            ("main", 65, 11),
             ("warning", 1, 20),
-            ("warning", 2, 21),
-            ("main", 3, 30),
-            ("warning", 3, 41),
+            ("warning", 65, 21),
+            ("main", 129, 30),
+            ("warning", 129, 41),
         ]
     )
 
@@ -1385,11 +1384,18 @@ def test_crash_recovery_ledger_state(spark, tmp_path):
     assert bal[(2, 1)] is None and bal[(2, 4)] == 1.0
 
 
-def test_null_semantics_randomized_vs_sql_oracle(spark, tmp_path):
+@pytest.mark.parametrize(
+    "users",
+    [(1, 2, 3, 4, 5, 6), (1, 65, 129, 2, 66, 130)],
+    ids=["one_user_per_bucket", "shared_buckets"],
+)
+def test_null_semantics_randomized_vs_sql_oracle(spark, tmp_path, users):
     """Randomized dirty-data check: transitions / SCD2 / ledger over a
     seeded random event stream with ~25% null items/deltas, split into
     3 micro-batches, must equal the exact SQL three-valued-logic
-    oracles computed by DuckDB over the same rows."""
+    oracles computed by DuckDB over the same rows. The shared_buckets
+    draw puts three users in each of two state buckets, so the carry
+    codec must keep their entries apart."""
     import random
 
     import duckdb
@@ -1397,7 +1403,7 @@ def test_null_semantics_randomized_vs_sql_oracle(spark, tmp_path):
     rng = random.Random(7)
     rows = []
     for i in range(240):
-        user = rng.randint(1, 6)
+        user = users[rng.randint(1, 6) - 1]
         item = rng.choice([None, 1, 2, 3])
         rows.append((T0 + pd.Timedelta(seconds=i), f"u{user}", user,
                      "x", float(item) if item is not None else None))
@@ -2223,6 +2229,199 @@ def test_quantile_fold_shared_bucket_emits_per_day_type(spark, tmp_path):
         (day0, "y", 0, [210], [1]),  # same bucket, own (day, type) row
         (day1, "x", 0, [210], [1]),  # day 1 kept its own counts
     ]
+
+
+def _ms_row(ms, user, kind="x", value=1.0):
+    """An event row at T0 + `ms` milliseconds."""
+    return (T0 + pd.Timedelta(milliseconds=ms), "a", user, kind, value)
+
+
+_DAY_MS = 86_400_000
+
+
+def test_kmv_fold_emits_day_at_stalled_watermark(spark, tmp_path):
+    """Day 0 must emit when the watermark stops exactly at its end:
+    batch 0 ends day 0 at 23:59:59.999, batch 1 is one row at exactly
+    00:00:00.000 of day 1, then no more data arrives. Batch 1 runs at
+    watermark day_end - 1 ms (day 0 still open); the trailing no-data
+    batch runs at watermark day_end, where day_end_ms - 1 < wm_ms closes
+    day 0, so the bucket timer armed in batch 1 must fire there."""
+    from flink_tutorial_spark.streaming.stateful import kmv_day_fold
+
+    def build(s):
+        st = (
+            s.selectExpr("ts", "user AS hv")
+            .withColumn("day", F.date_trunc("day", "ts"))
+            .withColumn("shard", F.pmod("hv", F.lit(1)))
+            .withWatermark("ts", "0 seconds")
+        )
+        return kmv_day_fold(st, "day", "shard", "hv", 2)
+
+    src = str(tmp_path / "src")
+    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+    _write_one_batch(
+        src, [_ms_row(1_000, 5), _ms_row(2_000, 9), _ms_row(_DAY_MS - 1, 3)], 0
+    )
+    _write_one_batch(src, [_ms_row(_DAY_MS, 4)], 1)
+    _run_ckpt(spark, src, build, out, ck)
+
+    got = sorted(
+        (r.day, r.shard, list(r.kmins)) for r in spark.read.parquet(out).collect()
+    )
+    assert got == [(T0.to_pydatetime(), 0, [3, 5])]
+
+
+def test_match_or_timeout_fires_at_stalled_watermark(spark, tmp_path):
+    """Entities 1 and 65 share a bucket. Entity 1's start has deadline
+    T0 + 900 s; batch 0 also drives the watermark to exactly that
+    deadline (entity 2, another bucket). Batch 1 invokes the bucket for
+    entity 65 at watermark == deadline, so entity 1 stays pending
+    (deadline < watermark is false) and the bucket timer is re-armed.
+    Batch 1 moves the watermark by exactly 1 ms and no more data
+    arrives: the timeout row must emit in the trailing no-data batch."""
+    from flink_tutorial_spark.streaming.buckets import N_BUCKETS
+    from flink_tutorial_spark.streaming.cep import match_or_timeout
+
+    assert 1 % N_BUCKETS == 65 % N_BUCKETS != 2 % N_BUCKETS
+    src = str(tmp_path / "src")
+    deadline_ms = 900_000
+    write_batches(
+        src,
+        [
+            [_ms_row(0, 1, "create", 5.0), _ms_row(deadline_ms, 2, "other")],
+            [_ms_row(deadline_ms + 1, 65, "other")],
+        ],
+    )
+
+    def q(stream):
+        wm = stream.withWatermark("ts", "0 seconds")
+        return match_or_timeout(wm, "user", "ts", "kind", "create", "pay", 900)
+
+    base_us = int(T0.timestamp()) * 1_000_000
+    got = [
+        (r.key, r.start_ts, r.end_ts, r.status, r.value)
+        for r in run_stream(spark, src, q, "append").collect()
+    ]
+    assert got == [(1, base_us, base_us + deadline_ms * 1_000, "timeout", 5.0)]
+
+
+def _string_key_plans():
+    from flink_tutorial_spark.streaming.cep import (
+        detect_consecutive,
+        detect_sequence,
+        match_or_timeout,
+    )
+    from flink_tutorial_spark.streaming.stateful import (
+        blacklist_filter,
+        clamped_ledger,
+        hll_day_fold,
+        kmv_day_fold,
+        quantile_day_fold,
+        scd2_closed_intervals,
+        transition_pairs,
+    )
+
+    flag = F.col("value") > 0
+    return {
+        "blacklist_filter": lambda s: blacklist_filter(
+            s, "key", "user", "ts", "day", 1
+        ),
+        "transition_pairs": lambda s: transition_pairs(s, "key", ["ts"], "user"),
+        "scd2_closed_intervals": lambda s: scd2_closed_intervals(
+            s, "key", ["ts"], "user"
+        ),
+        "clamped_ledger": lambda s: clamped_ledger(s, "key", ["ts", "user"], "user"),
+        "detect_consecutive": lambda s: detect_consecutive(
+            s.withColumn("flag", flag), "key", "ts", "flag", 2, 60
+        ),
+        "detect_sequence": lambda s: detect_sequence(
+            s.withColumn("s0", flag).withColumn("s1", flag), "key", "ts", ["s0", "s1"], 60
+        ),
+        "match_or_timeout": lambda s: match_or_timeout(
+            s, "key", "ts", "kind", "create", "pay", 60
+        ),
+        "kmv_day_fold": lambda s: kmv_day_fold(s, "day", "key", "user", 2),
+        "quantile_day_fold": lambda s: quantile_day_fold(s, "day", "kind", "key", "user"),
+        "hll_day_fold": lambda s: hll_day_fold(s, "day", "key", "user", "user", 64),
+    }
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        "blacklist_filter",
+        "transition_pairs",
+        "scd2_closed_intervals",
+        "clamped_ledger",
+        "detect_consecutive",
+        "detect_sequence",
+        "match_or_timeout",
+        "kmv_day_fold",
+        "quantile_day_fold",
+        "hll_day_fold",
+    ],
+)
+def test_bucketed_state_rejects_string_key_at_plan_build(spark, tmp_path, op):
+    """A string entity key (or day-fold shard column) would bucket as
+    NULL at run time; the operator must refuse it with a TypeError while
+    the plan is built, before any query starts."""
+    src = str(tmp_path / "src")
+    write_batches(src, [[_row(0)]])
+    stream = (
+        spark.readStream.format("parquet")
+        .schema(EVENT_SCHEMA)
+        .load(src)
+        .withColumn("day", F.date_trunc("day", "ts"))
+        .withWatermark("ts", "0 seconds")
+    )
+    with pytest.raises(TypeError, match=rf"^{op}: key column 'key' has type string"):
+        _string_key_plans()[op](stream)
+
+
+def test_rocksdb_provider_stateful_equivalence(spark, tmp_path):
+    # SURVEY §2.9 state backends: the RocksDB provider (the >heap
+    # production backend, Flink's RocksDBStateBackend analog) must
+    # produce the identical result as the default HDFS-backed provider
+    # for the same stateful op — proven by running the count window
+    # A/B under both providers
+    from flink_tutorial_spark.streaming.stateful import count_window_sum
+
+    src = str(tmp_path / "src")
+    write_batches(
+        src,
+        [
+            [_row(1, "a", value=1), _row(2, "a", value=2), _row(3, "b", value=10)],
+            [_row(4, "a", value=3), _row(5, "b", value=20), _row(6, "b", value=30)],
+            [_row(7, "a", value=4)],
+        ],
+    )
+
+    def q(stream):
+        return count_window_sum(stream, "key", "ts", "value", 3)
+
+    results = {}
+    key = "spark.sql.streaming.stateStore.providerClass"
+    prev = spark.conf.get(key, None)
+    try:
+        for label, provider in [
+            ("hdfs", None),
+            (
+                "rocksdb",
+                "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+            ),
+        ]:
+            if provider is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, provider)
+            results[label] = sorted(
+                (r.key, r.window_seq, r.cnt, r.sum_value)
+                for r in run_stream(spark, src, q, "append").collect()
+            )
+    finally:
+        spark.conf.unset(key) if prev is None else spark.conf.set(key, prev)
+    assert results["rocksdb"] == results["hdfs"]
+    assert results["rocksdb"], "stateful op should emit complete windows"
 
 
 def test_late_side_channel_reads_batch_once(spark, tmp_path):
