@@ -13,66 +13,22 @@ The reference's sink semantics split two ways:
 The local stand-in for an external KV/JDBC table is a parquet keyed
 table (read-modify-overwrite per epoch). The JDBC path itself is
 sketched behind an import guard (no DB in this container).
+
+The keyed sinks' on-disk protocol — version and epoch dir names, the
+atomic link flip and rename, pruning, table meta and the pending-marker
+recovery — lives in publish.py; the classes here keep only their merge,
+fold, ledger, probe and read logic.
 """
 
 from __future__ import annotations
 
-import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_tutorial_spark import plan_capture
-
-
-def _contained(root: str, p: str) -> bool:
-    """True iff `p` resolves STRICTLY inside `root` — neither the root
-    itself nor anywhere outside it. The guard that keeps recovery's
-    rmtree from ever leaving the table, whatever a repaired marker says."""
-    rroot = os.path.realpath(root)
-    rp = os.path.realpath(p)
-    return rp != rroot and os.path.commonpath([rroot, rp]) == rroot
-
-
-def _load_marker(
-    path: str, required: dict[str, type], root: str | None = None
-) -> dict:
-    """Read a pending-marker json and validate its SHAPE, not just its
-    parsability (review r18): a marker the operator 'repaired' to valid
-    json of the wrong shape previously slipped past the unreadable-marker
-    guards — worst case a string `superseded` iterating per-character
-    into shutil.rmtree("/"). Any structural problem raises ValueError so
-    callers treat unparsable and wrong-shape markers uniformly.
-
-    Semantic rules (ADVICE r18): int fields are bucket counts — bools
-    (which isinstance as int) and counts < 1 are rejected here rather
-    than surfacing later as a confusing count-mismatch; with `root`,
-    every str field and list entry is a path that must resolve strictly
-    inside it — shape-valid markers naming "/", the table root, or any
-    outside path (the rmtree targets of recovery) fail as unreadable."""
-    with open(path) as f:
-        pending = json.load(f)
-    if not isinstance(pending, dict):
-        raise ValueError(f"marker is not a json object: {pending!r}")
-    for k, t in required.items():
-        v = pending.get(k)
-        if k not in pending or not isinstance(v, t) or isinstance(v, bool):
-            raise ValueError(
-                f"marker field {k!r} missing or not a {t.__name__}: {v!r}"
-            )
-        if t is int and v < 1:
-            raise ValueError(f"marker field {k!r} must be >= 1: {v!r}")
-        if t is list and not all(isinstance(x, str) for x in v):
-            raise ValueError(f"marker field {k!r} has non-string entries")
-        if root is not None and t in (str, list):
-            for p in v if t is list else [v]:
-                if not _contained(root, p):
-                    raise ValueError(
-                        f"marker field {k!r} path {p!r} does not resolve "
-                        f"strictly inside the table root {root!r}"
-                    )
-    return pending
+from flink_tutorial_spark.sinks import publish
 
 
 class KeyedUpsertSink:
@@ -80,10 +36,9 @@ class KeyedUpsertSink:
 
     Equivalent contract to JdbcSink upsert / Redis HSET / ES upsert:
     per key the winning row survives, replaying an epoch is a no-op.
-    Within one batch the winner is the max of `order_col` when given
-    (e.g. an event timestamp); without it, duplicates within a batch are
-    resolved arbitrarily — pass order_col whenever the upstream can emit
-    multiple rows per key per epoch (aggregated upstreams emit one).
+    Within one batch the winner is arbitrary (dropDuplicates on the
+    key), so an upstream that can emit several rows per key per epoch
+    must reduce them first (aggregated upstreams emit one).
 
     Scale shape: the table is split into `n_buckets` hash buckets
     (pmod(hash(keys), n)); an epoch rewrites ONLY the buckets its batch
@@ -94,21 +49,19 @@ class KeyedUpsertSink:
     the write are metadata-only.
 
     Crash safety: each epoch writes a NEW versioned directory, then
-    atomically repoints each dirty bucket's symlink (os.replace on a
-    symlink is atomic on POSIX). A crash mid-write leaves every bucket
-    pointer intact. Pruning retains the PREVIOUS version of each bucket
-    (N-1), so a lazy DataFrame from read() stays valid across one more
-    epoch; only N-2 and older are removed. On a real lakehouse this
-    whole class is MERGE INTO on a transactional table — same
-    foreachBatch shape, and the bucket pruning job is the tablet/file
-    pruning MERGE does natively."""
+    atomically repoints each dirty bucket's symlink (publish.flip_all). A
+    crash mid-write leaves every bucket pointer intact. Pruning retains
+    the PREVIOUS version of each bucket (N-1), so a lazy DataFrame from
+    read() stays valid across one more epoch; only N-2 and older are
+    removed. On a real lakehouse this whole class is MERGE INTO on a
+    transactional table — same foreachBatch shape, and the bucket
+    pruning job is the tablet/file pruning MERGE does natively."""
 
     def __init__(
         self,
         spark: SparkSession,
         path: str,
         key_cols: list[str],
-        order_col: str | None = None,
         n_buckets: int = 16,
         bucket_cols: list[str] | None = None,
         stable_value_buckets: bool = False,
@@ -126,7 +79,6 @@ class KeyedUpsertSink:
         self.spark = spark
         self.path = path
         self.key_cols = key_cols
-        self.order_col = order_col
         self.n_buckets = n_buckets
         # bucket on a key PREFIX to co-locate rows that must be rewritten
         # (and recomputed) together — e.g. all items of one window for a
@@ -165,11 +117,7 @@ class KeyedUpsertSink:
         return os.path.join(self.path, "_table_meta.json")
 
     def _write_meta(self) -> None:
-
-        tmp = self._meta_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"n_buckets": self.n_buckets}, f)
-        os.replace(tmp, self._meta_path())
+        publish.write_json(self._meta_path(), {"n_buckets": self.n_buckets})
 
     def _check_meta(self) -> None:
         """Bucket-count guard (ADVICE r16): the count is placement — a
@@ -180,25 +128,12 @@ class KeyedUpsertSink:
         modulus and miss candidates). The count is persisted in a small
         table-meta file written on first use and by rebucket(); a
         mismatch at construction raises instead, mirroring the
-        interrupted-rebucket marker's count check. Pre-meta tables
-        (none in-repo) adopt the constructor's count on first
+        interrupted-rebucket marker's count check, and so does a meta
+        file that does not hold a valid count. Pre-meta tables (none
+        in-repo) adopt the constructor's count on first
         reconstruction."""
-
-        meta = self._meta_path()
-        if os.path.exists(meta):
-            with open(meta) as f:
-                recorded = json.load(f)["n_buckets"]
-            if recorded != self.n_buckets:
-                raise ValueError(
-                    f"bucket-count mismatch at {self.path}: table meta "
-                    f"records n_buckets={recorded} but the sink was "
-                    f"constructed with {self.n_buckets}. The count is "
-                    "placement — reading or writing under the wrong one "
-                    "silently drops buckets / strands keys. Construct "
-                    f"with n_buckets={recorded}, or rebucket() to the "
-                    "new count from a correctly-constructed sink."
-                )
-        else:
+        recorded = publish.read_meta(self._meta_path())
+        if recorded is None:
             # pre-meta adoption (legacy tables only — every table this
             # code creates gets meta at first construction): a bucket id
             # on disk >= the constructor's count proves the count wrong
@@ -213,6 +148,16 @@ class KeyedUpsertSink:
                     "construct with the table's real count"
                 )
             self._write_meta()
+        elif recorded != self.n_buckets:
+            raise ValueError(
+                f"bucket-count mismatch at {self.path}: table meta "
+                f"records n_buckets={recorded} but the sink was "
+                f"constructed with {self.n_buckets}. The count is "
+                "placement — reading or writing under the wrong one "
+                "silently drops buckets / strands keys. Construct "
+                f"with n_buckets={recorded}, or rebucket() to the "
+                "new count from a correctly-constructed sink."
+            )
 
     def _max_layout_bucket(self) -> int | None:
         """Largest bucket id present in the on-disk layout (links dir
@@ -226,17 +171,6 @@ class KeyedUpsertSink:
         ]
         return max(ids) if ids else None
 
-    @staticmethod
-    def _version_epoch(bucket_path: str) -> int:
-        """Epoch id encoded in a bucket's version-directory name
-        (``.../v{epoch}_{uuid}/_bucket={b}``) — the metadata the epoch
-        ledger rides (EpochLedgerMergeAggSink); -1 if unparsable."""
-        vdir = os.path.basename(os.path.dirname(bucket_path))
-        try:
-            return int(vdir.split("_", 1)[0][1:])
-        except (IndexError, ValueError):
-            return -1
-
     def _rebucket_marker(self) -> str:
         return os.path.join(self.path, "_rebucket_pending.json")
 
@@ -247,80 +181,36 @@ class KeyedUpsertSink:
         is always safe — without this, a crash mid-swap would leave some
         buckets unlinked and the NEXT epoch would silently drop their
         rows (merged = new with no old side)."""
-        import shutil
 
-        marker = self._rebucket_marker()
-        if not os.path.exists(marker):
-            return
-        try:
-            pending = _load_marker(
-                marker, {"version_dir": str, "n_buckets": int}, root=self.path
-            )
-        except (OSError, ValueError) as e:
-            # same class as the append channel's unreadable-marker rule:
-            # the marker exists, so a swap may be half-done — recovery
-            # cannot proceed mechanically, and silently ignoring the
-            # marker would leave point reads on a half-swapped layout
-            raise RuntimeError(
-                f"interrupted rebucket at {self.path}: pending marker "
-                f"{marker} is unreadable ({e!r}) — inspect the version "
-                "dirs and links, then repair or remove the marker before "
-                "reconstructing the sink"
-            ) from e
-        if pending["n_buckets"] != self.n_buckets:
-            raise ValueError(
-                f"interrupted rebucket at {self.path} was re-sharding to "
-                f"{pending['n_buckets']} buckets; construct the sink with "
-                f"that count (got n_buckets={self.n_buckets}) so recovery "
-                "completes under the table's real placement"
-            )
-        self._swap_all_links(pending["version_dir"])
-        # realpath on both sides (ADVICE r18): a recovering constructor
-        # that spells self.path differently from the crashed writer
-        # (relative vs absolute, trailing slash) must not prune the very
-        # version dir the links were just swapped to
-        keep_dir = os.path.realpath(pending["version_dir"])
-        for entry in os.listdir(self.path):
-            full = os.path.join(self.path, entry)
-            if (
-                entry == "links"
-                or os.path.realpath(full) == keep_dir
-                or not os.path.isdir(full)
-            ):
-                continue
-            shutil.rmtree(full, ignore_errors=True)
-        # the meta write rides the marker bracket (see rebucket): recovery
-        # re-runs it so the recorded count can never lag a completed swap
-        self._write_meta()
-        os.unlink(marker)
+        def complete(pending: dict) -> None:
+            # point every link at the new version and drop links with no
+            # partition there; the whole pass is idempotent
+            present = publish.flip_all(pending["version_dir"], self._link)
+            links = os.path.join(self.path, "links")
+            for entry in os.listdir(links):
+                if entry.endswith(".tmp") or (
+                    entry.startswith("b") and int(entry[1:]) not in present
+                ):
+                    os.unlink(os.path.join(links, entry))
+            publish.prune(self.path, present.values())
+            # the meta write rides the marker bracket: recovery re-runs it
+            # so the recorded count can never lag a completed swap
+            self._write_meta()
 
-    def _swap_all_links(self, version_dir: str) -> None:
-        """Point every bucket link at `version_dir`'s partitions and drop
-        links with no partition there. Each flip is atomic (tmp +
-        os.replace) and the whole pass is idempotent — crash-recovery
-        re-runs it verbatim."""
-        present = set()
-        for sub in os.listdir(version_dir):
-            if not sub.startswith("_bucket="):
-                continue
-            b = int(sub.split("=")[1])
-            present.add(b)
-            link = self._link(b)
-            tmp_link = link + ".tmp"
-            if os.path.lexists(tmp_link):
-                os.unlink(tmp_link)
-            os.symlink(os.path.join(version_dir, sub), tmp_link)
-            os.replace(tmp_link, link)
-        links_dir = os.path.join(self.path, "links")
-        for entry in list(os.listdir(links_dir)):
-            if entry.endswith(".tmp"):
-                os.unlink(os.path.join(links_dir, entry))
-                continue
-            if entry.startswith("b") and int(entry[1:]) not in present:
-                os.unlink(os.path.join(links_dir, entry))
+        publish.recover(
+            self._rebucket_marker(), "rebucket", self.path, self.n_buckets,
+            complete,
+        )
 
     def _bucket_expr(self) -> F.Column:
         return F.pmod(F.hash(*self.bucket_cols), F.lit(self.n_buckets))
+
+    def _bucket_ids(self, df: DataFrame) -> list[int]:
+        """Sorted bucket ids `df`'s rows hash into (<= n_buckets ints
+        reach the driver)."""
+        return sorted(
+            r[0] for r in df.select(self._bucket_expr()).distinct().collect()
+        )
 
     def _finalize_merged(self, merged: DataFrame) -> DataFrame:
         """Hook: recompute derived columns over the merged bucket contents
@@ -336,17 +226,9 @@ class KeyedUpsertSink:
         return out
 
     def _reduce_batch(self, batch_df: DataFrame) -> DataFrame:
-        """Hook: collapse the epoch to one row per key. Default:
-        last-row-wins by `order_col` (or arbitrary dropDuplicates)."""
-        from pyspark.sql import Window
-
-        if self.order_col:
-            w = Window.partitionBy(*self.key_cols).orderBy(F.desc(self.order_col))
-            return (
-                batch_df.withColumn("_rn", F.row_number().over(w))
-                .where(F.col("_rn") == 1)
-                .drop("_rn")
-            )
+        """Hook: collapse the epoch to one row per key. Default: an
+        arbitrary row per key — within-epoch duplicates must be reduced
+        upstream."""
         return batch_df.dropDuplicates(self.key_cols)
 
     def _merge(self, old: DataFrame, new: DataFrame) -> DataFrame:
@@ -377,14 +259,17 @@ class KeyedUpsertSink:
         return None
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
-        new = self._reduce_batch(batch_df)
         # persist: `new` feeds three branches (dirty-bucket collect, the
         # merge, the merged union) — without it a streaming micro-batch
         # plan (stateful agg included) re-executes per branch
-        cached = new.withColumn("_bucket", self._bucket_expr()).persist()
+        cached = (
+            self._reduce_batch(batch_df)
+            .withColumn("_bucket", self._bucket_expr())
+            .persist()
+        )
         new = cached
         try:
-            dirty = sorted(r[0] for r in new.select("_bucket").distinct().collect())
+            dirty = self._bucket_ids(new)
             if not dirty:
                 return
             live = self._live_bucket_paths()
@@ -396,59 +281,26 @@ class KeyedUpsertSink:
                 new = new.where(F.col("_bucket").isin(applied))
             dirty = applied
             old_paths = [live[b] for b in dirty if b in live]
+            merged = new
             if old_paths:
                 old = self.spark.read.parquet(*old_paths).withColumn(
                     "_bucket", self._bucket_expr()
                 )
                 merged = self._merge(old, new)
-            else:
-                merged = new
-            merged = self._finalize_merged(merged)
-            # unique per write: an epoch REPLAY must never overwrite the very
-            # directory its own input plan is lazily reading from
-            import uuid
-
-            version_dir = os.path.join(self.path, f"v{epoch_id}_{uuid.uuid4().hex[:8]}")
-            plan_capture.capture_df(merged, f"sink:{os.path.basename(self.path)}")
-            merged.write.mode("overwrite").partitionBy("_bucket").parquet(version_dir)
+            version = publish.version_dir(self.path, epoch_id)
+            publish.write_bucketed(
+                self._finalize_merged(merged),
+                version,
+                f"sink:{os.path.basename(self.path)}",
+            )
         finally:
             cached.unpersist()
-        prev = {}  # bucket -> superseded realpath (retained one epoch)
-        for b in dirty:
-            target = os.path.join(version_dir, f"_bucket={b}")
-            if not os.path.isdir(target):
-                continue  # bucket keys vanished via anti-join edge case
-            link = self._link(b)
-            if b in live:
-                prev[b] = live[b]
-            tmp_link = link + ".tmp"
-            if os.path.lexists(tmp_link):
-                os.unlink(tmp_link)
-            os.symlink(target, tmp_link)
-            os.replace(tmp_link, link)
-        self._prune(dirty, prev)
-
-    def _prune(self, dirty: list[int], prev: dict[int, str]) -> None:
-        """Remove bucket dirs superseded twice; drop empty version dirs."""
-        import shutil
-
-        keep = set(prev.values())
-        for b in dirty:
-            link = self._link(b)
-            keep.add(os.path.realpath(link))
-        for entry in os.listdir(self.path):
-            vdir = os.path.join(self.path, entry)
-            if not (entry.startswith("v") and os.path.isdir(vdir)):
-                continue
-            for sub in os.listdir(vdir):
-                if not sub.startswith("_bucket="):
-                    continue
-                b = int(sub.split("=")[1])
-                full = os.path.join(vdir, sub)
-                if b in dirty and os.path.realpath(full) not in keep:
-                    shutil.rmtree(full, ignore_errors=True)
-            if not any(s.startswith("_bucket=") for s in os.listdir(vdir)):
-                shutil.rmtree(vdir, ignore_errors=True)
+        publish.flip_all(version, self._link)
+        publish.prune(
+            self.path,
+            [live[b] for b in dirty if b in live] + [self._link(b) for b in dirty],
+            dirty,
+        )
 
     def read(self) -> DataFrame:
         paths = list(self._live_bucket_paths().values())
@@ -478,14 +330,8 @@ class KeyedUpsertSink:
         rows (one row per probe value), or the hamming-1 candidates are
         silently dropped; the in-repo call sites all probe radius 0, so
         they pass the raw query rows."""
-        ids = sorted(
-            r[0]
-            for r in values.select(self._bucket_expr().alias("_b"))
-            .distinct()
-            .collect()
-        )
         live = self._live_bucket_paths()
-        paths = [live[b] for b in ids if b in live]
+        paths = [live[b] for b in self._bucket_ids(values) if b in live]
         if not paths:
             return self.read().limit(0)
         return self.spark.read.parquet(*paths)
@@ -519,24 +365,11 @@ class KeyedUpsertSink:
         file brackets the link swap: a crash mid-swap is completed by
         the next constructor (see _recover_rebucket), never left as
         silently unlinked buckets."""
-        import shutil
-        import uuid
-
         old_paths = self._live_bucket_paths()
-        if not old_paths:
-            # empty table: nothing to rewrite, just adopt the new count
-            # (restore on a failed meta write — the write is atomic, so
-            # a raise means disk meta still records the old count and
-            # the live instance must keep matching it; review r18)
-            old_n = self.n_buckets
-            self.n_buckets = n_buckets
-            try:
-                self._write_meta()
-            except Exception:
-                self.n_buckets = old_n
-                raise
-            return
-        ledger_max = max(self._version_epoch(p) for p in old_paths.values())
+        ledger_max = max(
+            (publish.epoch_of(os.path.dirname(p)) for p in old_paths.values()),
+            default=0,
+        )
         if ledger_max < 0:
             # every version dir this class writes is v{epoch}_{uuid}; an
             # unparsable name means the name-encoded replay-protection
@@ -551,54 +384,40 @@ class KeyedUpsertSink:
                 "ledger is unreliable; repair the table (or rebuild it "
                 "from source) before re-sharding"
             )
-        df = self.spark.read.parquet(*old_paths.values())
         old_n = self.n_buckets
-        self.n_buckets = n_buckets
+        self.n_buckets = n_buckets  # adopt first: _bucket_expr uses it
+        version = publish.version_dir(self.path, ledger_max)
         try:
-            rebucketed = df.withColumn("_bucket", self._bucket_expr())
-            version_dir = os.path.join(
-                self.path, f"v{ledger_max}_{uuid.uuid4().hex[:8]}"
+            if not old_paths:
+                # empty table: nothing to rewrite, just adopt the count
+                self._write_meta()
+                return
+            df = self.spark.read.parquet(*old_paths.values())
+            publish.write_bucketed(
+                df.withColumn("_bucket", self._bucket_expr()),
+                version,
+                f"rebucket:{os.path.basename(self.path)}",
             )
-            plan_capture.capture_df(
-                rebucketed, f"rebucket:{os.path.basename(self.path)}"
-            )
-            rebucketed.write.mode("overwrite").partitionBy("_bucket").parquet(
-                version_dir
+            # the marker is the publish point: once it lands, the new
+            # count is the table's committed layout
+            publish.write_json(
+                self._rebucket_marker(),
+                {"version_dir": version, "n_buckets": n_buckets},
             )
         except Exception:
-            self.n_buckets = old_n  # failed rewrite: table is untouched
-            raise
-        # marker on, then the commit sequence — which is _recover_rebucket
-        # ITSELF (review r18: the swap/prune/meta/unlink steps used to be
-        # duplicated here verbatim; one tested code path now serves both
-        # the live rebucket and crash recovery, so they cannot drift).
-        # The marker is the publish point: once it lands, the new count
-        # is the table's committed layout — a failure inside the commit
-        # sequence leaves the marker intact (the next constructor, or a
-        # direct _recover_rebucket call, retries) with the live instance
-        # consistent for probing (links swap before the meta write).
-        marker = self._rebucket_marker()
-        tmp = marker + ".tmp"
-        try:
-            with open(tmp, "w") as f:
-                json.dump(
-                    {"version_dir": version_dir, "n_buckets": n_buckets}, f
-                )
-            os.replace(tmp, marker)
-        except Exception:
-            # marker never landed: nothing published, links + meta still
-            # the old layout — the live instance must match them, and the
-            # orphaned full-table rewrite must not leak (epoch-level
-            # pruning never empties a dir with bucket ids >= old_n);
-            # nor the staged .tmp marker (ADVICE r18: a failure between
-            # tmp creation and os.replace left it in the table root)
-            shutil.rmtree(version_dir, ignore_errors=True)
-            try:
-                os.unlink(tmp)
-            except OSError:
-                pass
+            # nothing published: links and meta still hold the old
+            # layout, so the live instance must match them (a meta or
+            # marker write is atomic — a raise means disk still records
+            # the old count), and the orphaned full-table rewrite must
+            # not leak (epoch-level pruning never empties a dir with
+            # bucket ids >= old_n)
+            shutil.rmtree(version, ignore_errors=True)
             self.n_buckets = old_n
             raise
+        # the commit sequence IS crash recovery: one code path serves the
+        # live rebucket and the next constructor. A failure inside it
+        # leaves the marker for a retry, with the live instance
+        # consistent for probing (links swap before the meta write).
         self._recover_rebucket()
 
 
@@ -619,8 +438,8 @@ class KeyedAppendSink(KeyedUpsertSink):
     re-delivers an uncommitted epoch with the SAME epoch id and content,
     so a replay appends byte-identical rows under the same `_epoch`
     value — the keyed max-epoch read collapses them. Publishing is
-    all-or-nothing: the epoch writes to a staging dir and os.rename()s
-    it into `epochs/` (atomic on POSIX), so a crash mid-write leaves
+    all-or-nothing: the epoch writes to a staging dir and renames it
+    into `epochs/` (publish.publish_dir), so a crash mid-write leaves
     only an unread staging dir (swept on the next epoch), never a
     partial epoch.
 
@@ -639,7 +458,6 @@ class KeyedAppendSink(KeyedUpsertSink):
         spark: SparkSession,
         path: str,
         key_cols: list[str],
-        order_col: str | None = None,
         n_buckets: int = 16,
         bucket_cols: list[str] | None = None,
         stable_value_buckets: bool = False,
@@ -664,7 +482,6 @@ class KeyedAppendSink(KeyedUpsertSink):
             spark,
             path,
             key_cols,
-            order_col=order_col,
             n_buckets=n_buckets,
             bucket_cols=bucket_cols,
             stable_value_buckets=stable_value_buckets,
@@ -683,76 +500,34 @@ class KeyedAppendSink(KeyedUpsertSink):
         return os.path.join(self.path, "_fold_pending.json")
 
     def _max_layout_bucket(self) -> int | None:
-        ids = [
-            int(s.split("=")[1])
-            for d in self._epoch_dirs()
-            for s in os.listdir(d)
-            if s.startswith("_bucket=")
-        ]
-        return max(ids) if ids else None
+        return max(
+            (b for d in self._epoch_dirs() for b in publish.bucket_dirs(d)),
+            default=None,
+        )
 
     def _recover_fold(self) -> None:
         """Finish an interrupted _fold_epochs (constructor hook, the
         append twin of _recover_rebucket; ADVICE r16): the marker exists
         from just before the fold's atomic publish until after the
         superseded-dir removals, so recovery is either a no-op (publish
-        never happened — drop the marker, the staging sweep clears the
-        leftovers) or a re-run of the removals + meta write. Without
-        this, a crash between publish and removals left mixed-layout
-        epoch dirs that read_buckets would silently probe stale until
-        an operator remembered to re-run the fold."""
-        import shutil
+        never happened — drop the marker and sweep the staged copy here
+        too, since a read-only table may never run __call__'s sweep) or
+        a re-run of the removals + meta write. Without this, a crash
+        between publish and removals left mixed-layout epoch dirs that
+        read_buckets would silently probe stale until an operator
+        remembered to re-run the fold."""
 
-        marker = self._fold_marker()
-        if not os.path.exists(marker):
-            return
-        try:
-            pending = _load_marker(
-                marker,
-                {"final": str, "superseded": list, "n_buckets": int},
-                root=self.path,
-            )
-        except (OSError, ValueError) as e:
-            # unreadable marker at construction = unknown publish state
-            # (the in-flight rebucket handler's rule, applied here): a
-            # fold may be half-done, so neither completing nor discarding
-            # is mechanically safe — surface it instead of crashing with
-            # a bare json error
-            raise RuntimeError(
-                f"interrupted fold at {self.path}: pending marker "
-                f"{marker} is unreadable ({e!r}) — inspect the epoch "
-                "dirs, then repair or remove the marker before "
-                "reconstructing the sink"
-            ) from e
-        if not os.path.isdir(pending["final"]):
-            # crashed before the atomic publish: the fold never took
-            # effect and the old dirs are intact — discard the marker
-            # and sweep the staged copy here too (a read-only table may
-            # never run __call__'s staging sweep, and the staged fold is
-            # a full deduped copy of the table)
-            for entry in os.listdir(self.path):
-                if entry.startswith("_staging_"):
-                    shutil.rmtree(
-                        os.path.join(self.path, entry), ignore_errors=True
-                    )
-            os.unlink(marker)
-            return
-        if pending["n_buckets"] != self.n_buckets:
-            raise ValueError(
-                f"interrupted fold at {self.path} was publishing under "
-                f"{pending['n_buckets']} buckets; construct the sink "
-                f"with that count (got n_buckets={self.n_buckets}) so "
-                "recovery completes under the table's real placement"
-            )
-        for d in pending["superseded"]:
-            shutil.rmtree(d, ignore_errors=True)
-        self._write_meta()
-        os.unlink(marker)
+        def complete(pending: dict) -> None:
+            for d in pending["superseded"]:
+                shutil.rmtree(d, ignore_errors=True)
+            self._write_meta()
+
+        publish.recover(
+            self._fold_marker(), "fold", self.path, self.n_buckets,
+            complete, published="final",
+        )
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
-        import shutil
-        import uuid
-
         # lineage guard (the append twin of EpochLedgerMergeAggSink's):
         # this channel is EPOCH-ID-SENSITIVE — max-epoch wins per key —
         # and foreachBatch epoch ids only ever repeat-or-grow within one
@@ -785,31 +560,13 @@ class KeyedAppendSink(KeyedUpsertSink):
             .withColumn("_bucket", self._bucket_expr())
             .withColumn("_epoch", F.lit(epoch_id).cast("long"))
         )
-        epochs_dir = os.path.join(self.path, "epochs")
-        os.makedirs(epochs_dir, exist_ok=True)
-        # sweep staging leftovers from crashed attempts (never published,
-        # never read; sinks run sequentially on the driver so no other
-        # attempt of THIS sink is in flight)
-        for entry in os.listdir(self.path):
-            if entry.startswith("_staging_"):
-                shutil.rmtree(os.path.join(self.path, entry), ignore_errors=True)
-        staging = os.path.join(
-            self.path, f"_staging_{epoch_id}_{uuid.uuid4().hex[:8]}"
-        )
-        plan_capture.capture_df(new, f"sink:{os.path.basename(self.path)}")
-        new.write.mode("overwrite").partitionBy("_bucket").parquet(staging)
-        if not any(s.startswith("_bucket=") for s in os.listdir(staging)):
-            # empty epoch: a data-less dir would break the readers'
-            # schema inference — skip the publish (free: layout check,
-            # no extra Spark job)
-            shutil.rmtree(staging, ignore_errors=True)
-            return
-        final = os.path.join(
-            epochs_dir, f"e{epoch_id:012d}_{uuid.uuid4().hex[:8]}"
-        )
-        os.rename(staging, final)  # atomic publish
+        os.makedirs(os.path.join(self.path, "epochs"), exist_ok=True)
+        publish.sweep_staging(self.path)
+        staging = publish.staging_dir(self.path, epoch_id)
+        publish.write_bucketed(new, staging, f"sink:{os.path.basename(self.path)}")
         if (
-            self.compact_every_n_epochs is not None
+            publish.publish_dir(staging, publish.epoch_dir(self.path, epoch_id))
+            and self.compact_every_n_epochs is not None
             and len(self._epoch_dirs()) >= self.compact_every_n_epochs
         ):
             # auto-compaction (VERDICT r16 #3): fold inside the epoch,
@@ -828,13 +585,9 @@ class KeyedAppendSink(KeyedUpsertSink):
         )
 
     def _max_published_epoch(self) -> int | None:
-        """Max epoch id across published dirs, parsed from the names
-        (e{epoch:012d}_{suffix}) — metadata-only, no file read."""
-        ids = [
-            int(os.path.basename(d).split("_")[0][1:])
-            for d in self._epoch_dirs()
-        ]
-        return max(ids) if ids else None
+        """Max epoch id across published dirs, parsed from the names —
+        metadata-only, no file read."""
+        return max(map(publish.epoch_of, self._epoch_dirs()), default=None)
 
     def _read_epochs(self, dirs: list[str]) -> DataFrame:
         """Union the epoch dirs READ SEPARATELY: each is its own
@@ -877,17 +630,12 @@ class KeyedAppendSink(KeyedUpsertSink):
         across every epoch, then the same max-epoch dedup. The parent's
         CONTRACT note applies verbatim (`values` must carry the fully
         expanded probe set)."""
-        ids = sorted(
-            r[0]
-            for r in values.select(self._bucket_expr().alias("_b"))
-            .distinct()
-            .collect()
-        )
+        wanted = set(self._bucket_ids(values))
         paths = [
-            os.path.join(d, f"_bucket={b}")
+            p
             for d in self._epoch_dirs()
-            for b in ids
-            if os.path.isdir(os.path.join(d, f"_bucket={b}"))
+            for b, p in sorted(publish.bucket_dirs(d).items())
+            if b in wanted
         ]
         if not paths:
             return self.read().limit(0)
@@ -905,61 +653,37 @@ class KeyedAppendSink(KeyedUpsertSink):
         so no scan is needed; later epochs still win the dedup), then
         remove the superseded dirs.
 
-        Interrupted-maintenance story (ADVICE r16): the crash window
-        between the atomic publish and the removals is bracketed by a
-        pending-marker file, completed by the next constructor
-        (_recover_fold) — a FULL read is correct either way (every
-        leftover old row loses the max-epoch dedup to the folded copy
-        or ties it byte-identically), but point probes (read_buckets)
-        would silently see stale co-residents from the leftover dirs;
-        the marker turns that into mechanical recovery instead of an
-        operator remembering to re-run the fold."""
-        import shutil
-        import uuid
-
+        Interrupted-maintenance story (ADVICE r16): marker on ->
+        publish -> removals -> meta -> marker off, where everything after
+        the publish is _recover_fold itself, so a crash anywhere is
+        completed (or discarded, pre-publish) by the next constructor. A
+        FULL read is correct either way (every leftover old row loses
+        the max-epoch dedup to the folded copy or ties it
+        byte-identically), but point probes (read_buckets) would
+        silently see stale co-residents from the leftover dirs; the
+        marker turns that into mechanical recovery instead of an
+        operator remembering to re-run the fold. The meta write inside
+        the bracket means a rebucket-fold's new count can never silently
+        lag the layout."""
         max_epoch = self._max_published_epoch()
-        latest = self._latest_per_key(self._read_epochs(dirs))
         folded = (
-            latest.withColumn("_bucket", self._bucket_expr())
+            self._latest_per_key(self._read_epochs(dirs))
+            .withColumn("_bucket", self._bucket_expr())
             .withColumn("_epoch", F.lit(max_epoch).cast("long"))
         )
-        staging = os.path.join(
-            self.path, f"_staging_{tag}_{uuid.uuid4().hex[:8]}"
+        staging = publish.staging_dir(self.path, tag)
+        publish.write_bucketed(
+            folded, staging, f"{tag}:{os.path.basename(self.path)}"
         )
-        plan_capture.capture_df(folded, f"{tag}:{os.path.basename(self.path)}")
-        folded.write.mode("overwrite").partitionBy("_bucket").parquet(staging)
-        final = os.path.join(
-            self.path,
-            "epochs",
-            f"e{max_epoch:012d}_{tag[0]}{uuid.uuid4().hex[:8]}",
+        final = publish.epoch_dir(self.path, max_epoch, tag[0])
+        # a failed marker write publishes nothing; the staged fold copy
+        # is swept by the next __call__/_recover_fold
+        publish.write_json(
+            self._fold_marker(),
+            {"final": final, "superseded": dirs, "n_buckets": self.n_buckets},
         )
-        # marker on -> publish -> removals -> meta -> marker off: a crash
-        # anywhere is completed (or discarded, pre-publish) by
-        # _recover_fold; the meta write inside the bracket means a
-        # rebucket-fold's new count can never silently lag the layout
-        marker = self._fold_marker()
-        tmp = marker + ".tmp"
-        try:
-            with open(tmp, "w") as f:
-                json.dump(
-                    {"final": final, "superseded": dirs, "n_buckets": self.n_buckets},
-                    f,
-                )
-            os.replace(tmp, marker)
-        except Exception:
-            # same .tmp-leak rule as the overwrite channel's rebucket
-            # (ADVICE r18); the staged fold copy is swept by the next
-            # __call__/_recover_fold's _staging_ sweep
-            try:
-                os.unlink(tmp)
-            except OSError:
-                pass
-            raise
-        os.rename(staging, final)
-        for d in dirs:  # superseded (final is not in the given list)
-            shutil.rmtree(d, ignore_errors=True)
-        self._write_meta()
-        os.unlink(marker)
+        publish.publish_dir(staging, final)
+        self._recover_fold()
 
     def compact(self) -> None:
         """Fold the accumulated epoch dirs into ONE (the keyed dedup runs
@@ -989,16 +713,12 @@ class KeyedAppendSink(KeyedUpsertSink):
         dirs = self._epoch_dirs()
         old_n = self.n_buckets
         self.n_buckets = n_buckets  # adopt first: _bucket_expr uses it
-        if not dirs:
-            # empty table: restore on a failed meta write (atomic, so a
-            # raise means disk meta still records old_n; review r18)
-            try:
-                self._write_meta()
-            except Exception:
-                self.n_buckets = old_n
-                raise
-            return
         try:
+            if not dirs:
+                # empty table: the meta write is atomic, so a raise means
+                # disk meta still records old_n (restored below)
+                self._write_meta()
+                return
             self._fold_epochs(dirs, "rebucket")
         except Exception:
             # Restore the old count ONLY if the fold never published —
@@ -1006,24 +726,13 @@ class KeyedAppendSink(KeyedUpsertSink):
             # meta / marker unlink), where the layout already IS the new
             # count and restoring old_n would make this live sink probe
             # and place under the wrong modulus. Publish state is in the
-            # marker; _recover_fold then completes-or-discards in-process
-            # (it matches on the marker's count, which is the current
-            # self.n_buckets by construction).
-            marker = self._fold_marker()
-            if not os.path.exists(marker):
-                # failed before the marker landed: nothing publishable
-                # was staged, the old layout is intact
-                self.n_buckets = old_n
-                raise
+            # marker (none: failed before it landed, the old layout is
+            # intact); _recover_fold then completes-or-discards
+            # in-process (it matches on the marker's count, which is the
+            # current self.n_buckets by construction).
             try:
-                published = os.path.isdir(
-                    _load_marker(
-                        marker,
-                        {"final": str, "superseded": list, "n_buckets": int},
-                        root=self.path,
-                    )["final"]
-                )
-            except (OSError, ValueError) as marker_err:
+                pending = publish.pending(self._fold_marker(), "fold", self.path)
+            except RuntimeError as marker_err:
                 # Unreadable marker = UNKNOWN publish state (ADVICE r17):
                 # the fold may well have published, so restoring old_n
                 # could put this live sink on the wrong modulus — keep
@@ -1032,15 +741,17 @@ class KeyedAppendSink(KeyedUpsertSink):
                 # recovery once the marker is repaired or removed.
                 raise RuntimeError(
                     f"rebucket at {self.path} failed and its fold marker "
-                    f"is unreadable ({marker_err!r}): publish state "
-                    "unknown — keeping the new bucket count; repair or "
-                    f"remove {marker} and reconstruct the sink"
+                    f"is unreadable ({marker_err}): publish state unknown "
+                    "— keeping the new bucket count; repair or remove the "
+                    "marker and reconstruct the sink"
                 ) from marker_err
+            published = pending is not None and os.path.isdir(pending["final"])
             # recovery completes-or-discards in-process; a failure inside
             # it chains onto the fold error rather than masking it, and
             # the count restore still happens for an unpublished fold
             try:
-                self._recover_fold()
+                if pending is not None:
+                    self._recover_fold()
             finally:
                 if not published:
                     self.n_buckets = old_n
@@ -1092,8 +803,7 @@ class MergeAggSink(KeyedUpsertSink):
         bucket_cols: list[str] | None = None,
     ):
         super().__init__(
-            spark, path, key_cols, order_col=None,
-            n_buckets=n_buckets, bucket_cols=bucket_cols,
+            spark, path, key_cols, n_buckets=n_buckets, bucket_cols=bucket_cols
         )
         self.agg_exprs = agg_exprs
         self._idem_checked = False
@@ -1215,7 +925,7 @@ class EpochLedgerMergeAggSink(MergeAggSink):
     The ledger costs NOTHING extra and cannot desynchronize from the
     data, because it rides the parent's existing atomicity unit: every
     epoch writes into a version directory named ``v{epoch_id}_{uuid}``
-    and each dirty bucket's symlink swaps to it atomically (os.replace)
+    and each dirty bucket's symlink swaps to it atomically (publish.flip_all)
     — so ``realpath(link)`` already records, per bucket, the epoch that
     last rewrote it. `_apply_buckets` parses that epoch and drops any
     bucket with ledger >= epoch_id from the rewrite set. Recovery walk:
@@ -1241,18 +951,18 @@ class EpochLedgerMergeAggSink(MergeAggSink):
 
     requires_idempotent = False
 
-    @staticmethod
-    def _ledger_epoch(bucket_path: str) -> int:
-        """Last-applied epoch of a live bucket, parsed from its version
-        directory (``.../v{epoch}_{uuid}/_bucket={b}``). rebucket()
-        preserves the scheme (its folded dir is ``v{max ledger}_*`` on a
-        quiesced table), so the ledger and its lineage guard survive a
-        re-shard."""
-        return KeyedUpsertSink._version_epoch(bucket_path)
-
     def _apply_buckets(
         self, dirty: list[int], live: dict[int, str], epoch_id: int
     ) -> list[int]:
+        # each live bucket's last-applied epoch, parsed from its version
+        # dir name (rebucket() keeps the scheme: its folded dir is
+        # v{max ledger}_* on a quiesced table, so the ledger and this
+        # guard survive a re-shard)
+        ledger = {
+            b: publish.epoch_of(os.path.dirname(live[b]))
+            for b in dirty
+            if b in live
+        }
         # Lineage guard: on a valid checkpoint lineage the only epoch
         # that can re-deliver is the last UNCOMMITTED one, so every
         # delivered epoch satisfies epoch_id >= ledger[b] for all
@@ -1260,11 +970,7 @@ class EpochLedgerMergeAggSink(MergeAggSink):
         # ledger[b] > epoch_id therefore proves a NEW checkpoint (epoch
         # ids restarted) writing into a STALE table — silently skipping
         # every bucket would be data loss, so raise instead of merging.
-        behind = {
-            b: self._ledger_epoch(live[b])
-            for b in dirty
-            if b in live and self._ledger_epoch(live[b]) > epoch_id
-        }
+        behind = {b: e for b, e in ledger.items() if e > epoch_id}
         if behind:
             raise ValueError(
                 f"EpochLedgerMergeAggSink lineage mismatch at {self.path}: "
@@ -1274,18 +980,14 @@ class EpochLedgerMergeAggSink(MergeAggSink):
                 "so a fresh checkpoint requires a fresh sink path (the "
                 "same rule as any epoch-id-keyed MERGE dedup)."
             )
-        return [
-            b
-            for b in dirty
-            if b not in live or self._ledger_epoch(live[b]) < epoch_id
-        ]
+        return [b for b in dirty if b not in ledger or ledger[b] < epoch_id]
 
 
 class EventTimeHighWatermark:
     """Driver-side event-time high watermark for a foreachBatch fan-out:
     tracks max(event ts) over the epochs seen, persisted to a one-line
-    json after every update (atomic os.replace). max() is idempotent, so
-    an epoch replay after recovery converges — and the persisted file is
+    file after every update (publish.write_atomic). max() is idempotent,
+    so an epoch replay after recovery converges — and the persisted file is
     the restart story (the engine-side fold operators get the same
     watermark from the checkpoint WAL). Readers use it to state which
     days are CLOSED (day end <= high watermark), the same emission
@@ -1306,10 +1008,7 @@ class EventTimeHighWatermark:
         if hi is None or (self.max_us is not None and hi <= self.max_us):
             return
         self.max_us = hi
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(hi))
-        os.replace(tmp, self.path)
+        publish.write_atomic(self.path, str(hi))
 
     def closed_day(self, day_col: str = "day") -> "F.Column":
         """Predicate: this day's end has been passed by the watermark."""
@@ -1463,38 +1162,11 @@ def jdbc_upsert_writer(
     return write
 
 
-def console_sink(df: DataFrame, mode: str = "append"):
-    """print() — PrintSinkDemo.java:21-39."""
-    return df.writeStream.outputMode(mode).format("console").start()
-
-
 def memory_sink(df: DataFrame, name: str, mode: str = "append"):
     """Queryable-state analog (SURVEY §2.9): QueryableStateDemo.java:
     27-67 exposes live keyed state for point lookups; the Spark
     equivalent is a memory sink queryable via spark.sql(name)."""
     return df.writeStream.outputMode(mode).format("memory").queryName(name).start()
-
-
-def rolling_file_sink(
-    df: DataFrame,
-    path: str,
-    checkpoint: str,
-    fmt: str = "parquet",
-    max_records_per_file: int = 1_000_000,
-    trigger_seconds: int = 30,
-):
-    """StreamingFileSink.forRowFormat + rolling policy (30s rollover /
-    100MB parts) — StreamingFileSinkDemo.java:26-40. Exactly-once via
-    the sink manifest + checkpoint WAL; the rolling policy maps to the
-    trigger interval + maxRecordsPerFile."""
-    return (
-        df.writeStream.format(fmt)
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .option("maxRecordsPerFile", max_records_per_file)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
 
 
 def socket_writer(host: str, port: int, column: str = "value"):

@@ -1723,3 +1723,76 @@ def test_rebucket_marker_write_failure_leaves_no_tmp(spark, tmp_path, monkeypatc
     assert not any(e.endswith(".tmp") for e in os.listdir(ap))
     assert len(asink._epoch_dirs()) == 2  # fold never published
     assert asink.read().count() == 32
+
+
+@pytest.mark.parametrize("cls_name", ["KeyedUpsertSink", "KeyedAppendSink"])
+@pytest.mark.parametrize(
+    "meta",
+    ["[1]", "{}", '{"n_buckets": true}', '{"n_buckets": 0}'],
+    ids=["non_object", "missing_field", "bool", "zero"],
+)
+def test_bad_table_meta_is_refused_naming_the_file(spark, tmp_path, cls_name, meta):
+    """The bucket-count meta gets the markers' shape check: a meta that
+    is not an object with an integer n_buckets >= 1 raises an error
+    naming the file, never a bare KeyError/TypeError — and a bool must
+    not pass as the count 1 (the sinks here are built with 1 bucket)."""
+    from flink_tutorial_spark.sinks import foreach as fx
+
+    cls = getattr(fx, cls_name)
+    path = str(tmp_path / "t")
+    sink = cls(spark, path, key_cols=["k"], n_buckets=1)
+    with open(sink._meta_path(), "w") as f:
+        f.write(meta)
+    unreadable = r"table meta .*_table_meta\.json is unreadable"
+    with pytest.raises(ValueError, match=unreadable):
+        cls(spark, path, key_cols=["k"], n_buckets=1)
+
+
+def test_crash_at_link_flip_replays_and_prunes_orphan(spark, tmp_path, monkeypatch):
+    """Crash window between an overwrite epoch's version-dir write and
+    its first link flip: the version dir is on disk but no bucket points
+    at it. A replay of the epoch must give the uninterrupted answer, and
+    afterwards every dirty bucket keeps only its live and N-1 dirs on
+    disk — the orphaned version dir is pruned."""
+    from flink_tutorial_spark.sinks.foreach import KeyedUpsertSink
+
+    def df(rows):
+        return spark.createDataFrame(rows, "k string, v long")
+
+    e0 = df([(f"k{i}", i) for i in range(32)])
+    e1 = df([(f"k{i}", 100 + i) for i in range(8)])
+    ref = KeyedUpsertSink(spark, str(tmp_path / "ref"), key_cols=["k"], n_buckets=4)
+    ref(e0, 0)
+    ref(e1, 1)
+    want = sorted(tuple(r) for r in ref.read().collect())
+
+    path = str(tmp_path / "t")
+    sink = KeyedUpsertSink(spark, path, key_cols=["k"], n_buckets=4)
+    sink(e0, 0)
+    pre = dict(sink._live_bucket_paths())
+    vdirs_before = {e for e in os.listdir(path) if e.startswith("v")}
+
+    def crash(src, dst):
+        raise OSError("crash at link flip")
+
+    monkeypatch.setattr(os, "symlink", crash)
+    with pytest.raises(OSError, match="crash at link flip"):
+        sink(e1, 1)
+    monkeypatch.undo()
+    (orphan,) = {e for e in os.listdir(path) if e.startswith("v")} - vdirs_before
+    assert sink._live_bucket_paths() == pre  # nothing published
+
+    sink(e1, 1)  # the replay
+    assert sorted(tuple(r) for r in sink.read().collect()) == want
+    assert not os.path.exists(os.path.join(path, orphan))
+    live = sink._live_bucket_paths()
+    dirty = {b for b in live if live[b] != pre[b]}
+    assert dirty
+    for b in dirty:
+        on_disk = {
+            os.path.realpath(os.path.join(path, v, f"_bucket={b}"))
+            for v in os.listdir(path)
+            if v.startswith("v")
+            and os.path.isdir(os.path.join(path, v, f"_bucket={b}"))
+        }
+        assert on_disk == {live[b], pre[b]}
