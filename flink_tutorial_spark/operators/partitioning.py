@@ -27,14 +27,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def key_partition(df: DataFrame, *cols: str, n: int | None = None) -> DataFrame:
-    """keyBy — KeyedDemo.java:26-37: hash-partition by key columns.
-    Only needed to FORCE co-partitioning (e.g. before writing bucketed
-    data or reusing one shuffle across several aggs); groupBy/join
-    plan their own exchanges otherwise."""
-    return df.repartition(n, *[F.col(c) for c in cols]) if n else df.repartition(*[F.col(c) for c in cols])
-
-
 def rebalance(df: DataFrame, n: int) -> DataFrame:
     """shuffle()/rebalance() — RandomPartitioning.java:34,
     RebalancingPartitioning.java:33: round-robin redistribution (full
@@ -48,13 +40,6 @@ def rescale(df: DataFrame, n: int) -> DataFrame:
     return df.coalesce(n)
 
 
-def range_partition(df: DataFrame, n: int, *cols: str) -> DataFrame:
-    """repartitionByRange: sorted output files / range-pruned readers
-    (no direct reference analog; the Spark-native partitionCustom for
-    ordered routing)."""
-    return df.repartitionByRange(n, *[F.col(c) for c in cols])
-
-
 def salt_key(df: DataFrame, key_col: str, buckets: int, salted_col: str = "salted_key") -> DataFrame:
     """Two-stage skew salting — PageView.scala:48-59 hand-rolls a random
     key prefix then re-aggregates. Deterministic variant: salt by a hash
@@ -65,19 +50,6 @@ def salt_key(df: DataFrame, key_col: str, buckets: int, salted_col: str = "salte
         salted_col,
         F.concat_ws("#", F.col(key_col), (F.spark_partition_id() % buckets).cast("string")),
     )
-
-
-def write_bucketed(
-    df: DataFrame, table: str, key: str, n_buckets: int, sort: bool = True
-) -> None:
-    """Persist a table bucketed (and sorted) on its join key so every
-    later join/agg on that key is exchange-free (tests/test_bucketing.py
-    proves both shuffles drop). The 100 TB pattern: bucket fact tables
-    on their natural join key at ingest, pay the shuffle once."""
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, key)
-    if sort:
-        writer = writer.sortBy(key)
-    writer.saveAsTable(table)
 
 
 def two_stage_count(df: DataFrame, key_col: str, buckets: int = 16) -> DataFrame:

@@ -78,11 +78,3 @@ def dec_avg(col: str, scale: int = 4) -> F.Column:
 def dec_sum_sql(col: str, scale: int = 4) -> str:
     """DuckDB twin of dec_sum (bit-identical result)."""
     return f"CAST(round(sum(CAST({col} AS DECIMAL(18,6))), {scale}) AS DOUBLE)"
-
-
-def dec_avg_sql(col: str, scale: int = 4) -> str:
-    """DuckDB twin of dec_avg."""
-    return (
-        f"round(CAST(sum(CAST({col} AS DECIMAL(18,6))) AS DOUBLE)"
-        f" / count(*), {scale})"
-    )

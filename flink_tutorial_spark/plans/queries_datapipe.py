@@ -2255,8 +2255,8 @@ def profile_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     max per-key count, mean, exact interpolated p99, the heaviest
     key's share, and skew_ratio (max/mean). skew_ratio >> 1 is the
     signal to salt or let AQE split that join (the PV-skew salting
-    operator at operators/partitioning.py:83 is the fix this report
-    tells you to reach for).
+    operator `operators/partitioning.two_stage_count` is the fix this
+    report tells you to reach for).
 
     Scale shape: per table one partial-aggregable groupBy(key) then a
     single-row agg over the per-key counts; exact percentile sorts

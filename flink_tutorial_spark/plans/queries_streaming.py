@@ -31,6 +31,7 @@ from flink_tutorial_spark.streaming.run import (
     run_to_memory,
     run_to_memory_many,
     run_to_parquet,
+    stream_shuffle_partitions,
     stream_table,
 )
 
@@ -619,9 +620,8 @@ def streaming_late_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # processAllAvailable and their joins/windows read the live conf —
     # restoring right after start() would run every epoch's batch-side
     # work at the batch default (32), pure overhead on epoch-sized state
-    n_part = int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
+    spark.conf.set("spark.sql.shuffle.partitions", stream_shuffle_partitions())
     try:
         q = agg.writeStream.outputMode("update").foreachBatch(fb).start()
         q.processAllAvailable()
@@ -1113,7 +1113,7 @@ def streaming_adclick_blacklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev_chk, prev_shf = spark.conf.get(chk), spark.conf.get(shf)
     names = [f"mem_{_uuid.uuid4().hex[:12]}" for _ in range(2)]
     spark.conf.set(chk, "false")
-    spark.conf.set(shf, os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
+    spark.conf.set(shf, stream_shuffle_partitions())
     started = []
     try:
         for df, name in zip([agg, warn], names):

@@ -32,9 +32,13 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return normalize_event_time(df, name)
 
 
-def run_to_memory(
-    out: DataFrame, mode: str = "append", state_partitions: int | None = None
-) -> DataFrame:
+def stream_shuffle_partitions() -> str:
+    """The spark.sql.shuffle.partitions a stateful stream is started
+    with: SPARK_GRAFT_STREAM_SHUFFLE, default 8 (see run_to_memory)."""
+    return str(int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8")))
+
+
+def run_to_memory(out: DataFrame, mode: str = "append") -> DataFrame:
     """Execute a streaming DataFrame to completion via a memory sink;
     returns the materialized result. processAllAvailable() drains every
     micro-batch including the trailing no-data batch that fires event-
@@ -54,12 +58,10 @@ def run_to_memory(
     same session during that window inherits the pinned value. Fine for
     the single-threaded driver/test harness this serves; concurrent
     callers should use an isolated session (spark.newSession())."""
-    return run_to_memory_many([(out, mode)], state_partitions)[0]
+    return run_to_memory_many([(out, mode)])[0]
 
 
-def run_to_memory_many(
-    outs: list[tuple[DataFrame, str]], state_partitions: int | None = None
-) -> list[DataFrame]:
+def run_to_memory_many(outs: list[tuple[DataFrame, str]]) -> list[DataFrame]:
     """Execute several INDEPENDENT streaming DataFrames concurrently to
     completion via memory sinks; returns their materialized results in
     order. Start all, then drain all: wall time is max(pipelines), not
@@ -76,10 +78,9 @@ def run_to_memory_many(
     Same state-partition pinning contract as run_to_memory; the pin
     spans all the starts (single-threaded caller), restored after."""
     spark = outs[0][0].sparkSession
-    n = state_partitions or int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     names = [f"mem_{uuid.uuid4().hex[:12]}" for _ in outs]
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    spark.conf.set("spark.sql.shuffle.partitions", stream_shuffle_partitions())
     started = []
     try:
         try:
@@ -133,7 +134,6 @@ def fanout_sink_root(checkpoint: str) -> str:
 def run_fanout(
     out: DataFrame,
     sinks: list,
-    state_partitions: int | None = None,
     checkpoint: str | None = None,
     available_now: bool = False,
 ) -> None:
@@ -160,7 +160,6 @@ def run_fanout(
     — the ingest stays 1x either way. Same state-partition pinning
     contract as run_to_memory."""
     spark = out.sparkSession
-    n = state_partitions or int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
     prev = spark.conf.get("spark.sql.shuffle.partitions")
 
     def fan(batch_df: DataFrame, epoch_id: int) -> None:
@@ -171,7 +170,7 @@ def run_fanout(
         finally:
             batch_df.unpersist()
 
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    spark.conf.set("spark.sql.shuffle.partitions", stream_shuffle_partitions())
     try:
         w = out.writeStream.foreachBatch(fan)
         if checkpoint:
@@ -196,9 +195,7 @@ def run_fanout(
         q.stop()
 
 
-def run_to_parquet(
-    out: DataFrame, path: str, state_partitions: int | None = None
-) -> None:
+def run_to_parquet(out: DataFrame, path: str) -> None:
     """Execute a streaming DataFrame to completion into a parquet
     directory (append mode) — the durable-handoff half of a two-job
     topology (bucket job -> files-as-topic -> consumer job). Same
@@ -206,9 +203,8 @@ def run_to_parquet(
     run_to_memory; the pin stays for the WHOLE run because the file
     sink commits state per micro-batch."""
     spark = out.sparkSession
-    n = state_partitions or int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    spark.conf.set("spark.sql.shuffle.partitions", stream_shuffle_partitions())
     try:
         q = (
             out.writeStream.outputMode("append")

@@ -1,0 +1,31 @@
+"""tools/profile_layers.py: per-query run times, spread and layer
+numbers from perfbench's tracer, on one batch and one streaming query."""
+
+from __future__ import annotations
+
+import pytest
+
+from perfbench.trace import PASS_METRICS
+from tools.profile_layers import profile
+
+BATCH, STREAM = "tpch_q6_forecast_revenue", "streaming_running_sum"
+
+
+def test_profile_reports_runs_spread_and_every_layer(spark, sf_dir):
+    out = profile(spark, [BATCH, STREAM], sf_dir, runs=2)
+    assert sorted(out) == [STREAM, BATCH]
+    for name, rec in out.items():
+        assert "error" not in rec, (name, rec)
+        assert len(rec["runs"]) == 2
+        assert min(rec["runs"]) <= rec["median"] <= max(rec["runs"])
+        assert rec["iqr"] >= 0
+        assert list(rec["layers"]) == PASS_METRICS
+    assert out[STREAM]["layers"]["streaming.batches"] >= 1
+    assert out[BATCH]["layers"]["streaming.batches"] == 0
+
+
+def test_unmatched_pattern_raises_before_any_spark_call(sf_dir):
+    # no session at all: any Spark call before the check would raise
+    # AttributeError, not the ValueError naming the pattern
+    with pytest.raises(ValueError, match=r"'no_such_query_\*'"):
+        profile(None, [BATCH, "no_such_query_*"], sf_dir, runs=1)

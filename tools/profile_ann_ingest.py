@@ -6,7 +6,7 @@ SFs, streams it through streaming_ann_ingest's exact topology
 hash-bucketed BY the LSH bucket), and measures
 
 1. scan multiple: one streaming query, sum(numInputRows) == corpus
-   (the 1x-ingest claim, same listener protocol as profile_onepass.py);
+   (the 1x-ingest claim, counted by a StreamingQueryListener);
 2. incremental epoch cost: after the corpus has landed, a 1% APPEND
    batch (new vec_ids — the stable_value_buckets contract: an existing
    key's bucket never changes, so re-embeds arrive as new ids) vs
@@ -41,6 +41,7 @@ sys.path.insert(0, REPO)
 import numpy as np  # noqa: E402
 import pyarrow as pa  # noqa: E402
 import pyarrow.parquet as pq  # noqa: E402
+from pyspark.sql.streaming import StreamingQueryListener  # noqa: E402
 
 from flink_tutorial_spark.operators.dedup import scratch_dir  # noqa: E402
 from flink_tutorial_spark.operators.similarity import (  # noqa: E402
@@ -53,7 +54,30 @@ from flink_tutorial_spark.sinks.foreach import (  # noqa: E402
     KeyedUpsertSink,
 )
 from flink_tutorial_spark.streaming.run import run_fanout  # noqa: E402
-from tools.profile_onepass import Probe, drain  # noqa: E402
+
+
+class Probe(StreamingQueryListener):
+    """numInputRows of every progress event, keyed (query id, batch)."""
+
+    def __init__(self):
+        self.rows = {}
+
+    def onQueryProgress(self, event):
+        p = event.progress
+        self.rows[(str(p.id), p.batchId)] = p.numInputRows
+
+    def onQueryStarted(self, event):
+        pass
+
+    onQueryIdle = onQueryTerminated = onQueryStarted
+
+
+def drain(probe: Probe, deadline_s: float = 30.0) -> None:
+    """Wait until the asynchronous progress events stop arriving."""
+    last, deadline = None, time.time() + deadline_s
+    while time.time() < deadline and not (probe.rows and probe.rows == last):
+        last = dict(probe.rows)
+        time.sleep(1.0)
 
 
 def synth(
