@@ -28,10 +28,10 @@ from flink_tutorial_spark import plan_capture
 from flink_tutorial_spark.plans.catalog import query
 from flink_tutorial_spark.plans.parity import dec_sum
 from flink_tutorial_spark.streaming.run import (
+    run_streams,
     run_to_memory,
     run_to_memory_many,
     run_to_parquet,
-    stream_shuffle_partitions,
     stream_table,
 )
 
@@ -616,19 +616,7 @@ def streaming_late_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
             epoch_id,
         )
 
-    # pinned for the WHOLE run: foreachBatch bodies execute during
-    # processAllAvailable and their joins/windows read the live conf —
-    # restoring right after start() would run every epoch's batch-side
-    # work at the batch default (32), pure overhead on epoch-sized state
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", stream_shuffle_partitions())
-    try:
-        q = agg.writeStream.outputMode("update").foreachBatch(fb).start()
-        q.processAllAvailable()
-        plan_capture.capture_stream(q, "stream:late_topn")
-        q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    run_streams([agg.writeStream.outputMode("update").foreachBatch(fb)])
     return sink.read().select(
         "window_start", F.col("rank").cast("int").alias("rank"), "item_key", "cnt"
     )
@@ -1108,31 +1096,14 @@ def streaming_adclick_blacklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     # production one-pass foreachBatch fan-out.
     import uuid as _uuid
 
-    chk = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
-    shf = "spark.sql.shuffle.partitions"
-    prev_chk, prev_shf = spark.conf.get(chk), spark.conf.get(shf)
     names = [f"mem_{_uuid.uuid4().hex[:12]}" for _ in range(2)]
-    spark.conf.set(chk, "false")
-    spark.conf.set(shf, stream_shuffle_partitions())
-    started = []
-    try:
-        for df, name in zip([agg, warn], names):
-            started.append(
-                df.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .start()
-            )
-    finally:
-        spark.conf.set(chk, prev_chk)
-        spark.conf.set(shf, prev_shf)
-    try:
-        for q in started:
-            q.processAllAvailable()
-            plan_capture.capture_stream(q, f"stream:{q.name}")
-    finally:
-        for q in started:
-            q.stop()
+    run_streams(
+        [
+            df.writeStream.outputMode("append").format("memory").queryName(name)
+            for df, name in zip([agg, warn], names)
+        ],
+        confs={"spark.sql.streaming.statefulOperator.checkCorrectness.enabled": "false"},
+    )
     return spark.table(names[0]).unionByName(spark.table(names[1]))
 
 

@@ -1162,13 +1162,6 @@ def jdbc_upsert_writer(
     return write
 
 
-def memory_sink(df: DataFrame, name: str, mode: str = "append"):
-    """Queryable-state analog (SURVEY §2.9): QueryableStateDemo.java:
-    27-67 exposes live keyed state for point lookups; the Spark
-    equivalent is a memory sink queryable via spark.sql(name)."""
-    return df.writeStream.outputMode(mode).format("memory").queryName(name).start()
-
-
 def socket_writer(host: str, port: int, column: str = "value"):
     """writeToSocket(host, port, schema) — SocketSinkDemo.java:17
     (at-least-once). Returns a foreachBatch callable writing one line

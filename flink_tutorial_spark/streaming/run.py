@@ -12,6 +12,7 @@ import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter
 
 from flink_tutorial_spark import plan_capture
 from flink_tutorial_spark.session import normalize_event_time, parquet_schema
@@ -34,30 +35,80 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def stream_shuffle_partitions() -> str:
     """The spark.sql.shuffle.partitions a stateful stream is started
-    with: SPARK_GRAFT_STREAM_SHUFFLE, default 8 (see run_to_memory)."""
+    with: SPARK_GRAFT_STREAM_SHUFFLE, default 8 (see run_streams)."""
     return str(int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8")))
+
+
+def run_streams(
+    writers: list[DataStreamWriter],
+    *,
+    available_now: bool = False,
+    confs: dict[str, str] | None = None,
+) -> None:
+    """Run unstarted stream writers over bounded sources to completion:
+    pin the confs, start every writer, restore the confs, drain each
+    query, capture its executed plan, stop every query. Every bounded
+    stream in the engine runs through here.
+
+    Pin policy: spark.sql.shuffle.partitions is set to
+    stream_shuffle_partitions(), plus any extra `confs`, for the starts
+    only; the prior values come back once the starts are done or one
+    has failed. Stateful operators open one state store per shuffle
+    partition per micro-batch, so the count is sized to the state in
+    flight, not the batch default (32 stores on a bounded local stream
+    measured ~40% pure overhead); a deployment sizes it per job through
+    SPARK_GRAFT_STREAM_SHUFFLE. Probed on pyspark 4.1.2 with the conf
+    pinned to 8 and restored to 4 right after start():
+    - the state-store count is fixed at start: the state operator
+      reported numShufflePartitions=8 (the checkpoint keeps it too);
+    - a foreachBatch body's batch DataFrame lives in the stream's own
+      session, cloned at start, so work planned on it keeps 8; but
+      DataFrames the body builds from the caller's session (a sink
+      reading its own tables) read that session's LIVE conf, 4. That
+      share of sink work runs at the session default, with AQE
+      coalescing on.
+    NOT thread-safe: a query started concurrently in the same session
+    inherits the pin; concurrent callers should use spark.newSession().
+
+    Draining: `available_now` writers carry Trigger.AvailableNow and are
+    awaited to termination; otherwise processAllAvailable() drains every
+    micro-batch, including the trailing no-data batch that fires event-
+    time timers after the final watermark update. All writers start
+    before any drains, so independent pipelines overlap. A failed start,
+    drain or sink raises after every started query is stopped; a stop()
+    error neither skips the other stops nor masks the original error."""
+    spark = writers[0]._spark  # the session the writers start in
+    pins = {"spark.sql.shuffle.partitions": stream_shuffle_partitions(), **(confs or {})}
+    prev = {k: spark.conf.get(k) for k in pins}
+    started = []
+    try:
+        try:
+            for k, v in pins.items():
+                spark.conf.set(k, v)
+            for w in writers:
+                started.append(w.start())
+        finally:
+            for k, v in prev.items():
+                spark.conf.set(k, v)
+        for q in started:
+            if available_now:
+                q.awaitTermination()
+            else:
+                q.processAllAvailable()
+            # executed micro-batch plan, pre-truncation (a memory table
+            # scans an in-memory sink; the real plan lives here)
+            plan_capture.capture_stream(q, f"stream:{q.name or q.id}")
+    finally:
+        for q in started:
+            try:
+                q.stop()
+            except Exception:
+                pass
 
 
 def run_to_memory(out: DataFrame, mode: str = "append") -> DataFrame:
     """Execute a streaming DataFrame to completion via a memory sink;
-    returns the materialized result. processAllAvailable() drains every
-    micro-batch including the trailing no-data batch that fires event-
-    time timers after the final watermark update.
-
-    Stateful streaming operators open one state store per shuffle
-    partition per micro-batch, so the partition count should be sized
-    to the STATE VOLUME in flight, not the batch-shuffle default (32
-    stores on a bounded local stream measured ~40% pure overhead). The
-    count is pinned into the query's checkpoint at start, so it is set
-    for the duration of this query and restored after — a production
-    deployment sizes it once per query via SPARK_GRAFT_STREAM_SHUFFLE
-    (state stores scale out with executors; 100s at cluster scale).
-
-    NOT thread-safe: the pin temporarily mutates the session-global
-    spark.sql.shuffle.partitions, so a query started concurrently in the
-    same session during that window inherits the pinned value. Fine for
-    the single-threaded driver/test harness this serves; concurrent
-    callers should use an isolated session (spark.newSession())."""
+    returns the materialized result (run_streams owns the lifecycle)."""
     return run_to_memory_many([(out, mode)])[0]
 
 
@@ -66,48 +117,20 @@ def run_to_memory_many(outs: list[tuple[DataFrame, str]]) -> list[DataFrame]:
     completion via memory sinks; returns their materialized results in
     order. Start all, then drain all: wall time is max(pipelines), not
     the sum — the local stand-in for the production one-pass
-    foreachBatch fan-out (sinks/foreach.py), exactly the pattern
-    streaming_adclick_blacklist inlines. Sequential run_to_memory
-    calls on a bounded source pay each pipeline's full micro-batch
-    fixed cost back-to-back; measured on the two-pipeline sketch
-    twins at sf0.1: HLL 3.75 -> 2.84 s, KMV 3.69 -> 3.52 s (the
-    pipelines share the box's cores and the per-batch commit path, so
-    the overlap is far from 2x — the win is real but bounded by the
-    slower pipeline's own micro-batch sequencing).
-
-    Same state-partition pinning contract as run_to_memory; the pin
-    spans all the starts (single-threaded caller), restored after."""
-    spark = outs[0][0].sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    foreachBatch fan-out (run_fanout). Sequential run_to_memory calls
+    on a bounded source pay each pipeline's full micro-batch fixed cost
+    back-to-back; measured on the two-pipeline sketch twins at sf0.1:
+    HLL 3.75 -> 2.84 s, KMV 3.69 -> 3.52 s (the pipelines share the
+    box's cores and the per-batch commit path, so the overlap is far
+    from 2x)."""
     names = [f"mem_{uuid.uuid4().hex[:12]}" for _ in outs]
-    spark.conf.set("spark.sql.shuffle.partitions", stream_shuffle_partitions())
-    started = []
-    try:
-        try:
-            for (out, mode), name in zip(outs, names):
-                started.append(
-                    out.writeStream.outputMode(mode)
-                    .format("memory")
-                    .queryName(name)
-                    .start()
-                )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        for q in started:
-            q.processAllAvailable()
-            # executed micro-batch plan, pre-truncation (the memory
-            # table the caller gets scans an in-memory sink — the real
-            # plan lives here; see plan_capture)
-            plan_capture.capture_stream(q, f"stream:{q.name}")
-    finally:
-        # a failed Nth start (or a drain error) must not leak the
-        # already-running queries — and a stop() error on one query
-        # must not skip stopping the rest or mask the original failure
-        for q in started:
-            try:
-                q.stop()
-            except Exception:
-                pass
+    run_streams(
+        [
+            out.writeStream.outputMode(mode).format("memory").queryName(name)
+            for (out, mode), name in zip(outs, names)
+        ]
+    )
+    spark = outs[0][0].sparkSession
     return [spark.table(name) for name in names]
 
 
@@ -157,10 +180,7 @@ def run_fanout(
     halved ingest (SCALING.md r13 addendum measures both); when sink
     compute itself is the bottleneck, submit each sink's job from the
     fan function on a separate scheduler pool over the persisted batch
-    — the ingest stays 1x either way. Same state-partition pinning
-    contract as run_to_memory."""
-    spark = out.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    — the ingest stays 1x either way."""
 
     def fan(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.persist()
@@ -170,55 +190,28 @@ def run_fanout(
         finally:
             batch_df.unpersist()
 
-    spark.conf.set("spark.sql.shuffle.partitions", stream_shuffle_partitions())
-    try:
-        w = out.writeStream.foreachBatch(fan)
-        if checkpoint:
-            # durable offsets: restarting on the same checkpoint resumes
-            # after the last COMMITTED epoch (an uncommitted epoch
-            # re-delivers to every sink — the replay the sinks must
-            # tolerate); the bounded catalog queries run checkpoint-less
-            # on a temp dir
-            w = w.option("checkpointLocation", checkpoint)
-        if available_now:
-            w = w.trigger(availableNow=True)
-        q = w.start()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    try:
-        if available_now:
-            q.awaitTermination()
-        else:
-            q.processAllAvailable()
-        plan_capture.capture_stream(q, "stream:fanout")
-    finally:
-        q.stop()
+    w = out.writeStream.foreachBatch(fan)
+    if checkpoint:
+        # durable offsets: restarting on the same checkpoint resumes
+        # after the last COMMITTED epoch (an uncommitted epoch
+        # re-delivers to every sink — the replay the sinks must
+        # tolerate); the bounded catalog queries run checkpoint-less on
+        # a temp dir
+        w = w.option("checkpointLocation", checkpoint)
+    if available_now:
+        w = w.trigger(availableNow=True)
+    run_streams([w], available_now=available_now)
 
 
 def run_to_parquet(out: DataFrame, path: str) -> None:
     """Execute a streaming DataFrame to completion into a parquet
     directory (append mode) — the durable-handoff half of a two-job
-    topology (bucket job -> files-as-topic -> consumer job). Same
-    state-partition pinning contract and thread-safety caveat as
-    run_to_memory; the pin stays for the WHOLE run because the file
-    sink commits state per micro-batch."""
-    spark = out.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", stream_shuffle_partitions())
-    try:
-        q = (
+    topology (bucket job -> files-as-topic -> consumer job)."""
+    run_streams(
+        [
             out.writeStream.outputMode("append")
             .format("parquet")
             .option("path", path)
             .option("checkpointLocation", f"{path}_ckpt")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            plan_capture.capture_stream(q, "stream:parquet")
-        finally:
-            # mirror run_to_memory: a raise must not leak a live query
-            # still writing to the handoff while the conf is restored
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        ]
+    )

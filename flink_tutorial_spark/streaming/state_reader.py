@@ -8,7 +8,7 @@ any streaming query's keyed state is a queryable DataFrame straight out
 of its checkpoint — no extra serving process, and it composes with the
 whole SQL surface instead of a get(key) API.
 
-The memory-sink analog (sinks/foreach.memory_sink) remains the
+The memory-sink analog (streaming/run.run_to_memory) remains the
 low-latency in-session variant; this module is the durable one that
 works across processes — closer to the reference's out-of-process
 client."""

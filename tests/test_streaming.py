@@ -1820,7 +1820,8 @@ def test_kmv_day_fold_state_is_bounded(spark, sf_dir):
     rows, <= k longs each), NOT O(distinct users/day) — the VERDICT
     r11 #3 claim, asserted via the state-store metrics a
     StreamingQueryListener reports (the same evidence channel as
-    tools/profile_streaming_sf10.py). The old dedup-based pipeline
+    tools/profile_layers.py's streaming.state_rows and
+    streaming.state_mb). The old dedup-based pipeline
     kept one state row per distinct (day, shard, hv)."""
     import time
 
