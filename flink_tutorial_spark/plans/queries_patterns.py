@@ -1631,8 +1631,8 @@ def freq_cm_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the screen needs only the FIXED 2048-cell table
     (broadcast) against the item dictionary — at 100 TB the sketch
-    cells merge up from shards/streams (streaming_freq_cm maintains
-    the same cells live) and heavy-hitter screening never shuffles
+    cells merge up from shards/streams (streaming_freq_cm_onepass
+    maintains the same cells live) and heavy-hitter screening never shuffles
     exact per-key counts; the exact side here is the calibration
     reference, bounded by |items|."""
     from flink_tutorial_spark.operators.dedup import md5_long

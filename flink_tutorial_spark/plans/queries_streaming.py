@@ -28,9 +28,8 @@ from flink_tutorial_spark import plan_capture
 from flink_tutorial_spark.plans.catalog import query
 from flink_tutorial_spark.plans.parity import dec_sum
 from flink_tutorial_spark.streaming.run import (
-    run_streams,
+    run_stream,
     run_to_memory,
-    run_to_memory_many,
     run_to_parquet,
     stream_table,
 )
@@ -616,7 +615,7 @@ def streaming_late_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
             epoch_id,
         )
 
-    run_streams([agg.writeStream.outputMode("update").foreachBatch(fb)])
+    run_stream(agg.writeStream.outputMode("update").foreachBatch(fb))
     return sink.read().select(
         "window_start", F.col("rank").cast("int").alias("rank"), "item_key", "cnt"
     )
@@ -976,8 +975,8 @@ def streaming_hot_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: shared by streaming_adclick_blacklist and its one-pass fan-out twin —
-#: identical filter, window rule, and closed-horizon predicate
+#: streaming_adclick_onepass: first-click filter per (user, ad, day),
+#: hourly per-ad counts over the closed horizon, one warning per crossing
 _ADCLICK_ORACLE = """
 WITH c AS (
     SELECT user_id,
@@ -1009,136 +1008,37 @@ FROM c WHERE rk = 2
 
 
 @query(
-    "streaming_adclick_blacklist",
-    oracle=_ADCLICK_ORACLE,
-    tags=("streaming", "cep", "business", "side-output", "fixture"),
-)
-def streaming_adclick_blacklist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ad-click blacklist LIVE with its side-output warning channel —
-    AdClickAnalysis.scala:39-123, the last flagship reference composite
-    that existed only as a batch query: a keyed stateful filter passes
-    each (user, ad, day)'s first MAX_CLICKS clicks, emits ONE warning
-    on the crossing click (OutputTag side output), suppresses the rest;
-    the surviving clicks then roll up in a tumbling 1-hour count per ad
-    (the reference's per-province window aggregate — this schema's ad
-    id is the dimension).
-
-    The MAIN path runs as a single live query with CHAINED stateful
-    operators — applyInPandasWithState -> re-watermark -> windowed agg
-    (Spark 3.5+/4.x multi-stateful support; the first chained-stateful
-    query in this catalog), exactly the topology the reference builds
-    with process() .keyBy() .window(). The WARNING channel is a second
-    live run of the same filter.
-
-    STATUS (r14): COMPARISON FIXTURE — streaming_adclick_onepass IS the
-    production fan-out this docstring used to promise (ONE filter pass,
-    ledger-merged hourly counts, warning append), retiring this query's
-    2x-scan shape as a deployment recommendation; this member is
-    retained as the catalog's only CHAINED-stateful topology proof
-    (applyInPandasWithState -> re-watermark -> windowed agg), which the
-    foreachBatch twin cannot replace. Closed-horizon contract: window rows emit when the
-    watermark (max main-channel ts, since the watermark node sits after
-    the channel filter) passes the window end; warnings are plain
-    append rows, all emitted. The daily reset is the day key dimension;
-    state GC'd by EventTimeTimeout — see
-    streaming/stateful.blacklist_filter."""
-    from flink_tutorial_spark.streaming.stateful import blacklist_filter
-
-    MAX_CLICKS = 1
-
-    def filtered():
-        events = stream_table(spark, sf_dir, "events")
-        clicks = (
-            events.where(F.col("event_type") == "click")
-            .withColumn("item_id", F.get_json_object("props", "$.k").cast("long"))
-            .withColumn("day", F.date_trunc("day", F.col("ts")))
-            .withWatermark("ts", "0 seconds")
-        )
-        return blacklist_filter(
-            clicks, "user_id", "item_id", "ts", "day", MAX_CLICKS
-        )
-
-    agg = (
-        filtered()
-        .where(F.col("channel") == "main")
-        .withWatermark("ts", "0 seconds")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "item_id")
-        .agg(F.count("*").alias("cnt"))
-        .select(
-            F.lit("main").alias("channel"),
-            F.col("w.end").alias("ts"),
-            "item_id",
-            F.lit(None).cast("long").alias("user_id"),
-            "cnt",
-        )
-    )
-    warn = (
-        filtered()
-        .where(F.col("channel") == "warning")
-        .select(
-            F.lit("warning").alias("channel"),
-            "ts",
-            "item_id",
-            "user_id",
-            F.lit(None).cast("long").alias("cnt"),
-        )
-    )
-    # Spark's global-watermark correctness check conservatively rejects
-    # ANY timer-bearing fmgws upstream of a stateful op (a timer branch
-    # COULD emit rows older than the watermark). Ours provably cannot:
-    # the EventTimeTimeout branch only GCs state (state.remove(), no
-    # yield), and data-branch rows carry their input rows' timestamps,
-    # which passed the source watermark's late filter in the same
-    # micro-batch. Safe to disable for these query starts. The two
-    # pipelines run CONCURRENTLY (start both, then drain both): they
-    # are independent sinks of the same source, so wall time is
-    # max(main, warning), not the sum — the local stand-in for the
-    # production one-pass foreachBatch fan-out.
-    import uuid as _uuid
-
-    names = [f"mem_{_uuid.uuid4().hex[:12]}" for _ in range(2)]
-    run_streams(
-        [
-            df.writeStream.outputMode("append").format("memory").queryName(name)
-            for df, name in zip([agg, warn], names)
-        ],
-        confs={"spark.sql.streaming.statefulOperator.checkCorrectness.enabled": "false"},
-    )
-    return spark.table(names[0]).unionByName(spark.table(names[1]))
-
-
-@query(
     "streaming_adclick_onepass",
     oracle=_ADCLICK_ORACLE,
     tags=("streaming", "cep", "business", "side-output"),
 )
 def streaming_adclick_onepass(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ad-click blacklist with its warning side-output as a ONE-PASS
-    foreachBatch fan-out — the reference's literal side-output topology
+    foreachBatch fan-out — the reference's side-output topology
     (SideOutputDemo.java:22-50, AdClickAnalysis.scala:39-123: ONE
-    keyed filter, two output channels) finally taking its production
-    shape here (VERDICT r13 next #2; the two-query twin's own docstring
-    called the fan-out the production form it didn't yet take). The
-    stateful blacklist filter runs ONCE per micro-batch; the persisted
-    batch fans to three sinks, retiring the twin's 2x source scan AND
-    2x filter compute:
+    keyed filter, two output channels). A keyed stateful filter
+    (streaming/stateful.blacklist_filter) passes each (user, ad, day)'s
+    first MAX_CLICKS clicks, tags ONE warning on the crossing click and
+    suppresses the rest; the daily reset is the day key dimension and
+    EventTimeTimeout GCs the state. The filter runs ONCE per
+    micro-batch; the persisted batch fans to two sinks:
 
     (a) main channel -> hourly per-ad counts, ADDITIVE, merged through
         EpochLedgerMergeAggSink (counts sum across epochs; the
-        per-bucket epoch ledger makes replays exact, where the
-        engine-side twin gets this from windowed-agg state);
+        per-bucket epoch ledger makes replays exact), plus the
+        main-channel event-time high watermark — the oracle's
+        closed-window predicate verbatim (a window emits once max
+        main-channel ts reaches its end);
     (b) warning channel -> parquet append, replay-deduped on read (one
-        warning per (user, ad, day) crossing — naturally keyed);
-    (c) main-channel event-time high watermark — the oracle's closed-
-        window predicate verbatim (the twin's watermark node also sits
-        post-filter on the main channel).
+        warning per (user, ad, day) crossing — naturally keyed).
 
-    Same oracle as streaming_adclick_blacklist: hash-exactness proves
-    ledger-merged hourly cells == engine windowed-agg rows, and the
-    warning channel byte-identical. Scale shape: one scan, one
-    stateful-filter pass, epoch cost ∝ dirty hour-buckets; state
-    bounded as in blacklist_filter (~2 days of active (user, ad)
-    pairs)."""
+    Hash-exactness against the oracle proves ledger-merged hourly cells
+    == the closed-window counts, and the warning channel byte-identical.
+    Scale shape: one scan, one stateful-filter pass, epoch cost ∝ dirty
+    hour-buckets; state bounded as in blacklist_filter (~2 days of
+    active (user, ad) pairs). The chained engine topology
+    (applyInPandasWithState -> re-watermark -> windowed agg) is pinned
+    by tests/test_streaming.py, not the catalog."""
     from flink_tutorial_spark.operators.dedup import scratch_dir
     from flink_tutorial_spark.sinks.foreach import (
         EpochLedgerMergeAggSink,
@@ -2199,8 +2099,8 @@ _CM_HASH_S = (
     "{i})), 1, 15)) AS BIGINT) % 512"
 )
 
-#: shared by streaming_freq_cm and its one-pass fan-out twin — identical
-#: cells and report, so the oracle is identical too
+#: streaming_freq_cm_onepass: 4x512 CM cells over the props item, each
+#: item's min-cell estimate reported against its exact count
 _CM_LIVE_ORACLE = f"""
 WITH ev AS (
   SELECT CAST(json_extract_string(props, '$.k') AS INT) AS item FROM events
@@ -2228,8 +2128,8 @@ FROM est e JOIN exact x USING (item)
 
 def _cm_cell(item_col: F.Column, i_col: F.Column) -> F.Column:
     """CM cell index — one md5-derived hash per (item, row) pair, the
-    Spark twin of the oracle's _CM_HASH_S rule (shared by the live,
-    one-pass, and batch CM queries so the cells cannot drift)."""
+    Spark twin of the oracle's _CM_HASH_S rule, so the cells cannot
+    drift between engine and oracle."""
     from flink_tutorial_spark.operators.dedup import md5_long
 
     return (
@@ -2241,8 +2141,7 @@ def _cm_cell(item_col: F.Column, i_col: F.Column) -> F.Column:
 
 
 def _cm_report(exact: DataFrame, cells: DataFrame, rows_df: DataFrame) -> DataFrame:
-    """est-vs-exact calibration report over converged CM cells — the
-    stage shared by streaming_freq_cm and the one-pass twin."""
+    """est-vs-exact calibration report over converged CM cells."""
     est = (
         exact.crossJoin(F.broadcast(rows_df))
         .withColumn("cell", _cm_cell(F.col("item"), F.col("row_i")))
@@ -2259,50 +2158,6 @@ def _cm_report(exact: DataFrame, cells: DataFrame, rows_df: DataFrame) -> DataFr
 
 
 @query(
-    "streaming_freq_cm",
-    oracle=_CM_LIVE_ORACLE,
-    tags=("streaming", "approx", "sketch", "measurement", "fixture"),
-)
-def streaming_freq_cm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-min sketch LIVE — the frequency sibling of
-    streaming_uv_kmv: two continuously-updated aggregation pipelines
-    (the streaming_anomaly two-pipeline topology) maintain (a) the 4x512
-    cell sums — counts are additive, so the CM cells are exactly what
-    update/complete-mode streaming aggregation maintains natively — and
-    (b) the exact per-item reference counts; the converged tables join
-    batch-side into the same est-vs-exact calibration report as the
-    batch twin, stated by the identical oracle.
-
-    Scale shape: pipeline (a)'s state is the FIXED 2048 cells however
-    large the stream gets — the sketch is why a 100 TB deployment keeps
-    only the cell table hot and reads exact counts from batch; the
-    4-row expansion is a broadcast stream-static crossJoin. The r14
-    one-pass twin streaming_freq_cm_onepass runs the same cells through
-    the epoch-ledger MERGE sink; this member stays as the engine-side
-    complete-mode convergence proof."""
-    events = stream_table(spark, sf_dir, "events")
-    ev = events.select(
-        F.get_json_object("props", "$.k").cast("int").alias("item")
-    ).where(F.col("item").isNotNull())
-
-    rows_df = spark.range(4).select(F.col("id").cast("int").alias("row_i"))
-    cells_stream = (
-        ev.crossJoin(F.broadcast(rows_df))
-        .groupBy("row_i", _cm_cell(F.col("item"), F.col("row_i")).alias("cell"))
-        .agg(F.count("*").cast("long").alias("c"))
-    )
-    exact_stream = ev.groupBy("item").agg(
-        F.count("*").cast("long").alias("exact_cnt")
-    )
-    # independent sinks of the same source: start both, drain both —
-    # wall is max(cells, exact), not the sum
-    cells, exact = run_to_memory_many(
-        [(cells_stream, "complete"), (exact_stream, "complete")]
-    )
-    return _cm_report(exact, cells, rows_df)
-
-
-@query(
     "streaming_freq_cm_onepass",
     oracle=_CM_LIVE_ORACLE,
     tags=("streaming", "approx", "sketch", "measurement"),
@@ -2315,9 +2170,8 @@ def streaming_freq_cm_onepass(spark: SparkSession, sf_dir: str) -> DataFrame:
     the additive merge replay-safe with a per-bucket last-applied-epoch
     ledger (the version-dir-encoded epoch each bucket's atomic symlink
     swap records — skip any bucket whose ledger already covers a
-    replayed epoch). Same oracle as streaming_freq_cm: hash-exactness
-    proves ledger-merged cells == engine complete-mode cells == the
-    batch pass.
+    replayed epoch). Hash-exactness against the oracle proves the
+    ledger-merged cells == the batch pass's cells.
 
     One streaming query, each micro-batch persisted once, two additive
     sinks fanned per batch (reference analog: the side-output fan-out,
@@ -2327,10 +2181,12 @@ def streaming_freq_cm_onepass(spark: SparkSession, sf_dir: str) -> DataFrame:
     (b) exact per-item counts — the calibration reference (dropped at
         100 TB), same ledger-MERGE machinery keyed by item.
 
-    Scale shape: epoch cost ∝ dirty buckets (cells: fixed 2048 keys);
-    the source is scanned once per batch (listener-pinned vs the
-    two-pipeline twin's 2x in tests/test_fanout.py); the ledger adds
-    zero writes — it rides the existing bucket-swap atomicity."""
+    Scale shape: the cell table is FIXED at 2048 keys however large the
+    stream gets, so a deployment keeps only it hot and reads exact
+    counts from batch; epoch cost ∝ dirty buckets; the source is
+    scanned once per batch (listener-pinned in tests/test_fanout.py);
+    the ledger adds zero writes — it rides the existing bucket-swap
+    atomicity."""
     from flink_tutorial_spark.operators.dedup import scratch_dir
     from flink_tutorial_spark.sinks.foreach import EpochLedgerMergeAggSink
     from flink_tutorial_spark.streaming.run import run_fanout
@@ -2386,44 +2242,9 @@ from flink_tutorial_spark.plans.queries_patterns import (  # noqa: E402
 
 
 @query(
-    "streaming_quantile_sketch",
-    # identical sketch rule as the batch twin -> identical oracle
-    oracle=(
-        f"WITH {_QSKETCH_BUCKETS_SQL}, {_QSKETCH_EST_SQL} "
-        "SELECT event_type, n, p50_est, p95_est, p99_est FROM est"
-    ),
-    tags=("streaming", "approx", "sketch", "fixture"),
-)
-def streaming_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quantile sketch LIVE — the quantile sibling of streaming_uv_kmv
-    and streaming_freq_cm, completing all three mergeable-sketch live
-    twins: a continuously-updated complete-mode aggregation maintains
-    the HDR-style log2 histogram cells (integer counts are exactly
-    what streaming aggregation state holds natively — order-
-    independence is what makes the sketch streamable at all, where
-    t-digest/KLL compactions would be arrival-order-dependent), and
-    the converged cell table feeds the same batch-side estimate as the
-    batch twin, stated by the identical oracle.
-
-    Scale shape: state is the FIXED <= groups x ~512 cell table
-    however long the stream runs — the 100 TB deployment keeps only
-    this table hot and answers any p50/p95/p99 ask from it; merging
-    parallel streams is the vector add value_quantile_sharded
-    proves. Since r13 the DEPLOYMENT shape is the closed-day fold twin
-    streaming_quantile_rolling (quantile_day_fold, uniform with the
-    KMV/HLL/EMA folds); this complete-mode member stays as the
-    global-convergence proof (converged table == batch aggregate,
-    open day included — something the closed-day fold cannot state)."""
-    events = stream_table(spark, sf_dir, "events")
-    cells_stream = qsketch_buckets(events)
-    cells = run_to_memory(cells_stream, "complete")
-    return qsketch_estimate(cells)
-
-
-@query(
     "streaming_quantile_onepass",
-    # identical cells + report as streaming_quantile_sketch -> identical
-    # oracle: ledger-merged cells must equal engine complete-mode cells
+    # identical sketch rule as the batch value_quantile_sketch ->
+    # identical oracle: ledger-merged cells must equal the batch cells
     oracle=(
         f"WITH {_QSKETCH_BUCKETS_SQL}, {_QSKETCH_EST_SQL} "
         "SELECT event_type, n, p50_est, p95_est, p99_est FROM est"
@@ -2440,8 +2261,10 @@ def streaming_quantile_onepass(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial (event_type, e, m) histogram cells via qsketch_buckets —
     the SAME bucketing rule as the batch family, so the cells cannot
     drift — and the ledger-MERGE sums them per key, replay-exact. The
-    converged table feeds qsketch_estimate, stated by the identical
-    oracle as streaming_quantile_sketch.
+    converged table feeds qsketch_estimate, stated by the batch
+    value_quantile_sketch's oracle. Integer cell counts are
+    order-independent, which is what makes the sketch streamable at
+    all (t-digest/KLL compactions would be arrival-order-dependent).
 
     Scale shape: cell table fixed at <= types x ~512 keys forever;
     epoch cost ∝ dirty buckets; one source scan per batch (the fan-out
@@ -2624,89 +2447,6 @@ _KMV_TRAILING_LIVE_ORACLE = _KMV_TRAILING_ORACLE.replace(
 assert _KMV_TRAILING_LIVE_ORACLE != _KMV_TRAILING_ORACLE
 
 
-@query(
-    "streaming_uv_kmv_trailing",
-    oracle=_KMV_TRAILING_LIVE_ORACLE,
-    tags=("streaming", "approx", "sketch", "window", "fixture"),
-)
-def streaming_uv_kmv_trailing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trailing-7-day UV from LIVE-maintained daily KMV cells — the
-    third proof of the grouped-KMV family (VERDICT r10 #4) and the
-    deployment shape of uv_stickiness's denominator. Pipeline (a) is a
-    GENUINELY fixed-state sketch builder (VERDICT r11 #3): one
-    64-cap distinct-insert k-min fold per (day, shard) —
-    streaming/stateful.kmv_day_fold — whose state is K longs per key
-    however many distinct users a day has (a KMV insert is duplicate-
-    idempotent, so the old groupBy-dedup stage and its O(distinct/day)
-    state were unnecessary). Each (day, shard) cell emits once, when
-    the watermark passes the day end; the per-day merge-truncate to 64
-    longs happens on the CONVERGED table (<= shards x 64 rows/day) —
-    any trailing window is then stated from cells alone, no raw
-    rescan. Pipeline (b) keeps the exact distinct (day, hv) pair table
-    — the calibration reference the oracle needs (dropped at 100 TB,
-    where cells ARE the product; pair state is the same bound
-    streaming_uv_daily pays). Both converged tables feed the shared
-    kmv_trailing_report, stated by the batch family's oracle restricted
-    to closed days — hash-exactness proves live fold cells == batch
-    cells == single-stage sketch.
-
-    STATUS (r14, decided per VERDICT r13 #5): COMPARISON FIXTURE, not a
-    deployment recommendation. streaming_uv_kmv_onepass is the
-    production shape (one source scan, MERGE sink); this two-pipeline
-    member is retained as the ENGINE-FOLD proof — the only query that
-    states the EventTimeTimeout state-store fold (kmv_day_fold) against
-    the same oracle, which the MERGE-sink twin cannot replace.
-
-    localCheckpoint on the converged tables: the report's broadcast
-    day-joins branch each table twice, and memory-sink plans cannot
-    self-join (Spark fails to de-conflict the sink's attribute refs —
-    the r10 drift-psi lesson); checkpointing cuts lineage to a
-    LogicalRDD, which is bounded here (cells: <= shards x 64/day;
-    pairs: calibration-only)."""
-    from pyspark.sql import Window
-
-    from flink_tutorial_spark.operators.dedup import md5_long
-    from flink_tutorial_spark.streaming.stateful import kmv_day_fold
-
-    K, S = _KMV_K, _KMV_SHARDS
-    events = stream_table(spark, sf_dir, "events")
-    hv = md5_long(F.concat(F.col("user_id").cast("string"), F.lit(":kmv")))
-    stream = (
-        events.where(F.col("event_type") == "view")
-        .select("ts", hv.alias("hv"))
-        .withColumn("shard", F.pmod("hv", F.lit(S)))
-        .withWatermark("ts", "0 seconds")
-    )
-    # pipeline (a): fixed-state k-min fold bucketed by shard, live
-    folded = kmv_day_fold(
-        stream.withColumn("day", F.date_trunc("day", "ts")),
-        "day", "shard", "hv", K,
-    )
-    # pipeline (b): exact distinct (day, hv) pairs — calibration only.
-    # The two pipelines are independent sinks of the same source, so
-    # they run CONCURRENTLY (start both, drain both): wall is
-    # max(a, b), not the sum.
-    pairs = stream.groupBy(F.window("ts", "1 day").alias("w"), "hv").agg(
-        F.count("*").alias("n")
-    )
-    folded_tbl, pairs_tbl = run_to_memory_many(
-        [(folded, "append"),
-         (pairs.select(F.col("w.start").alias("day"), "hv"), "append")]
-    )
-    shard_cells = plan_capture.checkpoint(folded_tbl, "ckpt:kmv_fold")
-    act = plan_capture.checkpoint(pairs_tbl, "ckpt:kmv_pairs")
-    # day-level merge-truncate on the converged cells (<= S x K rows/day;
-    # shards partition the hash space, so no cross-shard duplicates)
-    wd = Window.partitionBy("day")
-    cells = (
-        shard_cells.select("day", F.explode("kmins").alias("hv"))
-        .withColumn("rk", F.row_number().over(wd.orderBy("hv")))
-        .where(F.col("rk") <= K)
-        .select("day", "hv")
-    )
-    return kmv_trailing_report(act, cells)
-
-
 from flink_tutorial_spark.plans.catalog import REGISTRY as _REG  # noqa: E402
 
 #: the batch HLL oracle restricted to CLOSED days — a day's register
@@ -2723,108 +2463,17 @@ assert _HLL_LIVE_ORACLE != _REG["uv_hll_registers"].oracle
 
 
 @query(
-    "streaming_uv_hll_registers",
-    oracle=_HLL_LIVE_ORACLE,
-    tags=("streaming", "approx", "sketch", "fixture"),
-)
-def streaming_uv_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LIVE HyperLogLog registers — the streaming member that completes
-    the HLL family (batch registers + sharded merge passed r11; this is
-    the deployment shape): pipeline (a) maintains ONE 64-long register
-    vector per (day, shard) via an element-wise-max fold
-    (streaming/stateful.hll_day_fold — genuinely fixed state, max needs
-    no cap and no dedup, the same class as kmv_day_fold; sharding by
-    the same middle hash bits as uv_hll_sharded keeps any one state
-    partition from seeing a whole day), each vector emitting once when
-    the watermark passes its day end. The converged shard vectors
-    max-merge into the daily registers on the batch side — bit-exactly,
-    the uv_hll_sharded algebra. Pipeline (b) keeps the exact distinct
-    (day, hv) pairs — the calibration reference the oracle's uv_exact
-    column needs (dropped at 100 TB, where the registers ARE the
-    product). The merged registers feed the shared batch report
-    (_hll_report) with the grid restricted to the CLOSED days the live
-    table covers; the oracle is the batch family's, restricted
-    identically — hash-exactness proves live fold registers == batch
-    registers, including the closed-form estimate.
-
-    STATUS (r14, decided per VERDICT r13 #5): COMPARISON FIXTURE, not a
-    deployment recommendation. streaming_uv_hll_onepass is the
-    production shape (one source scan, greatest() MERGE sink); this
-    member is retained as the ENGINE-FOLD proof for hll_day_fold's
-    state-store max-fold, which the MERGE-sink twin cannot replace.
-
-    localCheckpoint: memory-sink plans cannot self-join (the r10
-    drift-psi lesson) and the report branches each table (grid +
-    fill; exact + join)."""
-    from flink_tutorial_spark.operators.dedup import md5_long
-    from flink_tutorial_spark.plans.queries_patterns import (
-        _HLL_M,
-        _hll_report,
-        hll_rank,
-        hll_reg,
-        hll_shard,
-    )
-    from flink_tutorial_spark.streaming.stateful import hll_day_fold
-
-    events = stream_table(spark, sf_dir, "events")
-    hv = md5_long(F.concat(F.col("user_id").cast("string"), F.lit(":hll")))
-    stream = (
-        events.where(F.col("event_type") == "view")
-        .select("ts", hv.alias("hv"))
-        .withColumn("day", F.date_trunc("day", "ts"))
-        .withWatermark("ts", "0 seconds")
-    )
-    # reg/rank/shard from the SAME column builders as the batch family
-    # (hll_reg/hll_rank/hll_shard) — the decomposition cannot drift
-    # hv is consumed by the reg/rank/shard builders here and not kept:
-    # the fold reads only (ts, day, reg, rank, shard) — guide §4.1
-    ranked = stream.select(
-        "ts",
-        "day",
-        hll_reg().alias("reg"),
-        hll_rank().alias("rank"),
-        hll_shard().alias("shard"),
-    )
-    # pipeline (a): fixed-state register fold bucketed by shard, live.
-    # pipeline (b): exact distinct (day, hv) pairs — calibration only.
-    # Independent sinks of the same source: run CONCURRENTLY (start
-    # both, drain both), wall is max(a, b), not the sum.
-    folded = hll_day_fold(ranked, "day", "shard", "reg", "rank", _HLL_M)
-    pairs = stream.groupBy(F.window("ts", "1 day").alias("w"), "hv").agg(
-        F.count("*").alias("n")
-    )
-    folded_tbl, pairs_tbl = run_to_memory_many(
-        [(folded, "append"),
-         (pairs.select(F.col("w.start").alias("day"), "hv"), "append")]
-    )
-    shard_regs = plan_capture.checkpoint(folded_tbl, "ckpt:hll_fold")
-    act = plan_capture.checkpoint(pairs_tbl, "ckpt:hll_pairs")
-    # shard vectors -> daily registers by element-wise max (batch side,
-    # <= shards x 64 rows/day)
-    regs = (
-        shard_regs.select("day", F.posexplode("regs").alias("reg", "m_j"))
-        .where(F.col("m_j") > 0)
-        .groupBy("day", "reg")
-        .agg(F.max("m_j").alias("m_j"))
-    )
-    closed_days = shard_regs.select("day").distinct()
-    return _hll_report(spark, act, regs, days=closed_days)
-
-
-@query(
     "streaming_uv_kmv_onepass",
     oracle=_KMV_TRAILING_LIVE_ORACLE,
     tags=("streaming", "approx", "sketch", "window"),
 )
 def streaming_uv_kmv_onepass(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-7-day UV from live daily KMV cells — the ONE-PASS
-    foreachBatch fan-out deployment shape (VERDICT r12 #1), same oracle
-    as streaming_uv_kmv_trailing. The two-pipeline twin starts two
-    independent queries over the same source (its run_to_memory_many
-    docstring calls itself the local stand-in); at 100 TB the per-
-    pipeline source rescans dominate, so the production topology is ONE
-    streaming query whose foreachBatch persists each micro-batch once
-    and fans it to every sink — the reference's side-output fan-out
+    foreachBatch fan-out deployment shape (VERDICT r12 #1) and the
+    deployment shape of uv_stickiness's denominator. At 100 TB per-
+    pipeline source rescans dominate, so the topology is ONE streaming
+    query whose foreachBatch persists each micro-batch once and fans it
+    to every sink — the reference's side-output fan-out
     (SideOutputDemo.java:22-50) on Spark's micro-batch geometry.
 
     Three sinks per batch, all replay-idempotent (the fan-out contract):
@@ -2833,31 +2482,34 @@ def streaming_uv_kmv_onepass(spark: SparkSession, sf_dir: str) -> DataFrame:
         distinct-union-truncate against the stored cell: associative,
         commutative, IDEMPOTENT — an epoch replay is a no-op), via
         MergeAggSink = the foreachBatch + MERGE INTO lakehouse shape.
-        Same fixed per-key state bound as the engine-side kmv_day_fold,
-        held in a keyed table instead of a state store.
+        State is K longs per (day, shard) key however many distinct
+        users a day has, held in a keyed table.
     (b) the exact distinct (day, hv) pairs — calibration reference only
-        (dropped at 100 TB), parquet append deduped on read.
+        (dropped at 100 TB, where the cells ARE the product), parquet
+        append deduped on read.
     (c) the event-time high watermark — max(ts), persisted per epoch;
-        read-side it states which days are CLOSED, the same emission
-        predicate the EventTimeTimeout folds prove ms-exactly
-        (day + 1 day <= max ts, the oracle's restriction verbatim).
+        read-side it states which days are CLOSED (day + 1 day <= max
+        ts, the oracle's restriction verbatim).
 
-    Hash-exactness against the SAME restricted oracle proves
-    one-pass-merged cells == engine-fold cells == batch cells; the
-    single source scan per batch is listener-verified in SCALING.md
-    ("one-pass fan-out": sum(numInputRows) is 1x the source rows vs the
-    twin's 2x)."""
+    The converged closed-day cells merge-truncate to 64 longs per day
+    and feed the shared kmv_trailing_report, so any trailing window is
+    stated from cells alone. Hash-exactness against the batch family's
+    oracle restricted to closed days proves one-pass-merged cells ==
+    batch cells; the single source scan per batch is listener-verified
+    in tests/test_fanout.py and SCALING.md ("one-pass fan-out":
+    sum(numInputRows) is 1x the source rows)."""
     act, cells = _kmv_onepass_tables(spark, sf_dir)
     return kmv_trailing_report(act, cells)
 
 
 def _kmv_onepass_tables(spark: SparkSession, sf_dir: str):
     """(act, cells) via the one-pass foreachBatch fan-out — the shared
-    front of streaming_uv_kmv_onepass and the live retention-curve
-    twin: one streaming query, three replay-idempotent sinks (KMV cell
-    MERGE / calibration pairs / persisted high watermark), converged
-    tables restricted to CLOSED days and shard cells merge-truncated
-    per day. See streaming_uv_kmv_onepass for the full contract."""
+    front of streaming_uv_kmv_onepass and
+    streaming_uv_kmv_retention_curve: one streaming query, three
+    replay-idempotent sinks (KMV cell MERGE / calibration pairs /
+    persisted high watermark), converged tables restricted to CLOSED
+    days and shard cells merge-truncated per day. See
+    streaming_uv_kmv_onepass for the full contract."""
     from flink_tutorial_spark.operators.dedup import scratch_dir, md5_long
     from flink_tutorial_spark.sinks.foreach import (
         EventTimeHighWatermark,
@@ -3068,10 +2720,11 @@ def streaming_dedup_registry_onepass(
 )
 def streaming_uv_hll_onepass(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LIVE HLL registers via the ONE-PASS foreachBatch fan-out — the
-    deployment-shape sibling of streaming_uv_hll_registers (same
-    restricted oracle) and the scalar-MERGE proof of the fan-out
-    machinery (streaming_uv_kmv_onepass proves the array merge): one
-    streaming query, each micro-batch persisted once and fanned to
+    deployment shape of the HLL family (batch uv_hll_registers'
+    oracle restricted to CLOSED days) and the scalar-MERGE proof of the
+    fan-out machinery (streaming_uv_kmv_onepass proves the array
+    merge): one streaming query, each micro-batch persisted once and
+    fanned to
     (a) the register MERGE — batch rows reduce to max(rank) per
         (day, shard, reg) map-side, then MERGE into the keyed cell
         table by max: the exact `WHEN MATCHED THEN UPDATE SET m =
@@ -3087,11 +2740,10 @@ def streaming_uv_hll_onepass(spark: SparkSession, sf_dir: str) -> DataFrame:
         predicate (day + 1 day <= max ts) is the oracle's restriction
         verbatim.
 
-    Sparse vs dense registers: the engine fold holds a dense 64-long
-    vector per (day, shard); the MERGE table holds only OBSERVED
+    Sparse registers: the MERGE table holds only OBSERVED
     (day, shard, reg) cells — the read-side grid fill (_hll_report)
-    supplies rank 0 for absent registers, so the two representations
-    state identical reports (hash-exactness proves it)."""
+    supplies rank 0 for absent registers, so the report equals the
+    batch family's dense-register one (hash-exactness proves it)."""
     from flink_tutorial_spark.operators.dedup import scratch_dir, md5_long
     from flink_tutorial_spark.plans.queries_patterns import (
         _hll_report,
@@ -3177,11 +2829,8 @@ assert _QUANTILE_ROLLING_LIVE_ORACLE != _REG["value_quantile_rolling"].oracle
 )
 def streaming_quantile_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling 7-day p50/p95/p99 from LIVE-maintained daily quantile
-    cells — the quantile member of the closed-day fold family (VERDICT
-    r12 #4), making the fold pattern uniform across all three mergeable
-    sketch types (KMV distinct, HLL distinct, HDR quantile; EMA shares
-    the contract). streaming_quantile_sketch keeps the complete-mode
-    convergence proof; THIS is the deployment shape: state is one
+    cells — the catalog's closed-day EventTimeTimeout fold (VERDICT
+    r12 #4; EMA shares the contract). State is one
     sparse cell vector per (day, event_type, shard) — bounded by
     32 * octaves (~512 cells) however many events a day has — emitted
     once when the watermark passes the day end
@@ -3190,7 +2839,7 @@ def streaming_quantile_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     group on the converged table: value_quantile_rolling's algebra fed
     by live cells instead of a batch pass, stated by its oracle
     restricted to closed days. No calibration pipeline is needed — the
-    oracle is pure sketch — so this is a SINGLE-pipeline live twin.
+    oracle is pure sketch — so this is a SINGLE-pipeline live query.
 
     Bucket coordinates come from the shared row-level builder
     (qsketch_rows), sharding from value_quantile_sharded's key

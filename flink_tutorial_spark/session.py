@@ -109,9 +109,9 @@ def ensure_runtime_confs(spark: SparkSession) -> None:
     call — i.e. inside every TIMED query region, several times per
     query — and each conf.set is a py4j round-trip. After the first
     pass the session is ours and those confs stay; re-applying them per
-    table load is pure driver overhead. (streaming/run.run_streams pins
-    a different shuffle-partition count around stream starts, AFTER this
-    ran once, and restores it when the starts are done; the ==200 guard
+    table load is pure driver overhead. (streaming/run.run_stream pins
+    a different shuffle-partition count around a stream's start, AFTER
+    this ran once, and restores it when the start is done; the ==200 guard
     below only targets never-touched external sessions.)
 
     The two CORRECTNESS confs (UTC timezone, nanosAsLong) are

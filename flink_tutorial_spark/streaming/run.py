@@ -35,30 +35,25 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def stream_shuffle_partitions() -> str:
     """The spark.sql.shuffle.partitions a stateful stream is started
-    with: SPARK_GRAFT_STREAM_SHUFFLE, default 8 (see run_streams)."""
+    with: SPARK_GRAFT_STREAM_SHUFFLE, default 8 (see run_stream)."""
     return str(int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8")))
 
 
-def run_streams(
-    writers: list[DataStreamWriter],
-    *,
-    available_now: bool = False,
-    confs: dict[str, str] | None = None,
-) -> None:
-    """Run unstarted stream writers over bounded sources to completion:
-    pin the confs, start every writer, restore the confs, drain each
-    query, capture its executed plan, stop every query. Every bounded
-    stream in the engine runs through here.
+def run_stream(writer: DataStreamWriter, *, available_now: bool = False) -> None:
+    """Run an unstarted stream writer over a bounded source to
+    completion: pin the shuffle width, start, restore it, drain the
+    query, capture its executed plan, stop. Every bounded stream in the
+    engine runs through here.
 
     Pin policy: spark.sql.shuffle.partitions is set to
-    stream_shuffle_partitions(), plus any extra `confs`, for the starts
-    only; the prior values come back once the starts are done or one
-    has failed. Stateful operators open one state store per shuffle
-    partition per micro-batch, so the count is sized to the state in
-    flight, not the batch default (32 stores on a bounded local stream
-    measured ~40% pure overhead); a deployment sizes it per job through
-    SPARK_GRAFT_STREAM_SHUFFLE. Probed on pyspark 4.1.2 with the conf
-    pinned to 8 and restored to 4 right after start():
+    stream_shuffle_partitions() for the start only; the prior value
+    comes back once the start is done or has failed. Stateful operators
+    open one state store per shuffle partition per micro-batch, so the
+    count is sized to the state in flight, not the batch default (32
+    stores on a bounded local stream measured ~40% pure overhead); a
+    deployment sizes it per job through SPARK_GRAFT_STREAM_SHUFFLE.
+    Probed on pyspark 4.1.2 with the conf pinned to 8 and restored to 4
+    right after start():
     - the state-store count is fixed at start: the state operator
       reported numShufflePartitions=8 (the checkpoint keeps it too);
     - a foreachBatch body's batch DataFrame lives in the stream's own
@@ -70,68 +65,41 @@ def run_streams(
     NOT thread-safe: a query started concurrently in the same session
     inherits the pin; concurrent callers should use spark.newSession().
 
-    Draining: `available_now` writers carry Trigger.AvailableNow and are
-    awaited to termination; otherwise processAllAvailable() drains every
-    micro-batch, including the trailing no-data batch that fires event-
-    time timers after the final watermark update. All writers start
-    before any drains, so independent pipelines overlap. A failed start,
-    drain or sink raises after every started query is stopped; a stop()
-    error neither skips the other stops nor masks the original error."""
-    spark = writers[0]._spark  # the session the writers start in
-    pins = {"spark.sql.shuffle.partitions": stream_shuffle_partitions(), **(confs or {})}
-    prev = {k: spark.conf.get(k) for k in pins}
-    started = []
+    Draining: an `available_now` writer carries Trigger.AvailableNow and
+    is awaited to termination; otherwise processAllAvailable() drains
+    every micro-batch, including the trailing no-data batch that fires
+    event-time timers after the final watermark update. A failed start,
+    drain or sink raises with the query stopped; a stop() error does
+    not mask the original error."""
+    spark = writer._spark  # the session the writer starts in
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, stream_shuffle_partitions())
     try:
-        try:
-            for k, v in pins.items():
-                spark.conf.set(k, v)
-            for w in writers:
-                started.append(w.start())
-        finally:
-            for k, v in prev.items():
-                spark.conf.set(k, v)
-        for q in started:
-            if available_now:
-                q.awaitTermination()
-            else:
-                q.processAllAvailable()
-            # executed micro-batch plan, pre-truncation (a memory table
-            # scans an in-memory sink; the real plan lives here)
-            plan_capture.capture_stream(q, f"stream:{q.name or q.id}")
+        q = writer.start()
     finally:
-        for q in started:
-            try:
-                q.stop()
-            except Exception:
-                pass
+        spark.conf.set(key, prev)
+    try:
+        if available_now:
+            q.awaitTermination()
+        else:
+            q.processAllAvailable()
+        # executed micro-batch plan, pre-truncation (a memory table
+        # scans an in-memory sink; the real plan lives here)
+        plan_capture.capture_stream(q, f"stream:{q.name or q.id}")
+    finally:
+        try:
+            q.stop()
+        except Exception:
+            pass
 
 
 def run_to_memory(out: DataFrame, mode: str = "append") -> DataFrame:
     """Execute a streaming DataFrame to completion via a memory sink;
-    returns the materialized result (run_streams owns the lifecycle)."""
-    return run_to_memory_many([(out, mode)])[0]
-
-
-def run_to_memory_many(outs: list[tuple[DataFrame, str]]) -> list[DataFrame]:
-    """Execute several INDEPENDENT streaming DataFrames concurrently to
-    completion via memory sinks; returns their materialized results in
-    order. Start all, then drain all: wall time is max(pipelines), not
-    the sum — the local stand-in for the production one-pass
-    foreachBatch fan-out (run_fanout). Sequential run_to_memory calls
-    on a bounded source pay each pipeline's full micro-batch fixed cost
-    back-to-back; measured on the two-pipeline sketch twins at sf0.1:
-    HLL 3.75 -> 2.84 s, KMV 3.69 -> 3.52 s (the pipelines share the
-    box's cores and the per-batch commit path, so the overlap is far
-    from 2x)."""
-    names = [f"mem_{uuid.uuid4().hex[:12]}" for _ in outs]
-    run_streams(
-        [
-            out.writeStream.outputMode(mode).format("memory").queryName(name)
-            for (out, mode), name in zip(outs, names)
-        ]
-    )
-    spark = outs[0][0].sparkSession
-    return [spark.table(name) for name in names]
+    returns the materialized result (run_stream owns the lifecycle)."""
+    name = f"mem_{uuid.uuid4().hex[:12]}"
+    run_stream(out.writeStream.outputMode(mode).format("memory").queryName(name))
+    return out.sparkSession.table(name)
 
 
 def fanout_sink_root(checkpoint: str) -> str:
@@ -161,16 +129,17 @@ def run_fanout(
     available_now: bool = False,
 ) -> None:
     """Execute ONE streaming query whose foreachBatch fans every
-    micro-batch to several sinks — the production one-pass fan-out
-    run_to_memory_many stands in for locally (the reference's analog is
-    the side-output fan-out, SideOutputDemo.java:22-50). Each `sink` is
+    micro-batch to several sinks — the production one-pass fan-out (the
+    reference's analog is the side-output fan-out,
+    SideOutputDemo.java:22-50). Each `sink` is
     a foreachBatch callable `(batch_df, epoch_id) -> None`; the batch
     is persisted ONCE before the first sink and unpersisted after the
     last, so every sink reads the cached micro-batch instead of
     re-scanning the source. At 100 TB this is the difference between N
-    source scans and one: the N-pipeline shape re-reads the topic per
-    pipeline, this shape reads it once per batch (listener-verified in
-    SCALING.md "one-pass fan-out").
+    source scans and one: a pipeline per sink would re-read the topic
+    per pipeline and pay the per-batch coordination cost per pipeline,
+    this shape reads it once per batch (listener-verified in
+    tests/test_fanout.py and SCALING.md "one-pass fan-out").
 
     Sinks run sequentially on the driver inside the batch; a sink
     raising fails the query (at-least-once per sink: on recovery the
@@ -200,18 +169,16 @@ def run_fanout(
         w = w.option("checkpointLocation", checkpoint)
     if available_now:
         w = w.trigger(availableNow=True)
-    run_streams([w], available_now=available_now)
+    run_stream(w, available_now=available_now)
 
 
 def run_to_parquet(out: DataFrame, path: str) -> None:
     """Execute a streaming DataFrame to completion into a parquet
     directory (append mode) — the durable-handoff half of a two-job
     topology (bucket job -> files-as-topic -> consumer job)."""
-    run_streams(
-        [
-            out.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", path)
-            .option("checkpointLocation", f"{path}_ckpt")
-        ]
+    run_stream(
+        out.writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", path)
+        .option("checkpointLocation", f"{path}_ckpt")
     )

@@ -977,103 +977,26 @@ def ema_fold(
     )
 
 
-KMV_FOLD_OUT = StructType(
-    [
-        StructField("day", TimestampType()),
-        StructField("shard", LongType()),
-        StructField("kmins", ArrayType(LongType())),
-    ]
-)
-_KMV_FOLD_STATE = StructType(
-    [
-        StructField("days", ArrayType(LongType())),  # us, one per kept hash
-        StructField("kmins", ArrayType(LongType())),  # parallel to days
-    ]
-)
-
-#: shared closed-day emission rule for the shard-keyed day-folds below:
-#: Spark fires event-time timers on `timeoutTimestamp < watermark`
-#: (both ms-floored), so a day's cell emits iff day_end_ms - 1 < wm_ms
-#: iff max_ts >= day_end — the oracles' `day + INTERVAL 1 DAY <=
-#: max(ts)` predicate exactly. Each fold checks that predicate per
-#: entry against state.getCurrentWatermarkMs() on every invocation
-#: (data or timeout) and arms its bucket timer at the min open
-#: day_end_ms - 1 (buckets.save), so a bucket without data emits in
-#: the first no-data batch whose watermark passes that day's end.
+#: closed-day emission rule of the shard-keyed day-fold below. Spark
+#: fires event-time timers on `timeoutTimestamp < watermark`, both in
+#: ms; with delay 0 the watermark is wm_ms = floor(max_ts_us / 1000).
+#: A day end is a whole ms (day_end_ms = day_end_us / 1000 exactly),
+#: so a day's cell emits iff day_end_ms - 1 < wm_ms iff
+#: day_end_ms <= floor(max_ts_us / 1000) iff day_end_us <= max_ts_us:
+#: the oracles' `day + INTERVAL 1 DAY <= max(ts)` predicate exactly,
+#: with no ms-rounding gap (a row at 23:59:59.999 leaves the day open,
+#: one at 00:00 of the next day closes it). The fold checks that
+#: predicate per entry against state.getCurrentWatermarkMs() on every
+#: invocation (data or timeout) and arms its bucket timer at the min
+#: open day_end_ms - 1 (buckets.save), so a bucket without data emits
+#: in the first no-data batch whose watermark passes that day's end.
+#: After a day closes, any further row of it is < watermark and
+#: dropped by the late filter, so a closed cell never reopens.
 _DAY_US = 86_400_000_000
 
 
 def _day_end_ms(day_us):
     return (day_us + _DAY_US) // 1_000
-
-
-def kmv_day_fold(
-    df: DataFrame, day_col: str, shard_col: str, hv_col: str, k: int
-) -> DataFrame:
-    """Bounded KMV distinct-insert fold, bucketed by shard — the live
-    sketch builder for streaming_uv_kmv_trailing (VERDICT r11 #3). The
-    reference's UV bitmap/state pattern (UniqueVisitorWithBloom.scala:76-120)
-    keyed by window, re-expressed as a FIXED-STATE k-min fold.
-
-    Keyed by the upstream hash shard alone (buckets.py): keying by
-    (day, shard) made 480 near-singleton dispatches at sf0.1. State per
-    bucket: two parallel arrays (days, kmins) holding, for each OPEN
-    day, the k smallest DISTINCT hashes seen so far — a KMV insert is
-    duplicate-idempotent, so no dedup stage is needed upstream and
-    state is <= k longs per open day however many distinct users
-    arrive. The fold is one lexsort + run-length dedup + per-day
-    rank-truncate over (state + batch) per bucket per batch.
-
-    Emission is the closed-day contract (see _DAY_US note): a day's
-    cell emits once, in the first micro-batch whose watermark passes
-    the day end — checked per entry against getCurrentWatermarkMs()
-    on every invocation, with one EventTimeTimeout per bucket at the
-    MIN open day end so buckets without data still emit in the
-    trailing no-data batch. After a day closes, any further row of it
-    is < watermark and dropped by the late filter — a closed cell can
-    never reopen."""
-    import numpy as np
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        d, h = buckets.load_int64(state, 2)
-        if not state.hasTimedOut:
-            pdf = one_frame(pdfs)
-            if pdf is not None:
-                d = np.concatenate([d, ts_us(pdf[day_col]).to_numpy()])
-                h = np.concatenate([h, pdf[hv_col].to_numpy(dtype="int64")])
-                order = np.lexsort((h, d))
-                d, h = d[order], h[order]
-                keep = np.ones(len(d), dtype=bool)  # distinct (day, hv)
-                keep[1:] = (d[1:] != d[:-1]) | (h[1:] != h[:-1])
-                d, h = d[keep], h[keep]
-                # rank within day (ascending hv): keep the k smallest
-                pos = np.arange(len(d), dtype="int64")
-                day_start = np.ones(len(d), dtype=bool)
-                day_start[1:] = d[1:] != d[:-1]
-                rank = pos - np.maximum.accumulate(np.where(day_start, pos, 0))
-                d, h = d[rank < k], h[rank < k]
-        closed = _day_end_ms(d) - 1 < state.getCurrentWatermarkMs()
-        if closed.any():
-            cd, ch = d[closed], h[closed]
-            starts = np.flatnonzero(
-                np.concatenate([[True], cd[1:] != cd[:-1]])
-            )
-            bounds = np.append(starts, len(cd))
-            yield pd.DataFrame(
-                {
-                    "day": pd.to_datetime(cd[starts], unit="us"),
-                    "shard": key[0],
-                    "kmins": [
-                        ch[a:b].tolist() for a, b in zip(bounds[:-1], bounds[1:])
-                    ],
-                }
-            )
-            d, h = d[~closed], h[~closed]
-        buckets.save(state, (d, h), _day_end_ms(d) - 1)
-
-    return buckets.by_shard(
-        df, "kmv_day_fold", shard_col, fn, KMV_FOLD_OUT, _KMV_FOLD_STATE
-    )
 
 
 QUANTILE_FOLD_OUT = StructType(
@@ -1098,10 +1021,9 @@ _QUANTILE_FOLD_STATE = StructType(
 def quantile_day_fold(
     df: DataFrame, day_col: str, type_col: str, shard_col: str, idx_col: str
 ) -> DataFrame:
-    """Live HDR-histogram fold, bucketed by shard — the quantile member
-    of the fixed-state fold family (VERDICT r12 #4), completing the
-    kmv_day_fold / hll_day_fold pattern for all three mergeable sketch
-    types. The reference's keyed windowed-state pattern
+    """Live HDR-histogram fold, bucketed by shard — the closed-day
+    EventTimeTimeout fold (VERDICT r12 #4). The reference's keyed
+    windowed-state pattern
     (UniqueVisitorWithBloom.scala:76-120) at the quantile sketch's
     footprint.
 
@@ -1112,17 +1034,15 @@ def quantile_day_fold(
     entry-tagged arrays (days, types, idxs, counts) — one element per
     OPEN (day, type, idx) cell, each day bounded by 32 * octaves
     (~512) cells however many EVENTS it has: counts grow but cells do
-    not, the same genuinely-fixed-state argument as the KMV/HLL folds,
-    with addition instead of union/max. idx = e * 32 + m comes from
+    not. idx = e * 32 + m comes from
     the shared row-level builder (plans.queries_patterns.qsketch_rows),
-    so the bucketing rule cannot drift from the batch family. Unlike
-    KMV/HLL the merge is NOT idempotent (sum double-counts on replay),
-    which is exactly why this operator lives in the ENGINE's state
-    store (checkpointed exactly-once) rather than a foreachBatch MERGE
-    sink — the one-pass fan-out twins document that boundary.
+    so the bucketing rule cannot drift from the batch family. The merge
+    is NOT idempotent (sum double-counts on replay), so a foreachBatch
+    sink needs an epoch ledger for it (EpochLedgerMergeAggSink); here
+    the ENGINE's state store checkpoints it exactly-once.
 
-    Emission is the closed-day contract (ms-floor proof in
-    kmv_day_fold; bucketed form in the _DAY_US note): each (day, type)
+    Emission is the closed-day contract (ms-floor proof in the _DAY_US
+    note): each (day, type)
     vector emits once, in the first micro-batch whose watermark passes
     the day end, checked per cell against getCurrentWatermarkMs() with
     one per-bucket EventTimeTimeout at the MIN open day end. The
@@ -1190,87 +1110,4 @@ def quantile_day_fold(
         fn,
         QUANTILE_FOLD_OUT,
         _QUANTILE_FOLD_STATE,
-    )
-
-
-HLL_FOLD_OUT = StructType(
-    [
-        StructField("day", TimestampType()),
-        StructField("shard", LongType()),
-        StructField("regs", ArrayType(LongType())),
-    ]
-)
-_HLL_FOLD_STATE = StructType(
-    [
-        StructField("days", ArrayType(LongType())),  # us, one per open day
-        StructField("regs", ArrayType(LongType())),  # flattened, stride m
-    ]
-)
-
-
-def hll_day_fold(
-    df: DataFrame,
-    day_col: str,
-    shard_col: str,
-    reg_col: str,
-    rank_col: str,
-    m: int,
-) -> DataFrame:
-    """Live HLL register fold, bucketed by shard — the fixed-state
-    streaming twin of uv_hll_registers/uv_hll_sharded (the reference's
-    UV state pattern, UniqueVisitorWithBloom.scala:76-120, at HLL's 64-long
-    footprint).
-
-    Keyed by the upstream hash shard (buckets.py): state per bucket is
-    one m-long register
-    vector per OPEN day, flattened into (days, regs) parallel arrays
-    with stride m. Each batch folds in via element-wise max
-    (np.maximum.at on (day-row, reg) pairs) — max is idempotent/
-    associative/commutative, so the converged registers are
-    batching-independent and bit-equal to the batch build, and state
-    is m longs per open day however many distinct users arrive (the
-    same genuinely-fixed-state argument as kmv_day_fold, without even
-    a cap to enforce). The shard key keeps any one state partition
-    from seeing a whole day's events (the uv_hll_sharded decomposition
-    — shard vectors max-merge into the day vector bit-exactly). Each
-    (day, shard) vector emits once on the shared closed-day contract
-    (ms-floor proof in kmv_day_fold; bucketed form in the _DAY_US
-    note); late rows of a closed day are dropped by the operator's
-    watermark filter."""
-    import numpy as np
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        d, flat = buckets.load_int64(state, 2)
-        regs = flat.reshape(len(d), m)
-        if not state.hasTimedOut:
-            pdf = one_frame(pdfs)
-            if pdf is not None:
-                bd = ts_us(pdf[day_col]).to_numpy()
-                ud = np.union1d(d, bd)
-                mat = np.zeros((len(ud), m), dtype="int64")
-                if len(d):
-                    mat[np.searchsorted(ud, d)] = regs
-                np.maximum.at(
-                    mat,
-                    (
-                        np.searchsorted(ud, bd),
-                        pdf[reg_col].to_numpy(dtype="int64"),
-                    ),
-                    pdf[rank_col].to_numpy(dtype="int64"),
-                )
-                d, regs = ud, mat
-        closed = _day_end_ms(d) - 1 < state.getCurrentWatermarkMs()
-        if closed.any():
-            yield pd.DataFrame(
-                {
-                    "day": pd.to_datetime(d[closed], unit="us"),
-                    "shard": key[0],
-                    "regs": [r.tolist() for r in regs[closed]],
-                }
-            )
-            d, regs = d[~closed], regs[~closed]
-        buckets.save(state, (d, regs.reshape(-1)), _day_end_ms(d) - 1)
-
-    return buckets.by_shard(
-        df, "hll_day_fold", shard_col, fn, HLL_FOLD_OUT, _HLL_FOLD_STATE
     )

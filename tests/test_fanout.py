@@ -1,7 +1,6 @@
 """One-pass foreachBatch fan-out (VERDICT r12 #1): the MergeAggSink
 sketch-MERGE contract, the persisted event-time high watermark, and the
-single-source-scan evidence for the one-pass catalog twins vs their
-two-pipeline siblings."""
+single-source-scan evidence for the one-pass catalog queries."""
 
 from __future__ import annotations
 
@@ -151,44 +150,36 @@ class _ScanProbe:
 
 
 @pytest.mark.parametrize(
-    "onepass,twin",
+    "onepass",
     [
-        ("streaming_uv_kmv_onepass", "streaming_uv_kmv_trailing"),
-        ("streaming_uv_hll_onepass", "streaming_uv_hll_registers"),
+        "streaming_uv_kmv_onepass",
+        "streaming_uv_hll_onepass",
         # r14: additive sinks through the epoch ledger get the same
         # 1x-scan guarantee (VERDICT r13 next #2)
-        ("streaming_freq_cm_onepass", "streaming_freq_cm"),
-        ("streaming_adclick_onepass", "streaming_adclick_blacklist"),
+        "streaming_freq_cm_onepass",
+        "streaming_adclick_onepass",
     ],
 )
-def test_onepass_fanout_scans_source_once(spark, sf_dir, onepass, twin):
-    """THE deployment claim (VERDICT r12 #1): the one-pass twin ingests
-    the source ONCE (one streaming query, sum(numInputRows) == source
-    rows) where the two-pipeline twin ingests it twice. Hash-exactness
-    vs the shared oracle is covered by the catalog parity suite; this
-    pins the scan count."""
+def test_onepass_fanout_scans_source_once(spark, sf_dir, onepass):
+    """THE deployment claim (VERDICT r12 #1): a one-pass query ingests
+    the source ONCE — one streaming query, sum(numInputRows) == source
+    rows — however many sinks it fans to. Hash-exactness vs the oracle
+    is covered by the catalog parity suite; this pins the scan count."""
     from flink_tutorial_spark import plans
 
     n_src = load_table(spark, sf_dir, "events").count()
 
-    def measure(name):
-        probe = _ScanProbe()
-        spark.streams.addListener(probe.listener)
-        try:
-            rows = plans.REGISTRY[name].fn(spark, sf_dir).count()
-        finally:
-            # capture before removal; events are async
-            nq, total = probe.total()
-            spark.streams.removeListener(probe.listener)
-        assert rows > 0
-        return nq, total
-
-    nq_one, total_one = measure(onepass)
-    assert nq_one == 1, f"one-pass ran {nq_one} queries"
-    assert total_one == n_src
-    nq_two, total_two = measure(twin)
-    assert nq_two == 2, f"twin ran {nq_two} queries"
-    assert total_two == 2 * n_src
+    probe = _ScanProbe()
+    spark.streams.addListener(probe.listener)
+    try:
+        rows = plans.REGISTRY[onepass].fn(spark, sf_dir).count()
+    finally:
+        # capture before removal; events are async
+        nq, total = probe.total()
+        spark.streams.removeListener(probe.listener)
+    assert rows > 0
+    assert nq == 1, f"one-pass ran {nq} queries"
+    assert total == n_src
 
 
 def test_run_fanout_checkpoint_restart_resumes_not_replays(spark, tmp_path):

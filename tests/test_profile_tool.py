@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 
 from perfbench.trace import PASS_METRICS
-from tools.profile_layers import profile
+from tools.profile_layers import core_mismatch, profile
 
 BATCH, STREAM = "tpch_q6_forecast_revenue", "streaming_running_sum"
 
@@ -29,3 +29,10 @@ def test_unmatched_pattern_raises_before_any_spark_call(sf_dir):
     # AttributeError, not the ValueError naming the pattern
     with pytest.raises(ValueError, match=r"'no_such_query_\*'"):
         profile(None, [BATCH, "no_such_query_*"], sf_dir, runs=1)
+
+
+def test_core_mismatch_warns_only_on_a_differing_local_count():
+    assert "local[32]" in core_mismatch("local[32]", 4)
+    assert core_mismatch("local[4]", 4) is None
+    assert core_mismatch("local[*]", 4) is None
+    assert core_mismatch("local[4]", None) is None

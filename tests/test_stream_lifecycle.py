@@ -1,8 +1,8 @@
-"""The bounded-stream lifecycle in streaming/run.run_streams, seen
-through its three runners: a failed start or a failing sink leaves no
-query running and the session's shuffle-partition count where it was;
-a stateful stream's state operator keeps the pinned count after the
-pin is gone; extra pinned confs come back too."""
+"""The bounded-stream lifecycle in streaming/run.run_stream, seen
+through its runners: a failed start or a failing sink leaves no query
+running and the session's shuffle-partition count where it was; a
+stateful stream's state operator keeps the pinned count after the pin
+is gone."""
 
 from __future__ import annotations
 
@@ -11,14 +11,11 @@ import time
 import pandas as pd
 import pytest
 from pyspark.errors import StreamingQueryException
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
 from flink_tutorial_spark.streaming.run import (
     run_fanout,
-    run_streams,
     run_to_memory,
-    run_to_memory_many,
     stream_shuffle_partitions,
 )
 
@@ -49,10 +46,10 @@ def stream(spark, tmp_path):
 def test_failed_start_stops_started_queries_and_restores_conf(
     spark, stream, session_conf
 ):
-    # complete mode needs a streaming aggregation: the second start fails
-    # after the first query is already running
+    # complete mode needs a streaming aggregation: start() fails while
+    # the shuffle-partition pin is in place
     with pytest.raises(Exception, match="(?i)complete"):
-        run_to_memory_many([(stream, "append"), (stream, "complete")])
+        run_to_memory(stream, "complete")
     assert spark.streams.active == []
     assert spark.conf.get(SHUFFLE) == session_conf
 
@@ -108,15 +105,3 @@ def test_state_partitions_fixed_at_start(spark, stream, session_conf):
     assert spark.conf.get(SHUFFLE) == session_conf
     assert spark.streams.active == []
 
-
-def test_pinned_confs_restored_on_success(spark, stream, session_conf):
-    key = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
-    before = spark.conf.get(key)
-    name = "lifecycle_confs"
-    run_streams(
-        [stream.writeStream.format("memory").queryName(name)],
-        confs={key: "false"},
-    )
-    assert spark.table(name).agg(F.sum("v")).first()[0] == 10
-    assert spark.conf.get(key) == before
-    assert spark.conf.get(SHUFFLE) == session_conf

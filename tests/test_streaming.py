@@ -1544,7 +1544,7 @@ def test_null_semantics_randomized_vs_sql_oracle(spark, tmp_path, users):
 
 def test_crash_recovery_chained_blacklist_topology(spark, tmp_path):
     """Crash-recovery for the CHAINED multi-stateful topology (VERDICT
-    r9 #4): the streaming_adclick_blacklist shape —
+    r9 #4), the reference's AdClickAnalysis shape as engine operators —
     applyInPandasWithState (blacklist counters) -> re-watermark ->
     tumbling window agg — stopped after batch 1 and restarted on the
     same checkpoint must equal an uninterrupted run for BOTH channels.
@@ -1725,9 +1725,9 @@ def _run_ckpt_complete(spark, src, build, out_dir, ckpt):
 
 def test_crash_recovery_complete_mode_sketch(spark, tmp_path):
     """Crash-recovery for the complete-mode live sketch family
-    (VERDICT r10 #3): streaming_freq_cm / streaming_quantile_sketch /
-    streaming_drift_psi all maintain their cells as COMPLETE-mode
-    streaming aggregation — the shared state-store path is the
+    (VERDICT r10 #3): streaming_drift_psi's cells and
+    streaming_running_sum's totals are COMPLETE-mode streaming
+    aggregation — the shared state-store path is the
     streaming-aggregation state (HashAggregate -> StateStoreSave), not
     the applyInPandasWithState store the append-mode restart tests
     cover. One shape suffices: the CM-style (row_i, cell) counter
@@ -1785,219 +1785,13 @@ def test_crash_recovery_complete_mode_sketch(spark, tmp_path):
     assert sum(t[2] for t in want) == 4 * (len(batch1) + len(batch2))
 
 
-def test_streaming_uv_kmv_trailing_matches_batch(spark, sf_dir):
-    """The live daily-cell pipeline must converge to the batch twin's
-    trailing report exactly, restricted to closed days (a day's cells
-    emit when the watermark passes its end, so the open last day is
-    absent live)."""
-    from flink_tutorial_spark import plans
-    from flink_tutorial_spark.session import load_table
-
-    live = sorted(
-        map(
-            tuple,
-            plans.REGISTRY["streaming_uv_kmv_trailing"]
-            .fn(spark, sf_dir)
-            .collect(),
-        )
-    )
-    events = load_table(spark, sf_dir, "events")
-    max_ts = events.where(F.col("event_type") == "view").agg(
-        F.max("ts")
-    ).collect()[0][0]
-    batch = sorted(
-        t
-        for t in map(
-            tuple, plans.REGISTRY["uv_kmv_trailing"].fn(spark, sf_dir).collect()
-        )
-        if t[0] + pd.Timedelta(days=1) <= max_ts
-    )
-    assert live == batch and len(live) > 0
-
-
-def test_kmv_day_fold_state_is_bounded(spark, sf_dir):
-    """The live KMV fold's state must be KEY-bounded (days x shards
-    rows, <= k longs each), NOT O(distinct users/day) — the VERDICT
-    r11 #3 claim, asserted via the state-store metrics a
-    StreamingQueryListener reports (the same evidence channel as
-    tools/profile_layers.py's streaming.state_rows and
-    streaming.state_mb). The old dedup-based pipeline
-    kept one state row per distinct (day, shard, hv)."""
-    import time
-
-    from pyspark.sql.streaming import StreamingQueryListener
-
-    from flink_tutorial_spark import plans
-    from flink_tutorial_spark.session import load_table
-
-    class Probe(StreamingQueryListener):
-        def __init__(self):
-            self.rows = []
-
-        def onQueryStarted(self, event):
-            pass
-
-        def onQueryProgress(self, event):
-            for so in event.progress.stateOperators or []:
-                self.rows.append((so.operatorName, so.numRowsTotal))
-
-        def onQueryIdle(self, event):
-            pass
-
-        def onQueryTerminated(self, event):
-            pass
-
-    probe = Probe()
-    spark.streams.addListener(probe)
-    try:
-        result = (
-            plans.REGISTRY["streaming_uv_kmv_trailing"].fn(spark, sf_dir).count()
-        )
-        # listener events are async: poll with a deadline rather than a
-        # fixed sleep (a loaded box can dispatch them late)
-        deadline = time.time() + 30
-        fold_rows: list = []
-        while time.time() < deadline:
-            fold_rows = [
-                n for (op, n) in probe.rows if "applyInPandasWithState" in op
-            ]
-            if fold_rows:
-                time.sleep(2)  # grace: let the tail of the queue drain
-                fold_rows = [
-                    n
-                    for (op, n) in probe.rows
-                    if "applyInPandasWithState" in op
-                ]
-                break
-            time.sleep(0.5)
-    finally:
-        spark.streams.removeListener(probe)
-    assert result > 0
-    assert fold_rows, f"no fold state metrics captured: {probe.rows}"
-    events = load_table(spark, sf_dir, "events")
-    n_days = (
-        events.where(F.col("event_type") == "view")
-        .select(F.date_trunc("day", "ts"))
-        .distinct()
-        .count()
-    )
-    n_distinct_pairs = (
-        events.where(F.col("event_type") == "view")
-        .select(F.date_trunc("day", "ts"), "user_id")
-        .distinct()
-        .count()
-    )
-    from flink_tutorial_spark.plans.queries_patterns import _KMV_SHARDS
-
-    bound = n_days * _KMV_SHARDS
-    assert max(fold_rows) <= bound, (max(fold_rows), bound)
-    # the bound this replaces: one row per distinct (day, user) — make
-    # sure the data is big enough that the assertion distinguishes them
-    assert n_distinct_pairs > bound or max(fold_rows) < n_distinct_pairs
-
-
-def test_streaming_uv_hll_matches_batch(spark, sf_dir):
-    """The live (day, shard) register folds, max-merged, must converge
-    to the batch registers report exactly, restricted to closed days
-    (a day's vectors emit when the watermark passes its end, so the
-    open last day is absent live)."""
-    from flink_tutorial_spark import plans
-    from flink_tutorial_spark.session import load_table
-
-    live = sorted(
-        map(
-            tuple,
-            plans.REGISTRY["streaming_uv_hll_registers"]
-            .fn(spark, sf_dir)
-            .collect(),
-        )
-    )
-    events = load_table(spark, sf_dir, "events")
-    max_ts = events.where(F.col("event_type") == "view").agg(
-        F.max("ts")
-    ).collect()[0][0]
-    batch = sorted(
-        t
-        for t in map(
-            tuple,
-            plans.REGISTRY["uv_hll_registers"].fn(spark, sf_dir).collect(),
-        )
-        if t[0] + pd.Timedelta(days=1) <= max_ts
-    )
-    assert live == batch and len(live) > 0
-
-
-def test_crash_recovery_kmv_fold_state(spark, tmp_path):
-    """kmv_day_fold's k-min array state AND its event-time timeout
-    survive a restart from the checkpoint (the r12 fixed-state fold is
-    the first timer-EMITTING fold in the family — earlier restart e2es
-    cover data-branch emitters and complete-mode aggs): batch 1 builds
-    day-0 state and emits NOTHING (the day is open — asserted, so the
-    test cannot pass vacuously); after the restart, batch 2 merges a
-    new day-0 minimum into the CARRIED array and a day-1 event drives
-    the watermark past day-0's end, so the timeout branch emits cells
-    that can only be correct if both the array and the timer
-    round-tripped through the state store. Final output must row-equal
-    an uninterrupted run over both batches."""
-    from flink_tutorial_spark.streaming.stateful import kmv_day_fold
-
-    def build(s):
-        st = (
-            s.selectExpr("ts", "user AS hv")
-            .withColumn("day", F.date_trunc("day", "ts"))
-            .withColumn("shard", F.pmod("hv", F.lit(2)))
-            .withWatermark("ts", "0 seconds")
-        )
-        return kmv_day_fold(st, "day", "shard", "hv", 3)
-
-    # day 0: odd-shard hashes 5,9,5(dup),7 exceed the k=3 cap once 1
-    # arrives; even shard has just 2
-    batch1 = [_row(1, user=5), _row(2, user=9), _row(3, user=5),
-              _row(4, user=7), _row(5, user=2)]
-    # post-restart: a NEW day-0 minimum (1) + a day-1 event that closes
-    # day 0
-    batch2 = [_row(6, user=1), _row(86500, user=4)]
-
-    src_a, src_b = str(tmp_path / "src_a"), str(tmp_path / "src_b")
-    out_a, ck_a = str(tmp_path / "out_a"), str(tmp_path / "ck_a")
-    _write_one_batch(src_a, batch1, 0)
-    _run_ckpt(spark, src_a, build, out_a, ck_a)
-    # mid-state: day 0 is still open — nothing may have emitted yet
-    # (the file sink commits empty part files per batch; count rows)
-    assert (
-        spark.read.parquet(out_a).count() == 0
-    ), "day-0 cells emitted before the day closed"
-    _write_one_batch(src_a, batch2, 1)
-    _run_ckpt(spark, src_a, build, out_a, ck_a)  # restart
-
-    _write_one_batch(src_b, batch1, 0)
-    _write_one_batch(src_b, batch2, 1)
-    out_b, ck_b = str(tmp_path / "out_b"), str(tmp_path / "ck_b")
-    _run_ckpt(spark, src_b, build, out_b, ck_b)
-
-    key = lambda t: (t[0], t[1])
-    got = sorted(
-        ((r.day, r.shard, list(r.kmins)) for r in spark.read.parquet(out_a).collect()),
-        key=key,
-    )
-    want = sorted(
-        ((r.day, r.shard, list(r.kmins)) for r in spark.read.parquet(out_b).collect()),
-        key=key,
-    )
-    assert got == want
-    day0 = T0.to_pydatetime()
-    assert got == [
-        (day0, 0, [2]),          # even shard: just the 2
-        (day0, 1, [1, 5, 7]),    # k=3 of {5,9,7} u {1}: the restart
-                                 # merged batch 2's new minimum into the
-                                 # carried array and evicted 9
-    ]
-
-
 def test_quantile_day_fold_state_is_bounded(spark, sf_dir):
     """The live quantile fold's state must be KEY-bounded (days x types
     x shards rows, <= ~512 cells each), NOT O(events) — the VERDICT
-    r12 #4 claim, same listener protocol as the KMV fold test."""
+    r12 #4 claim, asserted via the state-store metrics a
+    StreamingQueryListener reports (the same evidence channel as
+    tools/profile_layers.py's streaming.state_rows and
+    streaming.state_mb)."""
     import time
 
     from pyspark.sql.streaming import StreamingQueryListener
@@ -2064,8 +1858,8 @@ def test_quantile_day_fold_state_is_bounded(spark, sf_dir):
 
 def test_crash_recovery_quantile_fold_state(spark, tmp_path):
     """quantile_day_fold's sparse cell-vector state AND its event-time
-    timeout survive a restart (the kmv_day_fold e2e at the quantile
-    footprint) — with the extra bite that this fold's merge is
+    timeout survive a restart (the catalog's timer-EMITTING fold) —
+    with the extra bite that this fold's merge is
     ADDITIVE, so any state loss or double-fold shows up as a wrong
     count, not just a wrong set: batch 1 folds two 1.0s and one 2.56
     into day-0 state and emits nothing (day open — asserted); after
@@ -2129,58 +1923,6 @@ def test_crash_recovery_quantile_fold_state(spark, tmp_path):
     ]
 
 
-def test_kmv_fold_shared_bucket_truncates_per_day(spark, tmp_path):
-    """The r20 shard-bucketed kmv_day_fold keeps SEVERAL days' k-min
-    arrays in one bucket's state: the k-truncation must apply per day,
-    not across the bucket, and each closed day must emit its own row —
-    whether it closes in a DATA invocation (another day's rows arrive
-    in the same bucket) or in the trailing timeout batch. One shard
-    (pmod 1) forces every day through a single bucket; k=2; day 0
-    closes while day-1 data flows through the same bucket (data-path
-    emission), day 1 closes in the trailing no-data batch
-    (timeout-path emission). A bucket-global truncation would lose
-    day-1 hashes; a per-bucket single emission would merge the days."""
-    from flink_tutorial_spark.streaming.stateful import kmv_day_fold
-
-    def build(s):
-        st = (
-            s.selectExpr("ts", "user AS hv")
-            .withColumn("day", F.date_trunc("day", "ts"))
-            .withColumn("shard", F.pmod("hv", F.lit(1)))
-            .withWatermark("ts", "0 seconds")
-        )
-        return kmv_day_fold(st, "day", "shard", "hv", 2)
-
-    # batch 0: day 0 has 3 distinct hashes (> k=2), day 1 has 2
-    batch0 = [
-        _row(1, user=5),
-        _row(2, user=9),
-        _row(3, user=7),
-        _row(86500, user=3),
-        _row(86600, user=8),
-    ]
-    # batch 1: a day-2 event — day 0 is closed DURING this data batch
-    # (wm = 86600s), day 1 closes in the trailing timeout batch
-    batch1 = [_row(2 * 86400 + 100, user=4)]
-
-    src = str(tmp_path / "src")
-    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
-    _write_one_batch(src, batch0, 0)
-    _write_one_batch(src, batch1, 1)
-    _run_ckpt(spark, src, build, out, ck)
-
-    got = sorted(
-        (r.day, r.shard, list(r.kmins))
-        for r in spark.read.parquet(out).collect()
-    )
-    day0 = T0.to_pydatetime()
-    day1 = (T0 + pd.Timedelta(days=1)).to_pydatetime()
-    assert got == [
-        (day0, 0, [5, 7]),  # k=2 smallest of {5, 9, 7}, day-local
-        (day1, 0, [3, 8]),  # day 1 kept its own hashes
-    ]
-
-
 def test_quantile_fold_shared_bucket_emits_per_day_type(spark, tmp_path):
     """The r20 shard-bucketed quantile_day_fold holds every (day, type)
     cell vector of a shard in one bucket: emission must stay per
@@ -2240,36 +1982,49 @@ def _ms_row(ms, user, kind="x", value=1.0):
 _DAY_MS = 86_400_000
 
 
-def test_kmv_fold_emits_day_at_stalled_watermark(spark, tmp_path):
+def test_quantile_fold_emits_day_at_stalled_watermark(spark, tmp_path):
     """Day 0 must emit when the watermark stops exactly at its end:
     batch 0 ends day 0 at 23:59:59.999, batch 1 is one row at exactly
     00:00:00.000 of day 1, then no more data arrives. Batch 1 runs at
     watermark day_end - 1 ms (day 0 still open); the trailing no-data
     batch runs at watermark day_end, where day_end_ms - 1 < wm_ms closes
     day 0, so the bucket timer armed in batch 1 must fire there."""
-    from flink_tutorial_spark.streaming.stateful import kmv_day_fold
+    from flink_tutorial_spark.plans.queries_patterns import qsketch_rows
+    from flink_tutorial_spark.streaming.stateful import quantile_day_fold
 
     def build(s):
         st = (
-            s.selectExpr("ts", "user AS hv")
+            s.withColumnRenamed("kind", "event_type")
             .withColumn("day", F.date_trunc("day", "ts"))
-            .withColumn("shard", F.pmod("hv", F.lit(1)))
+            .withColumn("shard", F.pmod("user", F.lit(1)))
+        )
+        rows = (
+            qsketch_rows(st, "ts", "day", "event_type", "shard")
+            .withColumn("idx", F.col("e") * 32 + F.col("m"))
             .withWatermark("ts", "0 seconds")
         )
-        return kmv_day_fold(st, "day", "shard", "hv", 2)
+        return quantile_day_fold(rows, "day", "event_type", "shard", "idx")
 
+    # value=1.0 -> idx 210; value=2.56 -> idx 256 (see the crash test)
     src = str(tmp_path / "src")
     out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
     _write_one_batch(
-        src, [_ms_row(1_000, 5), _ms_row(2_000, 9), _ms_row(_DAY_MS - 1, 3)], 0
+        src,
+        [
+            _ms_row(1_000, 5),
+            _ms_row(2_000, 9, value=2.56),
+            _ms_row(_DAY_MS - 1, 3),
+        ],
+        0,
     )
     _write_one_batch(src, [_ms_row(_DAY_MS, 4)], 1)
     _run_ckpt(spark, src, build, out, ck)
 
     got = sorted(
-        (r.day, r.shard, list(r.kmins)) for r in spark.read.parquet(out).collect()
+        (r.day, r.event_type, r.shard, list(r.idxs), list(r.counts))
+        for r in spark.read.parquet(out).collect()
     )
-    assert got == [(T0.to_pydatetime(), 0, [3, 5])]
+    assert got == [(T0.to_pydatetime(), "x", 0, [210, 256], [2, 1])]
 
 
 def test_match_or_timeout_fires_at_stalled_watermark(spark, tmp_path):
@@ -2315,8 +2070,6 @@ def _string_key_plans():
     from flink_tutorial_spark.streaming.stateful import (
         blacklist_filter,
         clamped_ledger,
-        hll_day_fold,
-        kmv_day_fold,
         quantile_day_fold,
         scd2_closed_intervals,
         transition_pairs,
@@ -2341,9 +2094,7 @@ def _string_key_plans():
         "match_or_timeout": lambda s: match_or_timeout(
             s, "key", "ts", "kind", "create", "pay", 60
         ),
-        "kmv_day_fold": lambda s: kmv_day_fold(s, "day", "key", "user", 2),
         "quantile_day_fold": lambda s: quantile_day_fold(s, "day", "kind", "key", "user"),
-        "hll_day_fold": lambda s: hll_day_fold(s, "day", "key", "user", "user", 64),
     }
 
 
@@ -2357,9 +2108,7 @@ def _string_key_plans():
         "detect_consecutive",
         "detect_sequence",
         "match_or_timeout",
-        "kmv_day_fold",
         "quantile_day_fold",
-        "hll_day_fold",
     ],
 )
 def test_bucketed_state_rejects_string_key_at_plan_build(spark, tmp_path, op):

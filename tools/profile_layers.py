@@ -11,8 +11,9 @@ holds the run times (wall net of steal), their median and IQR, and the
 per-key median of the runs' layer numbers, keyed exactly by
 `perfbench.trace.PASS_METRICS`; a query that raises is recorded with
 its error. `--conf` sets a Spark SQL conf before the first query; the
-session runs on `local[$SPARK_GRAFT_CPUS]`. Run it alone on the
-machine: the release step removes every `temporary-*` stream
+session runs on `local[$SPARK_GRAFT_CPUS]` (default 32), and a stderr
+warning names the gap when that differs from the machine's CPU count.
+Run it alone on the machine: the release step removes every `temporary-*` stream
 checkpoint under the JVM's `java.io.tmpdir`.
 """
 
@@ -23,6 +24,7 @@ import fnmatch
 import glob
 import json
 import os
+import re
 import shutil
 import statistics
 import subprocess
@@ -101,6 +103,19 @@ def profile(spark, names: list[str], sf_dir: str, runs: int) -> dict:
     return out
 
 
+def core_mismatch(master: str, cpus: int | None) -> str | None:
+    """A warning when a `local[N]` master's N differs from the
+    machine's CPU count (timings on oversubscribed or idle cores do not
+    compare across hosts); None otherwise."""
+    m = re.fullmatch(r"local\[(\d+)\]", master)
+    if m is None or cpus is None or int(m.group(1)) == cpus:
+        return None
+    return (
+        f"warning: session runs on {master} but this machine has {cpus} CPUs; "
+        "set SPARK_GRAFT_CPUS to match"
+    )
+
+
 def conf_pair(text: str) -> tuple[str, str]:
     key, sep, value = text.partition("=")
     if not (key and sep):
@@ -120,6 +135,9 @@ def main() -> None:
     from flink_tutorial_spark.session import get_spark
 
     spark = get_spark("profile")
+    warning = core_mismatch(spark.sparkContext.master, os.cpu_count())
+    if warning:
+        print(warning, file=sys.stderr, flush=True)
     confs = dict(args.conf)
     for k, v in confs.items():
         spark.conf.set(k, v)
