@@ -2698,7 +2698,8 @@ def streaming_dedup_registry_onepass(
 
     run_fanout(docs, [registry_sink, meta_sink])
 
-    meta = spark.read.parquet(meta_dir).dropDuplicates(["doc_id"])
+    # the sinks wrote docs' columns: no schema-inference job on the re-read
+    meta = spark.read.schema(docs.schema).parquet(meta_dir).dropDuplicates(["doc_id"])
     kept = F.when(F.col("doc_id") == F.col("keep_id"), 1).otherwise(0)
     return (
         meta.join(registry.read().select("fingerprint", "keep_id"), "fingerprint")

@@ -27,6 +27,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from flink_tutorial_spark.sinks import publish
 
@@ -80,6 +81,8 @@ class KeyedUpsertSink:
         self.path = path
         self.key_cols = key_cols
         self.n_buckets = n_buckets
+        # the columns of the files this instance last wrote (see _read)
+        self._schema: StructType | None = None
         # bucket on a key PREFIX to co-locate rows that must be rewritten
         # (and recomputed) together — e.g. all items of one window for a
         # per-window ranking. Default: the full key.
@@ -205,6 +208,32 @@ class KeyedUpsertSink:
     def _bucket_expr(self) -> F.Column:
         return F.pmod(F.hash(*self.bucket_cols), F.lit(self.n_buckets))
 
+    def _write(self, df: DataFrame, path: str, label: str) -> None:
+        """publish.write_bucketed, remembering the written file columns
+        (`df`'s minus the `_bucket` partition column) for _read."""
+        publish.write_bucketed(df, path, label)
+        self._schema = StructType(
+            [
+                StructField(f.name, f.dataType, True, f.metadata)
+                for f in df.schema.fields
+                if f.name != "_bucket"
+            ]
+        )
+
+    def _read(self, *paths: str, partitioned: bool = False) -> DataFrame:
+        """spark.read.parquet(*paths) of this table's bucket dirs
+        (`partitioned`: dirs holding `_bucket=` children) under the
+        schema this instance wrote, so the read launches no
+        schema-inference job. A sink constructed over a table written
+        by an earlier instance infers until its first write."""
+        reader = self.spark.read
+        if self._schema is not None:
+            fields = self._schema.fields
+            if partitioned:
+                fields = fields + [StructField("_bucket", IntegerType(), True)]
+            reader = reader.schema(StructType(fields))
+        return reader.parquet(*paths)
+
     def _bucket_ids(self, df: DataFrame) -> list[int]:
         """Sorted bucket ids `df`'s rows hash into (<= n_buckets ints
         reach the driver)."""
@@ -283,12 +312,12 @@ class KeyedUpsertSink:
             old_paths = [live[b] for b in dirty if b in live]
             merged = new
             if old_paths:
-                old = self.spark.read.parquet(*old_paths).withColumn(
+                old = self._read(*old_paths).withColumn(
                     "_bucket", self._bucket_expr()
                 )
                 merged = self._merge(old, new)
             version = publish.version_dir(self.path, epoch_id)
-            publish.write_bucketed(
+            self._write(
                 self._finalize_merged(merged),
                 version,
                 f"sink:{os.path.basename(self.path)}",
@@ -306,7 +335,7 @@ class KeyedUpsertSink:
         paths = list(self._live_bucket_paths().values())
         if not paths:
             raise FileNotFoundError(f"empty keyed table at {self.path}")
-        return self.spark.read.parquet(*paths)
+        return self._read(*paths)
 
     def read_buckets(self, values: DataFrame) -> DataFrame:
         """Read ONLY the table buckets that `values` rows (carrying the
@@ -334,7 +363,7 @@ class KeyedUpsertSink:
         paths = [live[b] for b in self._bucket_ids(values) if b in live]
         if not paths:
             return self.read().limit(0)
-        return self.spark.read.parquet(*paths)
+        return self._read(*paths)
 
     def rebucket(self, n_buckets: int) -> None:
         """Re-shard the table under a new bucket count (VERDICT r15 #3:
@@ -392,8 +421,8 @@ class KeyedUpsertSink:
                 # empty table: nothing to rewrite, just adopt the count
                 self._write_meta()
                 return
-            df = self.spark.read.parquet(*old_paths.values())
-            publish.write_bucketed(
+            df = self._read(*old_paths.values())
+            self._write(
                 df.withColumn("_bucket", self._bucket_expr()),
                 version,
                 f"rebucket:{os.path.basename(self.path)}",
@@ -563,7 +592,7 @@ class KeyedAppendSink(KeyedUpsertSink):
         os.makedirs(os.path.join(self.path, "epochs"), exist_ok=True)
         publish.sweep_staging(self.path)
         staging = publish.staging_dir(self.path, epoch_id)
-        publish.write_bucketed(new, staging, f"sink:{os.path.basename(self.path)}")
+        self._write(new, staging, f"sink:{os.path.basename(self.path)}")
         if (
             publish.publish_dir(staging, publish.epoch_dir(self.path, epoch_id))
             and self.compact_every_n_epochs is not None
@@ -599,7 +628,7 @@ class KeyedAppendSink(KeyedUpsertSink):
         disappears."""
         df = None
         for d in dirs:
-            part = self.spark.read.parquet(d)
+            part = self._read(d, partitioned=True)
             df = part if df is None else df.unionByName(part)
         return df
 
@@ -643,7 +672,7 @@ class KeyedAppendSink(KeyedUpsertSink):
         # conflict) lose the _bucket partition column; _latest_per_key
         # needs only keys + _epoch (both data columns) — its drop of
         # _bucket is a no-op on an absent column
-        return self._latest_per_key(self.spark.read.parquet(*paths))
+        return self._latest_per_key(self._read(*paths))
 
     def _fold_epochs(self, dirs: list[str], tag: str) -> None:
         """Shared fold-publish for compact()/rebucket(): dedup the given
@@ -672,9 +701,7 @@ class KeyedAppendSink(KeyedUpsertSink):
             .withColumn("_epoch", F.lit(max_epoch).cast("long"))
         )
         staging = publish.staging_dir(self.path, tag)
-        publish.write_bucketed(
-            folded, staging, f"{tag}:{os.path.basename(self.path)}"
-        )
+        self._write(folded, staging, f"{tag}:{os.path.basename(self.path)}")
         final = publish.epoch_dir(self.path, max_epoch, tag[0])
         # a failed marker write publishes nothing; the staged fold copy
         # is swept by the next __call__/_recover_fold

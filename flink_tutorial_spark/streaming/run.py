@@ -8,8 +8,11 @@ the readStream path.
 
 from __future__ import annotations
 
+import fnmatch
+import glob
 import os
 import uuid
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter
@@ -33,10 +36,131 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return normalize_event_time(df, name)
 
 
-def stream_shuffle_partitions() -> str:
-    """The spark.sql.shuffle.partitions a stateful stream is started
-    with: SPARK_GRAFT_STREAM_SHUFFLE, default 8 (see run_stream)."""
-    return str(int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8")))
+#: Source bytes at or below which a bounded stream runs on ONE state
+#: partition; above it, on STREAM_PARTITIONS (see stream_shuffle_partitions).
+ONE_PARTITION_MAX_BYTES = 1 << 20
+
+#: the state-partition count of a stream over large or unsized input
+STREAM_PARTITIONS = 8
+
+#: file formats whose streaming source is a directory of files os.stat can size
+_FILE_FORMATS = {"parquet", "csv", "json", "orc", "text"}
+
+
+def _local_path(path: str) -> str | None:
+    """`path` as a local filesystem path; None for a remote URI."""
+    parsed = urlparse(path)
+    if parsed.scheme == "file":
+        return parsed.path
+    return path if parsed.scheme == "" else None
+
+
+def _listed_files(path: str, glob_filter: str | None) -> set[str] | None:
+    """The files a file source reads under `path` (a file, a directory
+    or a glob), as Spark's file index lists them: hidden `_`/`.` names
+    skipped, `pathGlobFilter` matched against each file name. None when
+    `path` is not local."""
+    local = _local_path(path)
+    if local is None:
+        return None
+    out = set()
+    for root in glob.glob(local) or [local]:
+        if os.path.isfile(root):
+            out.add(os.path.realpath(root))
+            continue
+        for dirpath, dirs, files in os.walk(root):
+            dirs[:] = [d for d in dirs if not d.startswith(("_", ".")) or "=" in d]
+            out.update(
+                os.path.realpath(os.path.join(dirpath, f))
+                for f in files
+                if not f.startswith(("_", "."))
+            )
+    if glob_filter:
+        out = {f for f in out if fnmatch.fnmatch(os.path.basename(f), glob_filter)}
+    return out
+
+
+def _scala_iter(seq):
+    it = seq.iterator()
+    while it.hasNext():
+        yield it.next()
+
+
+def _option(options, key: str) -> str | None:
+    value = options.get(key)
+    return value.get() if value.isDefined() else None
+
+
+def source_bytes(df: DataFrame) -> int | None:
+    """Total bytes of the distinct files behind `df`'s file-source
+    leaves, read with os.stat from the analyzed logical plan (a
+    DataFrame is analyzed when built, so no Spark job). A streaming file
+    source is its `path` option plus its `pathGlobFilter`, so
+    stream_table's sources count only their own table; a batch file
+    relation (a stream-static join's static side) is its file index's
+    listed files. A file read by several leaves (a self-join) counts
+    once. None when any streaming leaf is not a local file source
+    (rate, socket, Kafka, memory): its size is unknown."""
+    files: set[str] = set()
+    for leaf in _scala_iter(df._jdf.queryExecution().analyzed().collectLeaves()):
+        kind = leaf.getClass().getSimpleName()
+        if (
+            kind == "StreamingRelation"
+            and leaf.dataSource().className() in _FILE_FORMATS
+        ):
+            options = leaf.dataSource().options()
+            listed = _listed_files(
+                _option(options, "path"), _option(options, "pathGlobFilter")
+            )
+            if listed is None:
+                return None
+            files |= listed
+        elif leaf.isStreaming():
+            return None
+        elif (
+            kind == "LogicalRelation"
+            and leaf.relation().getClass().getSimpleName() == "HadoopFsRelation"
+        ):
+            for uri in leaf.relation().location().inputFiles():
+                local = _local_path(uri)
+                if local is None:
+                    return None
+                files.add(os.path.realpath(local))
+    return sum(os.stat(f).st_size for f in files)
+
+
+def stream_shuffle_partitions(df: DataFrame) -> int:
+    """The spark.sql.shuffle.partitions the stream over `df` starts
+    with, and so the state stores each stateful operator opens and
+    commits per micro-batch (see run_stream). A two-regime step on
+    source_bytes(df), measured on local[4] (BASELINE.md, "state
+    partitions sized from source bytes"):
+
+    - 1 at or below ONE_PARTITION_MAX_BYTES (1 MiB). Each partition
+      costs a store open + commit per batch and, under
+      applyInPandasWithState, a Python task, whatever the key count. At
+      sf0.01 (events 0.22 MB) 1 partition takes perfbench `stream`
+      query_p50_s to 0.64x of 8, state commit time 2.7 -> 0.13 s.
+    - STREAM_PARTITIONS (8) above it, and for unsized sources (rate,
+      socket, Kafka, memory). At sf0.1 (events 2.0 MB) 1 partition
+      takes the 40 events streams' summed median to 0.84x of 8, but
+      it serializes per-event Python state work onto one core: 11 of
+      them ran slower than on 8 by more than their spread
+      (cep_optional_step 1.32x, clamped_ledger 1.30x, times_range
+      1.23x), so sf0.1 events stays on 8. At sf1 (events 15.8 MB)
+      bucketed heavy state loses 1.5-1.8x on 1 partition (scd2,
+      asof_attribution, interval_join).
+    No count in between: the sf1 sweep read scd2 at 20.1 s on 4
+    partitions against 5.3 s on 8 (BASELINE.md "Round-9 addendum").
+
+    SPARK_GRAFT_STREAM_SHUFFLE, when set, overrides the rule (sweeps)."""
+    override = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
+    if override is not None:
+        return int(override)
+    size = source_bytes(df)
+    if size is not None and size <= ONE_PARTITION_MAX_BYTES:
+        return 1
+    return STREAM_PARTITIONS
 
 
 def run_stream(writer: DataStreamWriter, *, available_now: bool = False) -> None:
@@ -46,16 +170,19 @@ def run_stream(writer: DataStreamWriter, *, available_now: bool = False) -> None
     engine runs through here.
 
     Pin policy: spark.sql.shuffle.partitions is set to
-    stream_shuffle_partitions() for the start only; the prior value
-    comes back once the start is done or has failed. Stateful operators
-    open one state store per shuffle partition per micro-batch, so the
-    count is sized to the state in flight, not the batch default (32
-    stores on a bounded local stream measured ~40% pure overhead); a
-    deployment sizes it per job through SPARK_GRAFT_STREAM_SHUFFLE.
+    stream_shuffle_partitions(writer's DataFrame) for the start only;
+    the prior value comes back once the start is done or has failed.
+    Stateful operators open one state store per shuffle partition per
+    micro-batch, so the count is sized per stream from its source bytes
+    (1 up to 1 MiB, 8 above it or when unsized; the rule and its data
+    are in stream_shuffle_partitions), not the batch default.
+    SPARK_GRAFT_STREAM_SHUFFLE overrides it for sweeps.
     Probed on pyspark 4.1.2 with the conf pinned to 8 and restored to 4
     right after start():
     - the state-store count is fixed at start: the state operator
-      reported numShufflePartitions=8 (the checkpoint keeps it too);
+      reported numShufflePartitions=8. The checkpoint's offset log keeps
+      it too, so a restarted checkpointed stream keeps its first count
+      whatever its input has grown to (tests/test_stream_lifecycle.py);
     - a foreachBatch body's batch DataFrame lives in the stream's own
       session, cloned at start, so work planned on it keeps 8; but
       DataFrames the body builds from the caller's session (a sink
@@ -74,7 +201,7 @@ def run_stream(writer: DataStreamWriter, *, available_now: bool = False) -> None
     spark = writer._spark  # the session the writer starts in
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
-    spark.conf.set(key, stream_shuffle_partitions())
+    spark.conf.set(key, str(stream_shuffle_partitions(writer._df)))
     try:
         q = writer.start()
     finally:

@@ -78,6 +78,40 @@ def test_merge_agg_sink_is_batching_independent(spark, tmp_path):
     assert get(one) == get(split) == [[1, 2, 4, 7]]
 
 
+@pytest.mark.parametrize("channel", ["merge", "append"])
+def test_sink_reread_uses_written_schema(spark, tmp_path, channel):
+    """A sink re-reads its table under the schema it wrote: the read
+    launches no schema-inference job and returns the schema and rows of
+    an inferred read (a sink constructed over the table, which has not
+    written yet, infers)."""
+    from flink_tutorial_spark.sinks.foreach import KeyedAppendSink
+    from tests.test_session_schema_cache import _jobs_in_group
+
+    def make():
+        if channel == "merge":
+            return _kmv_sink(spark, tmp_path / "t")
+        return KeyedAppendSink(
+            spark, str(tmp_path / "t"), key_cols=["day", "shard"], n_buckets=4
+        )
+
+    sink = make()
+    cols = ["day", "shard", "kmins"]
+    sink(spark.createDataFrame([("d1", 0, [5, 9]), ("d2", 1, [7])], cols), 0)
+    sink(spark.createDataFrame([("d1", 0, [1]), ("d3", 2, [4])], cols), 1)
+    reads = []
+    written = _jobs_in_group(spark, lambda: reads.append(sink.read()))
+    inferred = _jobs_in_group(spark, lambda: reads.append(make().read()))
+    assert written == 0
+    assert inferred >= 1
+    got, want = reads
+    assert got.schema == want.schema
+
+    def rows(df):
+        return sorted(map(repr, df.collect()))
+
+    assert rows(got) == rows(want)
+
+
 def test_event_time_high_watermark_persists_and_never_regresses(
     spark, tmp_path
 ):

@@ -16,7 +16,9 @@ censused through a StreamingQueryListener instead (VERDICT r12 #6):
 per catalog query the row pins how many streaming queries it starts,
 how many micro-batches they run, and the STATE-STORE OPERATOR counts
 per run (stateOperators.operatorName from the progress events — the
-same channel as the SCALING.md state studies), plus the ordinary
+same channel as the SCALING.md state studies) and the state-partition
+counts those operators ran with (stateOperators.numShufflePartitions,
+the count streaming/run.stream_shuffle_partitions picks), plus the ordinary
 node census of the post-stream batch report plan under "post". A
 silently added second stateful operator or a second pipeline now
 shows up as a one-line JSON diff, the way batch exchanges do.
@@ -142,7 +144,8 @@ def _plan_str(spark, df) -> str:
 
 
 class _StreamProbe:
-    """Per-run micro-batch count + state-operator instance counts."""
+    """Per-run micro-batch count, state-operator instance counts and
+    state-partition counts."""
 
     def __init__(self):
         from pyspark.sql.streaming import StreamingQueryListener
@@ -153,6 +156,7 @@ class _StreamProbe:
             def __init__(self):
                 self.batches: dict[str, set] = {}
                 self.ops: dict[str, dict] = {}
+                self.partitions: dict[str, set] = {}
 
             def onQueryStarted(self, event):
                 pass
@@ -169,6 +173,9 @@ class _StreamProbe:
                     for n in names:
                         counts[n] = counts.get(n, 0) + 1
                     self.ops[run] = counts
+                    self.partitions.setdefault(run, set()).update(
+                        so.numShufflePartitions for so in p.stateOperators
+                    )
 
             def onQueryIdle(self, event):
                 pass
@@ -299,7 +306,10 @@ def _audit_loop(spark, sf_dir, out, errs, probe, prev_live) -> None:
         if captures:
             row_extra = {
                 "pre": pre,
-                "capture_labels": sorted({lbl for lbl, _ in captures}),
+                # a stream's label carries its per-run query name or id
+                "capture_labels": sorted(
+                    {re.sub(r"^stream:.*", "stream:*", lbl) for lbl, _ in captures}
+                ),
             }
         if not streaming:
             out[name] = dict(audit(plan), **row_extra)
@@ -319,9 +329,11 @@ def _audit_loop(spark, sf_dir, out, errs, probe, prev_live) -> None:
         if not runs:
             errs.append((name, "live query produced no progress events"))
         state_ops: dict[str, int] = {}
+        state_partitions: set[int] = set()
         for r in runs:
             for op, c in probe.listener.ops.get(r, {}).items():
                 state_ops[op] = state_ops.get(op, 0) + c
+            state_partitions |= probe.listener.partitions.get(r, set())
         out[name] = dict(
             {
                 "streaming_queries": len(runs),
@@ -329,6 +341,7 @@ def _audit_loop(spark, sf_dir, out, errs, probe, prev_live) -> None:
                     len(probe.listener.batches[r]) for r in runs
                 ),
                 "state_ops": state_ops,
+                "state_partitions": sorted(state_partitions),
                 "post": audit(plan),
             },
             **row_extra,
