@@ -43,6 +43,13 @@ ONE_PARTITION_MAX_BYTES = 1 << 20
 #: the state-partition count of a stream over large or unsized input
 STREAM_PARTITIONS = 8
 
+#: the checkpoint file manager run_stream pins for a stream's start
+CHECKPOINT_FILE_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+FILE_SYSTEM_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
 #: file formats whose streaming source is a directory of files os.stat can size
 _FILE_FORMATS = {"parquet", "csv", "json", "orc", "text"}
 
@@ -134,17 +141,24 @@ def stream_shuffle_partitions(df: DataFrame) -> int:
     with, and so the state stores each stateful operator opens and
     commits per micro-batch (see run_stream). A two-regime step on
     source_bytes(df), measured on local[4] (BASELINE.md, "state
-    partitions sized from source bytes"):
+    partitions sized from source bytes"). The figures below were taken
+    while every checkpoint rename still forked a `readlink` process
+    (each store commit paid its own), before run_stream pinned the
+    FileSystem checkpoint manager; re-measured where stated.
 
     - 1 at or below ONE_PARTITION_MAX_BYTES (1 MiB). Each partition
       costs a store open + commit per batch and, under
       applyInPandasWithState, a Python task, whatever the key count. At
-      sf0.01 (events 0.22 MB) 1 partition takes perfbench `stream`
+      sf0.01 (events 0.22 MB) 1 partition took perfbench `stream`
       query_p50_s to 0.64x of 8, state commit time 2.7 -> 0.13 s.
+      Re-measured without the forks, 8 is still slower: query_p50_s
+      0.94/1.05/0.92 s on 1 against 1.41/1.59/1.44 s on 8 (seeds
+      21-23; BASELINE.md "PR 12").
     - STREAM_PARTITIONS (8) above it, and for unsized sources (rate,
       socket, Kafka, memory). At sf0.1 (events 2.0 MB) 1 partition
-      takes the 40 events streams' summed median to 0.84x of 8, but
-      it serializes per-event Python state work onto one core: 11 of
+      took the 40 events streams' summed median to 0.84x of 8 (not
+      re-measured; most of that gain was commit forks), but it
+      serializes per-event Python state work onto one core: 11 of
       them ran slower than on 8 by more than their spread
       (cep_optional_step 1.32x, clamped_ledger 1.30x, times_range
       1.23x), so sf0.1 events stays on 8. At sf1 (events 15.8 MB)
@@ -165,13 +179,14 @@ def stream_shuffle_partitions(df: DataFrame) -> int:
 
 def run_stream(writer: DataStreamWriter, *, available_now: bool = False) -> None:
     """Run an unstarted stream writer over a bounded source to
-    completion: pin the shuffle width, start, restore it, drain the
-    query, capture its executed plan, stop. Every bounded stream in the
-    engine runs through here.
+    completion: pin the shuffle width and the checkpoint file manager,
+    start, restore both, drain the query, capture its executed plan,
+    stop. Every bounded stream in the engine runs through here.
 
-    Pin policy: spark.sql.shuffle.partitions is set to
-    stream_shuffle_partitions(writer's DataFrame) for the start only;
-    the prior value comes back once the start is done or has failed.
+    Pin policy: both confs are set for the start only; each prior value
+    (or its absence) comes back once the start is done or has failed.
+    spark.sql.shuffle.partitions is set to
+    stream_shuffle_partitions(writer's DataFrame).
     Stateful operators open one state store per shuffle partition per
     micro-batch, so the count is sized per stream from its source bytes
     (1 up to 1 MiB, 8 above it or when unsized; the rule and its data
@@ -192,6 +207,33 @@ def run_stream(writer: DataStreamWriter, *, available_now: bool = False) -> None
     NOT thread-safe: a query started concurrently in the same session
     inherits the pin; concurrent callers should use spark.newSession().
 
+    spark.sql.streaming.checkpointFileManagerClass is set to Spark's
+    FileSystemBasedCheckpointFileManager. Spark's default manager is
+    FileContext-based: each atomic rename calls getFileLinkStatus on
+    its source and destination, and without the native Hadoop library
+    each of those forks a `readlink` process from the driver JVM. A
+    micro-batch renames its offset-log, commit-log and source-log
+    entries and one state-store delta file per partition per stateful
+    operator, so the forks dominated state commit time. Measured on
+    local[4] (BASELINE.md "PR 12"): one pass of perfbench `stream`'s
+    four queries forked 224 `readlink` processes, now 0; at sf0.1
+    asof_attribution's state_commit_s fell 7.6 -> 0.5 s. Why the swap
+    is safe:
+    - setting it at start is enough: the offset log, the commit log
+      and the state-store providers build their manager from the
+      stream's own session, cloned at start (a started query's
+      offsetLog().fileManager() is the FileSystem one after the conf
+      is restored; tests/test_stream_lifecycle.py);
+    - the rename guarantee is the same on a local file system: the
+      FileContext manager's local rename is an exists-check then
+      rename(2), the FileSystem one an exists-check then
+      File.renameTo;
+    - nothing else changes: Spark's state-file checksums stay on, and
+      on pyspark 4.1.2 both managers leave the same files in a
+      checkpoint, Hadoop's `.crc` sidecars included. A checkpoint
+      written under either manager resumes under the other
+      (tests/test_fanout.py).
+
     Draining: an `available_now` writer carries Trigger.AvailableNow and
     is awaited to termination; otherwise processAllAvailable() drains
     every micro-batch, including the trailing no-data batch that fires
@@ -199,13 +241,21 @@ def run_stream(writer: DataStreamWriter, *, available_now: bool = False) -> None
     drain or sink raises with the query stopped; a stop() error does
     not mask the original error."""
     spark = writer._spark  # the session the writer starts in
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(stream_shuffle_partitions(writer._df)))
+    pins = {
+        "spark.sql.shuffle.partitions": str(stream_shuffle_partitions(writer._df)),
+        CHECKPOINT_FILE_MANAGER: FILE_SYSTEM_CHECKPOINT_MANAGER,
+    }
+    prev = {key: spark.conf.get(key, None) for key in pins}
+    for key, value in pins.items():
+        spark.conf.set(key, value)
     try:
         q = writer.start()
     finally:
-        spark.conf.set(key, prev)
+        for key, value in prev.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
     try:
         if available_now:
             q.awaitTermination()

@@ -438,6 +438,67 @@ def test_epoch_ledger_checkpoint_restart_no_double_count(spark, tmp_path):
     assert _counts(sink_a) == _counts(sink_b) == [("a", 11), ("b", 2), ("c", 5)]
 
 
+@pytest.mark.parametrize("first_leg", ["file_context", "run_stream"])
+def test_checkpoint_restart_across_checkpoint_managers(
+    spark, tmp_path, monkeypatch, first_leg
+):
+    """A checkpoint written under Spark's default FileContext manager
+    resumes under run_stream's FileSystem one, and the other way round:
+    committed epochs are not re-applied, and the dedup state written by
+    the first leg still drops the second leg's repeated row. The sink
+    tables equal an uninterrupted run's."""
+    import pandas as pd
+
+    from flink_tutorial_spark.streaming import run
+    from tests.test_stream_lifecycle import (
+        FILE_CONTEXT_CHECKPOINT_MANAGER,
+        record_managers,
+    )
+
+    managers = record_managers(monkeypatch)
+
+    def write_file(src, idx, rows):
+        os.makedirs(src, exist_ok=True)
+        p = f"{src}/b{idx:03d}.parquet"
+        pd.DataFrame(rows, columns=["k", "c"]).to_parquet(p, index=False)
+        os.utime(p, (1_600_000_000 + idx, 1_600_000_000 + idx))
+
+    def run_once(src, ck, sink, manager):
+        # run_stream pins the manager for the start; a swapped pin runs
+        # the leg as Spark's default would
+        monkeypatch.setattr(run, "FILE_SYSTEM_CHECKPOINT_MANAGER", manager)
+        stream = (
+            spark.readStream.format("parquet")
+            .schema("k string, c long")
+            .option("maxFilesPerTrigger", "1")
+            .load(src)
+            .dropDuplicates(["k", "c"])
+        )
+        run.run_fanout(stream, [sink], checkpoint=ck, available_now=True)
+
+    batch1 = [("a", 1), ("b", 2)]
+    batch2 = [("a", 10), ("c", 5), ("a", 1)]  # ("a", 1) is a duplicate
+    legs = [FILE_CONTEXT_CHECKPOINT_MANAGER, run.FILE_SYSTEM_CHECKPOINT_MANAGER]
+    if first_leg == "run_stream":
+        legs.reverse()
+
+    src_a, ck_a = str(tmp_path / "src_a"), str(tmp_path / "ck_a")
+    sink_a = _sum_sink(spark, tmp_path / "cells_a")
+    write_file(src_a, 0, batch1)
+    run_once(src_a, ck_a, sink_a, legs[0])
+    write_file(src_a, 1, batch2)
+    run_once(src_a, ck_a, sink_a, legs[1])
+    assert managers == legs
+
+    src_b, ck_b = str(tmp_path / "src_b"), str(tmp_path / "ck_b")
+    sink_b = _sum_sink(spark, tmp_path / "cells_b")
+    write_file(src_b, 0, batch1)
+    write_file(src_b, 1, batch2)
+    run_once(src_b, ck_b, sink_b, run.FILE_SYSTEM_CHECKPOINT_MANAGER)
+
+    assert _counts(sink_a) == _counts(sink_b) == [("a", 11), ("b", 2), ("c", 5)]
+
+
 def test_epoch_ledger_rejects_fresh_checkpoint_on_stale_table(spark, tmp_path):
     """The ledger's one sharp edge, ENFORCED: epoch ids restart at 0 on
     a new checkpoint, so a fresh checkpoint writing into a previously-

@@ -1,9 +1,11 @@
 """The bounded-stream lifecycle in streaming/run.run_stream, seen
 through its runners: a failed start or a failing sink leaves no query
-running and the session's shuffle-partition count where it was; a
-stateful stream's state operator keeps the count it was started with
-after the pin is gone, and across a checkpointed restart. The count is
-stream_shuffle_partitions' pick from the stream's source bytes."""
+running and the session's shuffle-partition count and checkpoint file
+manager where they were; a stateful stream's state operator keeps the
+count it was started with after the pin is gone, and across a
+checkpointed restart, and its logs keep the FileSystem checkpoint
+manager. The count is stream_shuffle_partitions' pick from the stream's
+source bytes."""
 
 from __future__ import annotations
 
@@ -16,8 +18,11 @@ import pytest
 from pyspark.errors import StreamingQueryException
 from pyspark.sql.streaming import StreamingQueryListener
 
+from flink_tutorial_spark import plan_capture
 from flink_tutorial_spark.session import load_table
 from flink_tutorial_spark.streaming.run import (
+    CHECKPOINT_FILE_MANAGER,
+    FILE_SYSTEM_CHECKPOINT_MANAGER,
     ONE_PARTITION_MAX_BYTES,
     STREAM_PARTITIONS,
     run_fanout,
@@ -31,17 +36,47 @@ from tests.test_session_schema_cache import _jobs_in_group
 
 SHUFFLE = "spark.sql.shuffle.partitions"
 OVERRIDE = "SPARK_GRAFT_STREAM_SHUFFLE"
+#: Spark's default manager on a local file system, unlike run_stream's pin
+FILE_CONTEXT_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileContextBasedCheckpointFileManager"
+)
+
+
+def _restore(spark, key, value):
+    if value is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, value)
+
+
+def record_managers(monkeypatch) -> list[str]:
+    """A list that gets the class of each stream's offset-log manager
+    as run_stream drains it (the query is live at plan capture)."""
+    managers = []
+    capture = plan_capture.capture_stream
+
+    def probe(q, label):
+        log = q._jsq.streamingQuery().offsetLog()
+        managers.append(log.fileManager().getClass().getName())
+        capture(q, label)
+
+    monkeypatch.setattr(plan_capture, "capture_stream", probe)
+    return managers
 
 
 @pytest.fixture
 def session_conf(spark):
     """A session shuffle-partition count that differs from every stream
-    pick, so a leaked pin is visible; the prior value is put back."""
-    prev = spark.conf.get(SHUFFLE)
+    pick, and a checkpoint file manager that differs from run_stream's,
+    so a leaked pin is visible; the prior values are put back."""
+    prev = {k: spark.conf.get(k, None) for k in (SHUFFLE, CHECKPOINT_FILE_MANAGER)}
     value = str(STREAM_PARTITIONS + 3)
     spark.conf.set(SHUFFLE, value)
+    spark.conf.set(CHECKPOINT_FILE_MANAGER, FILE_CONTEXT_CHECKPOINT_MANAGER)
     yield value
-    spark.conf.set(SHUFFLE, prev)
+    for key, old in prev.items():
+        _restore(spark, key, old)
 
 
 @pytest.fixture
@@ -112,6 +147,40 @@ def test_failed_start_stops_started_queries_and_restores_conf(
         run_to_memory(stream, "complete")
     assert spark.streams.active == []
     assert spark.conf.get(SHUFFLE) == session_conf
+    assert spark.conf.get(CHECKPOINT_FILE_MANAGER) == FILE_CONTEXT_CHECKPOINT_MANAGER
+
+
+@pytest.mark.parametrize("prior", [None, FILE_CONTEXT_CHECKPOINT_MANAGER])
+def test_started_stream_logs_through_the_file_system_manager(
+    spark, stream, monkeypatch, prior
+):
+    """The manager is pinned for the start only, yet the started
+    query's offset log keeps it; the session's value, or its absence,
+    is back once run_stream returns."""
+    managers = record_managers(monkeypatch)
+    prev = spark.conf.get(CHECKPOINT_FILE_MANAGER, None)
+    _restore(spark, CHECKPOINT_FILE_MANAGER, prior)
+    try:
+        got = run_to_memory(stream.groupBy("k").count(), "complete").collect()
+        assert spark.conf.get(CHECKPOINT_FILE_MANAGER, None) == prior
+    finally:
+        _restore(spark, CHECKPOINT_FILE_MANAGER, prev)
+    assert {r.k: r["count"] for r in got} == {"a": 2, "b": 1, "c": 1}
+    assert managers == [FILE_SYSTEM_CHECKPOINT_MANAGER]
+
+
+def test_run_to_memory_leaves_no_temporary_checkpoint(spark, stream):
+    """A checkpoint-less stream runs on a `temporary-*` checkpoint under
+    the JVM's java.io.tmpdir, which Spark deletes when the stream stops
+    cleanly: nothing has to sweep that directory after a query."""
+    tmp = spark.sparkContext._jvm.System.getProperty("java.io.tmpdir")
+
+    def temporary():
+        return {d for d in os.listdir(tmp) if d.startswith("temporary-")}
+
+    before = temporary()
+    assert run_to_memory(stream.dropDuplicates(["k"])).count() == 3
+    assert temporary() - before == set()
 
 
 def test_failing_sink_stops_query_and_restores_conf(spark, stream, session_conf):

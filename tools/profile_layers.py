@@ -13,19 +13,20 @@ per-key median of the runs' layer numbers, keyed exactly by
 its error. `--conf` sets a Spark SQL conf before the first query; the
 session runs on `local[$SPARK_GRAFT_CPUS]` (default 32), and a stderr
 warning names the gap when that differs from the machine's CPU count.
-Run it alone on the machine: the release step removes every `temporary-*` stream
-checkpoint under the JVM's `java.io.tmpdir`.
+Run it alone on the machine for timings: other load on the cores moves
+them. It deletes nothing outside its own queries' scratch: Spark
+removes a stream's temporary checkpoint when the stream stops cleanly
+(a stream that fails keeps its `temporary-*` dir under the JVM's
+`java.io.tmpdir`).
 """
 
 from __future__ import annotations
 
 import argparse
 import fnmatch
-import glob
 import json
 import os
 import re
-import shutil
 import statistics
 import subprocess
 import sys
@@ -55,15 +56,12 @@ def resolve(patterns: list[str]) -> list[str]:
 
 def release(spark) -> None:
     """Drop what a query leaves behind: materialize caches and scratch
-    dirs, memory-sink temp views and temporary stream checkpoints; then
-    drain the listener bus, so no late event reaches the next run."""
+    dirs and memory-sink temp views; then drain the listener bus, so no
+    late event reaches the next run."""
     purge_scratch()
     for t in spark.catalog.listTables():
         if t.isTemporary and t.name.startswith("mem_"):
             spark.catalog.dropTempView(t.name)
-    tmp = spark.sparkContext._jvm.System.getProperty("java.io.tmpdir")
-    for d in glob.glob(os.path.join(tmp, "temporary-*")):
-        shutil.rmtree(d, ignore_errors=True)
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
 
 
