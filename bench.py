@@ -1,13 +1,21 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs the headline catalog queries at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+"""Benchmark harness: times every catalog query at $SPARK_GRAFT_SF_DIR
+(default: the generated sf0.1 data) with `tools/profile_layers.measure()`,
+on the session `get_spark` builds (local[$SPARK_GRAFT_CPUS], default
+32; stderr warns when that differs from the machine's CPU count).
 
-  {"metric": "...", "value": <total-sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <sf>}
+The 20 HEADLINE queries run 5 times and the rest once, each after an
+untimed warm-up run at sf0.001 (when that scale sits next to
+$SPARK_GRAFT_SF_DIR). The whole artifact (every query's runs, median,
+IQR and layers) is written to BENCH_FULL_local.json; the last stdout
+line is the contract line, under 1,900 chars:
 
-Each query is materialized via a noop sink (full execution, no driver
-collect). Times are end-to-end per query on a warm session.
+  {"metric": "headline_queries_total_sec", "value": <sum of headline
+   medians>, "unit": "sec", "queries": {name: median, ...}, "sf": <sf>,
+   "n_queries": ..., "catalog_total_sec": ..., "staleness": {...}}
+
+A query that fails is kept in the artifact's `errors`; the bench then
+exits non-zero naming it and prints no contract line.
 """
 
 from __future__ import annotations
@@ -15,15 +23,18 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
 from flink_tutorial_spark import plans  # noqa: E402
-from flink_tutorial_spark.session import get_spark  # noqa: E402
+from tools.profile_layers import measure, resolve, session  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+#: each query's untimed warm-up reads the smallest generated scale next
+#: to SF_DIR when there is one: a warm-up at SF_DIR would add a whole
+#: untimed catalog pass to the wall
+WARM_DIR = os.path.join(os.path.dirname(os.path.normpath(SF_DIR)), "sf0.001")
 
 #: headline set: scan-agg, multi-join, windowed topn, sessionization,
 #: interval join, CEP, dedup (exact + minhash), similarity, text,
@@ -50,265 +61,59 @@ HEADLINE = [
     "streaming_running_sum",
     "streaming_count_window",
 ]
+HEADLINE_RUNS = 5
+#: the bench's reader keeps only the tail of stdout and parses its last line
+MAX_LINE = 1900
+STALENESS_KEYS = ("as_of_round", "floor_gap_rounds", "max_gap_rounds", "median_gap_rounds")
 
 
-def materialize(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
+def final_line(artifact: dict, staleness: dict) -> str:
+    """The contract line for a `measure()` artifact. Raises ValueError
+    naming every failed query: a failure must not leave a plausible
+    `value`. The headline map is dropped if the line would overflow."""
+    queries = artifact["queries"]
+    failed = sorted(n for n, r in queries.items() if "error" in r)
+    if failed:
+        raise ValueError(f"{len(failed)} queries failed: {', '.join(failed)}")
+    headline = {n: queries[n]["median"] for n in HEADLINE}
+    summary = {
+        "metric": "headline_queries_total_sec",
+        "value": round(sum(headline.values()), 3),
+        "unit": "sec",
+        "queries": headline,
+        "sf": float(artifact["sf"].rsplit("sf", 1)[-1]),
+        "n_queries": len(queries),
+        "catalog_total_sec": round(sum(r["median"] for r in queries.values()), 3),
+        "staleness": {k: staleness.get(k) for k in STALENESS_KEYS},
+    }
+    line = json.dumps(summary, separators=(",", ":"))
+    if len(line) > MAX_LINE:
+        del summary["queries"]
+        line = json.dumps(summary, separators=(",", ":"))
+    return line
 
 
 def main() -> None:
-    spark = get_spark("bench", cpus=CPUS)
-    catalog = list(plans.REGISTRY)
-    # JIT/codegen warm-up: run every catalog query once at the smallest
-    # SF so timings measure steady-state execution, not first-call JVM
-    # compilation (standard benchmark practice; JMH-style warm-up).
-    warm_dir = "/root/testdata/sf0.001"
-    if os.path.isdir(warm_dir) and warm_dir != SF_DIR:
-        for name in catalog:
-            try:
-                materialize(plans.REGISTRY[name].fn(spark, warm_dir))
-            except Exception:
-                pass
-
-    # Noise self-adjudication (VERDICT r7 #1): twice (r5, r7) a driver bench
-    # run showed 2-8x phantom regressions from box contention that cost a
-    # round of judge-side re-measurement. The artifact now carries enough
-    # signal to discount a contaminated run mechanically:
-    #   - `runs`: RAW per-run times for every query (not just the min), so a
-    #     one-off stall is visible as [8.1, 1.2] instead of hiding in a min.
-    #   - `canary`: a cheap fixed query (keyed_sum) re-run before the sweep
-    #     and after every ~10 queries; its drift band measures box noise
-    #     DURING the run, independent of any code change.
-    #   - `noise_flag`: true iff any canary rerun exceeds 2x the canary's own
-    #     min — the mechanical "this run is contaminated" bit.
-    CANARY = "keyed_sum"
-
-    def run_once(name: str) -> float:
-        t0 = time.perf_counter()
-        materialize(plans.REGISTRY[name].fn(spark, SF_DIR))
-        return time.perf_counter() - t0
-
-    canary_times: list[float] = []
-
-    def tick_canary() -> None:
-        if CANARY in plans.REGISTRY:
-            canary_times.append(round(run_once(CANARY), 3))
-
-    # full-catalog timing (VERDICT r1 #10): headliners get best-of-2 (the
-    # comparable-to-baseline number); the rest run once so regressions
-    # anywhere in the catalog are visible round-over-round.
-    times: dict[str, float] = {}
-    raw_runs: dict[str, list[float]] = {}
-    # Untimed canary warm-up: the very first execution at SF_DIR pays
-    # first-call codegen/shuffle-setup cost that is NOT box noise; without
-    # this the opening canary tick false-positives the noise_flag.
-    if CANARY in plans.REGISTRY:
-        run_once(CANARY)
-    tick_canary()
-    from flink_tutorial_spark.operators.dedup import purge_scratch
-
-    # Retry-on-outlier (VERDICT r16 #2): a single contended run of one
-    # heavy headliner can dominate the headline total (r16: a 12.97 s
-    # dedup_minhash_lsh outlier was 37% of the driver's noisy 34.8 s
-    # total). If BOTH best-of-2 samples of a headliner exceed 3x its
-    # committed min, the PAIR is declared contaminated and a fresh
-    # best-of-2 pair replaces it (ADVICE r17: the old keep-all-3 min
-    # was an asymmetric extra draw that could only lower flagged
-    # queries' mins) — every query's counted sample set stays exactly
-    # two draws; the discarded pair is exported under `discarded_runs`
-    # and the name under `retried`. No committed artifact -> no retries.
-    #
-    # The thresholds come from the COMMITTED artifact at git HEAD, not
-    # the on-disk file (ADVICE r17): bench.py overwrites
-    # BENCH_FULL_local.json at the end of every run, so in a multi-run
-    # series the on-disk file is the immediately preceding single run —
-    # a noise-flagged run 1 would then set run 2's thresholds. Fall back
-    # to the on-disk file only when git is unavailable (exported tree).
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
-    prior: dict = {}
-    in_repo = False
-    try:
-        import subprocess
-
-        in_repo = subprocess.run(
-            ["git", "-C", repo_dir, "rev-parse", "--verify", "HEAD"],
-            capture_output=True, timeout=10,
-        ).returncode == 0
-    except Exception:
-        # only the rev-parse PROBE may flip to the on-disk fallback
-        # (ADVICE r18): once we know we're inside a checkout, any later
-        # failure means no thresholds, never the previous run's clobber
-        in_repo = False
-    if in_repo:
-        try:
-            blob = subprocess.run(
-                ["git", "-C", repo_dir, "show", "HEAD:BENCH_FULL_local.json"],
-                capture_output=True, text=True, timeout=10,
-            )
-            if blob.returncode == 0:
-                runs_field = json.loads(blob.stdout).get("runs", {})
-                prior = runs_field if isinstance(runs_field, dict) else {}
-        except Exception:
-            # committed artifact unreadable (corrupt json, non-object
-            # payload, git timeout): treat as NO committed artifact
-            # (no retries) — falling back to the on-disk file here would
-            # reintroduce the mid-series threshold drift this path
-            # exists to prevent
-            prior = {}
-    if not in_repo:
-        # on-disk fallback ONLY outside a git checkout (exported tree):
-        # inside one, an absent/corrupt committed artifact means no
-        # thresholds, never the previous run's clobber
-        try:
-            with open(os.path.join(repo_dir, "BENCH_FULL_local.json")) as f:
-                prior = json.load(f).get("runs", {})
-        except Exception:
-            pass
-    committed_min = {
-        n: min(v) for n, v in prior.items()
-        if isinstance(v, list) and v and all(isinstance(x, (int, float)) for x in v)
-    }
-    retried: list[str] = []
-    discarded_runs: dict[str, list[float]] = {}
-
-    for i, name in enumerate(catalog):
-        runs = 2 if name in HEADLINE else 1
-        raw = []
-        for _ in range(runs):
-            raw.append(round(run_once(name), 3))
-            # purge BETWEEN samples, not just between queries: the
-            # materialize persist caches would otherwise make sample 2
-            # a warm cache hit (CacheManager matches the identical
-            # canonicalized sub-plan), inflating the best-of-2 min vs
-            # the baseline protocol's always-cold samples. Safe: the
-            # query is fully materialized; unpersist leaves lineage.
-            purge_scratch()
-        if (
-            name in HEADLINE
-            and name in committed_min
-            and min(raw) > 3 * committed_min[name]
-        ):
-            # replacement pair, not an extra draw: if the fresh pair is
-            # also >3x the regression is real and reported as-is
-            retried.append(name)
-            discarded_runs[name] = raw
-            raw = []
-            for _ in range(2):
-                raw.append(round(run_once(name), 3))
-                purge_scratch()
-        raw_runs[name] = raw
-        times[name] = min(raw)
-        if (i + 1) % 10 == 0:
-            tick_canary()
-    tick_canary()
-
-    # Flag against the MEDIAN, not the min: on a sub-second canary the
-    # min is itself a lucky outlier of a jitter band (measured: clean
-    # idle-box runs show 0.2-0.4s ticks, max/min 2.0-2.8 with max/median
-    # 1.3-1.8, while real contention pushes ticks 2-8x over the median).
-    canary_min = min(canary_times) if canary_times else 0.0
-    canary_med = sorted(canary_times)[len(canary_times) // 2] if canary_times else 0.0
-    canary_max_ratio = (
-        round(max(canary_times) / canary_med, 2) if canary_med > 0 else 1.0
-    )
-    noise_flag = bool(canary_med > 0 and max(canary_times) > 2 * canary_med)
-
-    headline_total = round(sum(times[n] for n in HEADLINE), 3)
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    full = {
-        "metric": "headline_queries_total_sec",
-        "value": headline_total,
-        "unit": "sec",
-        "queries": times,
-        "catalog_total_sec": round(sum(times.values()), 3),
-        # COMPARISON FIXTURES (tags=("...","fixture")): two-pipeline /
-        # engine-side twins kept to prove engine mechanisms their
-        # one-pass siblings can't state — NOT deployment shapes.
-        # catalog_total_sec still INCLUDES them; their cost is reported
-        # as a separate subtotal (fixture_total_sec) plus an explicit
-        # fixtures-excluded total, so a reader can see deployment cost
-        # without recomputing (VERDICT r14 #6; ADVICE r15; growth
-        # policy in ROADMAP).
-        "fixture_queries": sorted(
-            n for n, s in plans.REGISTRY.items() if "fixture" in s.tags
-        ),
-        "fixture_total_sec": round(
-            sum(t for n, t in times.items()
-                if "fixture" in plans.REGISTRY[n].tags), 3
-        ),
-        "catalog_total_excl_fixtures_sec": round(
-            sum(t for n, t in times.items()
-                if "fixture" not in plans.REGISTRY[n].tags), 3
-        ),
-        "n_queries": len(times),
-        "sf": float(sf),
-        "runs": raw_runs,
-        "retried": retried,
-        # contaminated best-of-2 pairs replaced by the retry rule —
-        # kept out of `runs` so min-merge never mins over a sample the
-        # protocol discarded, but preserved here for the noise record
-        "discarded_runs": discarded_runs,
-        "canary": {
-            "query": CANARY,
-            "times": canary_times,
-            "min": canary_min,
-            "median": canary_med,
-            "max_ratio": canary_max_ratio,
-        },
-        "noise_flag": noise_flag,
-    }
-    # Driver-sample staleness (VERDICT r10 #7): max/median rounds since
-    # each catalog query's last green driver row — keeps the 50/round
-    # rotation honest as the catalog grows.
+    resolve(HEADLINE)  # an unregistered headline name fails before the JVM starts
+    rest = [n for n in plans.REGISTRY if n not in HEADLINE]
+    spark = session("bench")
+    warm_dir = WARM_DIR if os.path.isdir(WARM_DIR) else None
+    artifact = measure(spark, SF_DIR, [(rest, 1), (HEADLINE, HEADLINE_RUNS)], warm_dir=warm_dir)
+    spark.stop()
+    with open(os.path.join(REPO, "BENCH_FULL_local.json"), "w") as f:
+        json.dump(artifact, f, indent=1, sort_keys=True)
+        f.write("\n")
     try:
         from tools.staleness_report import staleness_summary
 
-        full["staleness"] = staleness_summary()
+        staleness = staleness_summary()
     except Exception as e:  # never fail the bench over the report
-        full["staleness"] = {"err": str(e)}
-    # Full per-query map: persisted to a file (committed each round) and
-    # printed on a NON-final line for human logs.
-    full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                             "BENCH_FULL_local.json")
+        print(f"bench: no staleness report: {e!r}", file=sys.stderr)
+        staleness = {}
     try:
-        with open(full_path, "w") as f:
-            json.dump(full, f, indent=1, sort_keys=True)
-            f.write("\n")
-    except OSError as e:
-        print(f"WARNING: could not write {full_path}: {e}", file=sys.stderr)
-    print("FULL " + json.dumps(full))
-    # The driver keeps only the last 2000 chars of stdout and parses the
-    # final JSON line; a 101-query map overflows that buffer (observed:
-    # BENCH_r02..r04 all have parsed=null with a 2000-char tail). So the
-    # LAST line is a compact summary that always fits: headline per-query
-    # map + catalog totals, compact separators. Guard: if it ever exceeds
-    # 1900 chars, drop the per-query map rather than overflow.
-    summary = dict(full)
-    # `queries` here is the HEADLINE subset only; n_queries/catalog_total_sec
-    # still describe the full catalog, whose complete map is in
-    # BENCH_FULL_local.json. n_headline_queries makes the trim explicit.
-    # Raw per-run times stay in the full artifact only; canary + noise_flag
-    # (small, and the load-bearing noise signal) stay on the final line.
-    summary.pop("runs", None)
-    summary.pop("discarded_runs", None)
-    # final line: keep only the scalar staleness numbers (the stalest
-    # name-map lives in the full artifact)
-    if isinstance(summary.get("staleness"), dict):
-        summary["staleness"] = {
-            k: summary["staleness"].get(k)
-            for k in (
-                "as_of_round",
-                "floor_gap_rounds",  # ceil(N/sample): max_gap == floor
-                "max_gap_rounds",    # is the rotation OPTIMUM (r14 #5)
-                "median_gap_rounds",
-            )
-        }
-    summary["queries"] = {n: times[n] for n in HEADLINE if n in times}
-    summary["n_headline_queries"] = len(summary["queries"])
-    line = json.dumps(summary, separators=(",", ":"))
-    if len(line) > 1900:
-        summary.pop("queries")
-        line = json.dumps(summary, separators=(",", ":"))
+        line = final_line(artifact, staleness)
+    except ValueError as e:
+        sys.exit(f"bench: {e}; see `errors` in BENCH_FULL_local.json")
     print(line)
 
 

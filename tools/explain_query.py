@@ -1,6 +1,7 @@
 #!/usr/bin/env python
-"""Print a catalog query's .explain("formatted") plan (round-19 plan
-artifacts: plans/r19/<query>_{before,after}.txt).
+"""Print a catalog query's .explain("formatted") plan (the round-19 and
+round-20 before/after dumps it wrote are in git: `git show
+82690a6:plans/r20/<query>_after.txt`).
 
 Batch queries print the pre-execution formatted plan. Queries that
 materialize mid-flight (memory-sink streaming runs, localCheckpoint,
