@@ -11,8 +11,10 @@ The reference's sink semantics split two ways:
   contract the reference gets from idempotent upsert SQL.
 
 The local stand-in for an external KV/JDBC table is a parquet keyed
-table (read-modify-overwrite per epoch). The JDBC path itself is
-sketched behind an import guard (no DB in this container).
+table (read-modify-overwrite per epoch). The JDBC path itself,
+`jdbc_upsert_writer`, needs a JDBC driver jar on the Spark classpath;
+only its `_merge_sql` statements have an in-container test (through the
+DuckDB twin, `duckdb_upsert_writer`).
 
 The keyed sinks' on-disk protocol — version and epoch dir names, the
 atomic link flip and rename, pruning, table meta and the pending-marker
@@ -72,11 +74,10 @@ class KeyedUpsertSink:
         size an executor rewrites comfortably — table_size / n_buckets
         of roughly 100-500 MB (a few tens of MB locally). Too few
         buckets and every epoch rewrites huge files; too many and the
-        table fragments into small files. The count is FIXED at
-        construction (placement must match between writer and reader);
-        when the table outgrows it (per-bucket size past ~2-4x the
-        target), re-shard with `rebucket(n)` — one batch rebuild,
-        answers identically after."""
+        table fragments into small files. The count is FIXED for the
+        table's life (placement must match between writer and reader,
+        and the table meta records it): to change it, rebuild the table
+        from its source into a fresh path."""
         self.spark = spark
         self.path = path
         self.key_cols = key_cols
@@ -109,8 +110,19 @@ class KeyedUpsertSink:
                 "stable_value_buckets=True to accept the contract that a "
                 "key's bucket value never changes across re-insertions."
             )
+        # earlier versions of this sink could re-shard a live table and
+        # bracketed the link swap with this marker; this version cannot
+        # finish one, and a half-swapped table mixes two placements
+        stale = os.path.join(self.path, "_rebucket_pending.json")
+        if os.path.exists(stale):
+            raise RuntimeError(
+                f"{stale}: an interrupted rebucket() of an earlier version "
+                "left this table half re-sharded, and this version cannot "
+                "finish it — finish it with that version, or rebuild the "
+                "table from its source"
+            )
         os.makedirs(os.path.join(self.path, "links"), exist_ok=True)
-        self._recover_rebucket()
+        self._recover()
         self._check_meta()
 
     def _link(self, bucket: int) -> str:
@@ -122,19 +134,22 @@ class KeyedUpsertSink:
     def _write_meta(self) -> None:
         publish.write_json(self._meta_path(), {"n_buckets": self.n_buckets})
 
+    def _recover(self) -> None:
+        """Hook, run by the constructor before the meta check: finish an
+        interrupted maintenance publish. The keyed-overwrite channel has
+        none (an epoch publishes by link flips a replay re-runs)."""
+
     def _check_meta(self) -> None:
         """Bucket-count guard (ADVICE r16): the count is placement — a
-        sink reconstructed with a stale count after a completed
-        rebucket() would silently corrupt (overwrite channel: read()
-        scans range(n), dropping the buckets a GROW added; append
-        channel: point probes compute bucket ids under the wrong
-        modulus and miss candidates). The count is persisted in a small
-        table-meta file written on first use and by rebucket(); a
-        mismatch at construction raises instead, mirroring the
-        interrupted-rebucket marker's count check, and so does a meta
-        file that does not hold a valid count. Pre-meta tables (none
-        in-repo) adopt the constructor's count on first
-        reconstruction."""
+        sink constructed with another count than the table was written
+        under would silently corrupt (overwrite channel: read() scans
+        range(n), dropping buckets >= n; append channel: point probes
+        compute bucket ids under the wrong modulus and miss candidates).
+        The count is persisted in a small table-meta file written on
+        first use; a mismatch at construction raises instead, mirroring
+        the fold marker's count check, and so does a meta file that does
+        not hold a valid count. Pre-meta tables (none in-repo) adopt the
+        constructor's count on first reconstruction."""
         recorded = publish.read_meta(self._meta_path())
         if recorded is None:
             # pre-meta adoption (legacy tables only — every table this
@@ -158,8 +173,8 @@ class KeyedUpsertSink:
                 f"constructed with {self.n_buckets}. The count is "
                 "placement — reading or writing under the wrong one "
                 "silently drops buckets / strands keys. Construct "
-                f"with n_buckets={recorded}, or rebucket() to the "
-                "new count from a correctly-constructed sink."
+                f"with n_buckets={recorded}; to change the count, "
+                "rebuild the table from its source."
             )
 
     def _max_layout_bucket(self) -> int | None:
@@ -173,37 +188,6 @@ class KeyedUpsertSink:
             if e.startswith("b") and e[1:].isdigit()
         ]
         return max(ids) if ids else None
-
-    def _rebucket_marker(self) -> str:
-        return os.path.join(self.path, "_rebucket_pending.json")
-
-    def _recover_rebucket(self) -> None:
-        """Finish an interrupted rebucket() (constructor hook): the
-        marker exists only between the new version's completed write and
-        the end of the link swap + prune, so completing the swap from it
-        is always safe — without this, a crash mid-swap would leave some
-        buckets unlinked and the NEXT epoch would silently drop their
-        rows (merged = new with no old side)."""
-
-        def complete(pending: dict) -> None:
-            # point every link at the new version and drop links with no
-            # partition there; the whole pass is idempotent
-            present = publish.flip_all(pending["version_dir"], self._link)
-            links = os.path.join(self.path, "links")
-            for entry in os.listdir(links):
-                if entry.endswith(".tmp") or (
-                    entry.startswith("b") and int(entry[1:]) not in present
-                ):
-                    os.unlink(os.path.join(links, entry))
-            publish.prune(self.path, present.values())
-            # the meta write rides the marker bracket: recovery re-runs it
-            # so the recorded count can never lag a completed swap
-            self._write_meta()
-
-        publish.recover(
-            self._rebucket_marker(), "rebucket", self.path, self.n_buckets,
-            complete,
-        )
 
     def _bucket_expr(self) -> F.Column:
         return F.pmod(F.hash(*self.bucket_cols), F.lit(self.n_buckets))
@@ -247,11 +231,24 @@ class KeyedUpsertSink:
         return merged
 
     def _live_bucket_paths(self) -> dict[int, str]:
+        """{bucket: dir its link points at} of the buckets written so
+        far. A link whose target is gone (the table dir was moved, or a
+        version dir removed by hand) raises: skipping it would drop the
+        bucket's rows from reads and from the next epoch's merge."""
         out = {}
         for b in range(self.n_buckets):
             link = self._link(b)
-            if os.path.lexists(link) and os.path.exists(os.path.realpath(link)):
-                out[b] = os.path.realpath(link)
+            if not os.path.lexists(link):
+                continue
+            target = os.path.realpath(link)
+            if not os.path.exists(target):
+                raise RuntimeError(
+                    f"bucket {b} of keyed table {self.path} is dangling: "
+                    f"its link {link} points at {os.readlink(link)}, which "
+                    "does not exist (bucket links are absolute, so a moved "
+                    "table must be read at its original path)"
+                )
+            out[b] = target
         return out
 
     def _reduce_batch(self, batch_df: DataFrame) -> DataFrame:
@@ -365,90 +362,6 @@ class KeyedUpsertSink:
             return self.read().limit(0)
         return self._read(*paths)
 
-    def rebucket(self, n_buckets: int) -> None:
-        """Re-shard the table under a new bucket count (VERDICT r15 #3:
-        a corpus that grows 100x under a fixed count means per-bucket
-        rewrite units grow 100x). ONE batch job: read every live
-        bucket, re-hash under the new count, write a fresh version,
-        repoint all links — after which the sink (its placement
-        expression now uses the new count) and any fresh read()/
-        read_buckets() answer identically to before (tested against
-        the ANN oracle). Per-key/per-bucket contents are a pure
-        repartition of the same rows.
-
-        Maintenance operation, NOT an epoch — run it on a QUIESCED,
-        COMMITTED table (no uncommitted epoch in flight, no concurrent
-        readers or writers; the lakehouse OPTIMIZE rule): it rewrites
-        the whole table (that is the point — amortize it; run it when
-        per-bucket size drifts past the constructor's sizing rule) and
-        it DELETES the superseded version dirs, invalidating lazy
-        DataFrames from earlier read() calls.
-
-        Crash safety + the epoch ledger: the new version dir is named
-        ``v{L}_{uuid}`` where L is the MAX epoch recorded across the
-        old bucket dirs, so EpochLedgerMergeAggSink's name-encoded
-        per-bucket ledger survives a re-shard (committed epochs <= L
-        still skip on replay; the fresh-checkpoint lineage guard still
-        fires) — that collapse of per-bucket ledgers to their max is
-        exactly why the table must be quiesced first. A pending-marker
-        file brackets the link swap: a crash mid-swap is completed by
-        the next constructor (see _recover_rebucket), never left as
-        silently unlinked buckets."""
-        old_paths = self._live_bucket_paths()
-        ledger_max = max(
-            (publish.epoch_of(os.path.dirname(p)) for p in old_paths.values()),
-            default=0,
-        )
-        if ledger_max < 0:
-            # every version dir this class writes is v{epoch}_{uuid}; an
-            # unparsable name means the name-encoded replay-protection
-            # metadata (epoch ledger + lineage guard) is already damaged
-            # — fail before rewriting the whole table on top of it
-            # (ADVICE r16: the old max(ledger_max, 0) clamp silently
-            # fabricated ledger epoch 0, double-counting replays on
-            # ledger-bearing subclasses)
-            raise ValueError(
-                f"rebucket at {self.path}: no live bucket has a parsable "
-                "v{{epoch}}_* version-dir name — the name-encoded epoch "
-                "ledger is unreliable; repair the table (or rebuild it "
-                "from source) before re-sharding"
-            )
-        old_n = self.n_buckets
-        self.n_buckets = n_buckets  # adopt first: _bucket_expr uses it
-        version = publish.version_dir(self.path, ledger_max)
-        try:
-            if not old_paths:
-                # empty table: nothing to rewrite, just adopt the count
-                self._write_meta()
-                return
-            df = self._read(*old_paths.values())
-            self._write(
-                df.withColumn("_bucket", self._bucket_expr()),
-                version,
-                f"rebucket:{os.path.basename(self.path)}",
-            )
-            # the marker is the publish point: once it lands, the new
-            # count is the table's committed layout
-            publish.write_json(
-                self._rebucket_marker(),
-                {"version_dir": version, "n_buckets": n_buckets},
-            )
-        except Exception:
-            # nothing published: links and meta still hold the old
-            # layout, so the live instance must match them (a meta or
-            # marker write is atomic — a raise means disk still records
-            # the old count), and the orphaned full-table rewrite must
-            # not leak (epoch-level pruning never empties a dir with
-            # bucket ids >= old_n)
-            shutil.rmtree(version, ignore_errors=True)
-            self.n_buckets = old_n
-            raise
-        # the commit sequence IS crash recovery: one code path serves the
-        # live rebucket and the next constructor. A failure inside it
-        # leaves the marker for a retry, with the live instance
-        # consistent for probing (links swap before the meta write).
-        self._recover_rebucket()
-
 
 class KeyedAppendSink(KeyedUpsertSink):
     """Pure-append channel of the keyed table (VERDICT r15 #2) — the
@@ -482,49 +395,6 @@ class KeyedAppendSink(KeyedUpsertSink):
     buckets, where a moved key's stale row would win unchallenged — so
     the opt-in asserts the same never-moves rule."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        key_cols: list[str],
-        n_buckets: int = 16,
-        bucket_cols: list[str] | None = None,
-        stable_value_buckets: bool = False,
-        compact_every_n_epochs: int | None = None,
-    ):
-        """`compact_every_n_epochs` (VERDICT r16 #3) is the
-        auto-compaction policy: when set, __call__ folds the table back
-        to one directory whenever the published-epoch-dir count reaches
-        the threshold, bounding the read-side rent (dedup window legs +
-        dir stitching) without an operator remembering to call
-        compact(). Safe mid-stream because the sink is the table's only
-        writer between epochs (foreachBatch sinks run sequentially on
-        the driver) — but the standing reader rule applies: lazy
-        DataFrames from earlier read() calls must not be held across
-        epochs, since the fold removes the dirs they reference. None
-        (default) keeps compaction manual — the lakehouse
-        INSERT INTO + scheduled OPTIMIZE split."""
-        if compact_every_n_epochs is not None and compact_every_n_epochs < 1:
-            raise ValueError("compact_every_n_epochs must be >= 1 (or None)")
-        self.compact_every_n_epochs = compact_every_n_epochs
-        super().__init__(
-            spark,
-            path,
-            key_cols,
-            n_buckets=n_buckets,
-            bucket_cols=bucket_cols,
-            stable_value_buckets=stable_value_buckets,
-        )
-
-    def _recover_rebucket(self) -> None:
-        # the parent's link-swap marker never exists on this channel
-        # (no links), but running its recovery is a free no-op; the
-        # append channel's own interrupted-maintenance marker is the
-        # fold marker — both complete BEFORE the constructor's meta
-        # check so a recovered count is checked, not the stale one
-        super()._recover_rebucket()
-        self._recover_fold()
-
     def _fold_marker(self) -> str:
         return os.path.join(self.path, "_fold_pending.json")
 
@@ -534,27 +404,26 @@ class KeyedAppendSink(KeyedUpsertSink):
             default=None,
         )
 
-    def _recover_fold(self) -> None:
-        """Finish an interrupted _fold_epochs (constructor hook, the
-        append twin of _recover_rebucket; ADVICE r16): the marker exists
-        from just before the fold's atomic publish until after the
-        superseded-dir removals, so recovery is either a no-op (publish
-        never happened — drop the marker and sweep the staged copy here
-        too, since a read-only table may never run __call__'s sweep) or
-        a re-run of the removals + meta write. Without this, a crash
-        between publish and removals left mixed-layout epoch dirs that
-        read_buckets would silently probe stale until an operator
-        remembered to re-run the fold."""
+    def _recover(self) -> None:
+        """Finish an interrupted compact() (constructor hook; ADVICE
+        r16): the marker exists from just before the fold's atomic
+        publish until after the superseded-dir removals, so recovery is
+        either a no-op (publish never happened — drop the marker and
+        sweep the staged copy here too, since a read-only table may
+        never run __call__'s sweep) or a re-run of the removals + meta
+        write. Without this, a crash between publish and removals left
+        mixed-layout epoch dirs that read_buckets would silently probe
+        stale until an operator remembered to re-run the fold. A marker
+        from an earlier version's re-shard records the fold's new bucket
+        count ahead of the meta, so it completes only under that
+        count."""
 
         def complete(pending: dict) -> None:
             for d in pending["superseded"]:
                 shutil.rmtree(d, ignore_errors=True)
             self._write_meta()
 
-        publish.recover(
-            self._fold_marker(), "fold", self.path, self.n_buckets,
-            complete, published="final",
-        )
+        publish.recover(self._fold_marker(), self.path, self.n_buckets, complete)
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
         # lineage guard (the append twin of EpochLedgerMergeAggSink's):
@@ -593,15 +462,7 @@ class KeyedAppendSink(KeyedUpsertSink):
         publish.sweep_staging(self.path)
         staging = publish.staging_dir(self.path, epoch_id)
         self._write(new, staging, f"sink:{os.path.basename(self.path)}")
-        if (
-            publish.publish_dir(staging, publish.epoch_dir(self.path, epoch_id))
-            and self.compact_every_n_epochs is not None
-            and len(self._epoch_dirs()) >= self.compact_every_n_epochs
-        ):
-            # auto-compaction (VERDICT r16 #3): fold inside the epoch,
-            # after the publish — the sink is the only writer here, and
-            # an interrupted fold is marker-recovered like any other
-            self.compact()
+        publish.publish_dir(staging, publish.epoch_dir(self.path, epoch_id))
 
     def _epoch_dirs(self) -> list[str]:
         epochs_dir = os.path.join(self.path, "epochs")
@@ -674,115 +535,49 @@ class KeyedAppendSink(KeyedUpsertSink):
         # _bucket is a no-op on an absent column
         return self._latest_per_key(self._read(*paths))
 
-    def _fold_epochs(self, dirs: list[str], tag: str) -> None:
-        """Shared fold-publish for compact()/rebucket(): dedup the given
-        epoch dirs to the latest row per key, publish ONE directory
-        stamped with the max published epoch (metadata-only from the dir
-        names — rows are written with `_epoch` equal to their dir's id,
-        so no scan is needed; later epochs still win the dedup), then
-        remove the superseded dirs.
+    def compact(self) -> None:
+        """Fold the accumulated epoch dirs into ONE (the keyed dedup runs
+        once at compaction instead of on every read; dir count resets) —
+        the periodic maintenance job of every append-channel store, run
+        when reads slow or the dir count drifts (e.g. every N epochs).
+        The fold dedups the epoch dirs to the latest row per key and
+        publishes one directory stamped with the max published epoch
+        (metadata-only from the dir names — rows are written with
+        `_epoch` equal to their dir's id, so no scan is needed; later
+        epochs still win the dedup), then removes the superseded dirs.
+        That invalidates lazy DataFrames from earlier read() calls: run
+        it on a quiesced table with no concurrent readers.
 
-        Interrupted-maintenance story (ADVICE r16): marker on ->
-        publish -> removals -> meta -> marker off, where everything after
-        the publish is _recover_fold itself, so a crash anywhere is
-        completed (or discarded, pre-publish) by the next constructor. A
-        FULL read is correct either way (every leftover old row loses
-        the max-epoch dedup to the folded copy or ties it
-        byte-identically), but point probes (read_buckets) would
-        silently see stale co-residents from the leftover dirs; the
-        marker turns that into mechanical recovery instead of an
-        operator remembering to re-run the fold. The meta write inside
-        the bracket means a rebucket-fold's new count can never silently
-        lag the layout."""
+        Interrupted-run story (ADVICE r16): marker on -> publish ->
+        removals -> meta -> marker off, where everything after the
+        publish is _recover itself, so a crash anywhere is completed (or
+        discarded, pre-publish) by the next constructor. A FULL read is
+        correct either way (every leftover old row loses the max-epoch
+        dedup to the folded copy or ties it byte-identically), but point
+        probes (read_buckets) would silently see stale co-residents from
+        the leftover dirs; the marker turns that into mechanical
+        recovery instead of an operator remembering to re-run the
+        fold."""
+        dirs = self._epoch_dirs()
+        if len(dirs) <= 1:
+            return
         max_epoch = self._max_published_epoch()
         folded = (
             self._latest_per_key(self._read_epochs(dirs))
             .withColumn("_bucket", self._bucket_expr())
             .withColumn("_epoch", F.lit(max_epoch).cast("long"))
         )
-        staging = publish.staging_dir(self.path, tag)
-        self._write(folded, staging, f"{tag}:{os.path.basename(self.path)}")
-        final = publish.epoch_dir(self.path, max_epoch, tag[0])
+        staging = publish.staging_dir(self.path, "compact")
+        self._write(folded, staging, f"compact:{os.path.basename(self.path)}")
+        final = publish.epoch_dir(self.path, max_epoch, "c")
         # a failed marker write publishes nothing; the staged fold copy
-        # is swept by the next __call__/_recover_fold
+        # is swept by the next __call__/_recover
         publish.write_json(
             self._fold_marker(),
             {"final": final, "superseded": dirs, "n_buckets": self.n_buckets},
         )
         publish.publish_dir(staging, final)
-        self._recover_fold()
-
-    def compact(self) -> None:
-        """Fold the accumulated epoch dirs into ONE (the keyed dedup runs
-        once at compaction instead of on every read; dir count resets) —
-        the periodic maintenance job of every append-channel store, run
-        when reads slow or the dir count drifts (e.g. every N epochs).
-        Removes the superseded epoch dirs, which invalidates lazy
-        DataFrames from earlier read() calls: run it on a quiesced table
-        with no concurrent readers, like rebucket(); see _fold_epochs
-        for the interrupted-run rule."""
-        dirs = self._epoch_dirs()
-        if len(dirs) <= 1:
-            return
-        self._fold_epochs(dirs, "compact")
-
-    def rebucket(self, n_buckets: int) -> None:
-        """Append-channel re-shard: the parent's link-swap rebuild does
-        not apply here (no links — placement lives in each epoch dir's
-        `_bucket=` layout, and merely flipping n_buckets would make
-        point probes compute NEW-count bucket ids against OLD-count
-        directories: silently dropped candidates). A re-shard must
-        rewrite the epoch layout, so it IS a compaction under the new
-        count: fold history to the latest row per key, publish one
-        directory bucketed by the new expression, drop the old dirs.
-        Same quiesced-table rule and interrupted-run story as compact()
-        (see _fold_epochs)."""
-        dirs = self._epoch_dirs()
-        old_n = self.n_buckets
-        self.n_buckets = n_buckets  # adopt first: _bucket_expr uses it
-        try:
-            if not dirs:
-                # empty table: the meta write is atomic, so a raise means
-                # disk meta still records old_n (restored below)
-                self._write_meta()
-                return
-            self._fold_epochs(dirs, "rebucket")
-        except Exception:
-            # Restore the old count ONLY if the fold never published —
-            # _fold_epochs can fail AFTER its atomic publish (removals /
-            # meta / marker unlink), where the layout already IS the new
-            # count and restoring old_n would make this live sink probe
-            # and place under the wrong modulus. Publish state is in the
-            # marker (none: failed before it landed, the old layout is
-            # intact); _recover_fold then completes-or-discards
-            # in-process (it matches on the marker's count, which is the
-            # current self.n_buckets by construction).
-            try:
-                pending = publish.pending(self._fold_marker(), "fold", self.path)
-            except RuntimeError as marker_err:
-                # Unreadable marker = UNKNOWN publish state (ADVICE r17):
-                # the fold may well have published, so restoring old_n
-                # could put this live sink on the wrong modulus — keep
-                # the new count and surface both errors (the fold error
-                # rides as __context__); the next constructor re-attempts
-                # recovery once the marker is repaired or removed.
-                raise RuntimeError(
-                    f"rebucket at {self.path} failed and its fold marker "
-                    f"is unreadable ({marker_err}): publish state unknown "
-                    "— keeping the new bucket count; repair or remove the "
-                    "marker and reconstruct the sink"
-                ) from marker_err
-            published = pending is not None and os.path.isdir(pending["final"])
-            # recovery completes-or-discards in-process; a failure inside
-            # it chains onto the fold error rather than masking it, and
-            # the count restore still happens for an unpublished fold
-            try:
-                if pending is not None:
-                    self._recover_fold()
-            finally:
-                if not published:
-                    self.n_buckets = old_n
-            raise
+        self._recover()
 
 
 #: process-wide idempotence-probe verdicts, keyed by the combine's
@@ -982,9 +777,7 @@ class EpochLedgerMergeAggSink(MergeAggSink):
         self, dirty: list[int], live: dict[int, str], epoch_id: int
     ) -> list[int]:
         # each live bucket's last-applied epoch, parsed from its version
-        # dir name (rebucket() keeps the scheme: its folded dir is
-        # v{max ledger}_* on a quiesced table, so the ledger and this
-        # guard survive a re-shard)
+        # dir name
         ledger = {
             b: publish.epoch_of(os.path.dirname(live[b]))
             for b in dirty

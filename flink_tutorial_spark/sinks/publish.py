@@ -17,14 +17,15 @@ epoch ledger read back (`epoch_of`), so it costs no extra write. Small
 files (table meta, pending markers, the high watermark) are replaced
 tmp + os.replace.
 
-A multi-step maintenance publish (rebucket, fold) is bracketed by a
-pending marker: `write_json` the marker (the publish point), take the
-publish step, then `recover`, which runs the remaining steps and
-unlinks the marker. A constructor that finds a marker calls the same
-`recover`, so the live path and crash recovery are one code path. A
-marker is validated before anything acts on it: its shape, its bucket
-count, and that every path it names resolves strictly inside the table,
-so a hand-repaired marker can never point recovery's rmtree elsewhere.
+The one multi-step maintenance publish, the append channel's fold, is
+bracketed by a pending marker: `write_json` the marker (the publish
+point), take the publish step, then `recover`, which runs the remaining
+steps and unlinks the marker. A constructor that finds a marker calls
+the same `recover`, so the live path and crash recovery are one code
+path. A marker is validated before anything acts on it: its shape, its
+bucket count, and that every path it names resolves strictly inside the
+table, so a hand-repaired marker can never point recovery's rmtree
+elsewhere.
 
 What is written — merge, fold, ledger, probes, reads — stays with the
 sinks.
@@ -42,11 +43,8 @@ from pyspark.sql import DataFrame
 
 from flink_tutorial_spark import plan_capture
 
-#: required fields of each pending-marker kind
-MARKERS = {
-    "rebucket": {"version_dir": str, "n_buckets": int},
-    "fold": {"final": str, "superseded": list, "n_buckets": int},
-}
+#: required fields of the fold's pending marker
+FOLD_MARKER = {"final": str, "superseded": list, "n_buckets": int}
 
 
 def _uid() -> str:
@@ -113,19 +111,17 @@ def write_json(path: str, obj) -> None:
     write_atomic(path, json.dumps(obj))
 
 
-def flip_all(version: str, link: Callable[[int], str]) -> dict[int, str]:
+def flip_all(version: str, link: Callable[[int], str]) -> None:
     """Atomically repoint the symlink `link(b)` of each bucket written
-    in `version` at its new dir; returns those dirs. Idempotent, so
-    crash recovery re-runs it verbatim."""
-    present = bucket_dirs(version)
-    for b, target in present.items():
+    in `version` at its new dir. A leftover tmp link from a crashed flip
+    is replaced."""
+    for b, target in bucket_dirs(version).items():
         dst = link(b)
         tmp = dst + ".tmp"
         if os.path.lexists(tmp):
             os.unlink(tmp)
         os.symlink(target, tmp)
         os.replace(tmp, dst)
-    return present
 
 
 def publish_dir(staging: str, final: str) -> bool:
@@ -148,22 +144,21 @@ def sweep_staging(root: str) -> None:
             shutil.rmtree(os.path.join(root, entry), ignore_errors=True)
 
 
-def prune(root: str, keep: Iterable[str], buckets=None) -> None:
+def prune(root: str, keep: Iterable[str], buckets: Iterable[int]) -> None:
     """Remove, from every version dir under `root`, the `_bucket=` dirs
-    of `buckets` (all when None) that do not resolve to a path in
-    `keep`, then the version dirs left without buckets. An epoch keeps
-    each dirty bucket's live and previous (N-1) dirs, so a lazy read()
-    stays valid one more epoch; a rebucket keeps only its new version.
-    Paths compare by realpath, so a root spelled differently from the
-    writer's never prunes what it keeps."""
+    of `buckets` that do not resolve to a path in `keep`, then the
+    version dirs left without buckets. An epoch keeps each dirty
+    bucket's live and previous (N-1) dirs, so a lazy read() stays valid
+    one more epoch. Paths compare by realpath, so a root spelled
+    differently from the writer's never prunes what it keeps."""
     keep = {os.path.realpath(p) for p in keep}
+    buckets = set(buckets)
     for entry in os.listdir(root):
         vdir = os.path.join(root, entry)
         if not (entry.startswith("v") and os.path.isdir(vdir)):
             continue
         for b, full in bucket_dirs(vdir).items():
-            kept = os.path.realpath(full) in keep
-            if not kept and (buckets is None or b in buckets):
+            if b in buckets and os.path.realpath(full) not in keep:
                 shutil.rmtree(full, ignore_errors=True)
         if not bucket_dirs(vdir):
             shutil.rmtree(vdir, ignore_errors=True)
@@ -232,48 +227,34 @@ def read_meta(path: str) -> int | None:
         ) from e
 
 
-def pending(marker: str, kind: str, root: str) -> dict | None:
-    """The validated `kind` marker at `marker`; None if there is none.
-    An unreadable or wrong-shape marker means the publish state is
-    unknown — a publish may be half-done, so neither completing nor
-    discarding is mechanically safe, and it raises the repair error."""
+def recover(
+    marker: str, root: str, n_buckets: int, complete: Callable[[dict], None]
+) -> None:
+    """Finish the fold bracketed by `marker`, if one is pending: run
+    `complete(pending)`, then unlink the marker. If the marker's `final`
+    dir does not exist, the publish step never ran, so the marker and
+    any staged copy are discarded instead. A published fold under
+    another bucket count than `n_buckets` refuses. An unreadable or
+    wrong-shape marker means the publish state is unknown — neither
+    completing nor discarding is mechanically safe — and raises the
+    repair error."""
     if not os.path.exists(marker):
-        return None
+        return
     try:
-        return _load_marker(marker, MARKERS[kind], root=root)
+        p = _load_marker(marker, FOLD_MARKER, root=root)
     except (OSError, ValueError) as e:
         raise RuntimeError(
-            f"interrupted {kind} at {root}: pending marker {marker} is "
-            f"unreadable ({e!r}) — inspect the table's version or epoch "
-            "dirs and links, then repair or remove the marker before "
-            "reconstructing the sink"
+            f"interrupted fold at {root}: pending marker {marker} is "
+            f"unreadable ({e!r}) — inspect the table's epoch dirs, then "
+            "repair or remove the marker before reconstructing the sink"
         ) from e
-
-
-def recover(
-    marker: str,
-    kind: str,
-    root: str,
-    n_buckets: int,
-    complete: Callable[[dict], None],
-    published: str | None = None,
-) -> None:
-    """Finish the `kind` publish bracketed by `marker`, if one is
-    pending: run `complete(pending)`, then unlink the marker. With
-    `published`, the field naming the dir whose existence proves the
-    publish step ran: without it the publish never took effect, so the
-    marker and any staged copy are discarded instead. A completed
-    publish under another bucket count than `n_buckets` refuses."""
-    p = pending(marker, kind, root)
-    if p is None:
-        return
-    if published is not None and not os.path.isdir(p[published]):
+    if not os.path.isdir(p["final"]):
         sweep_staging(root)
         os.unlink(marker)
         return
     if p["n_buckets"] != n_buckets:
         raise ValueError(
-            f"interrupted {kind} at {root} was publishing under "
+            f"interrupted fold at {root} was publishing under "
             f"{p['n_buckets']} buckets; construct the sink with that "
             f"count (got n_buckets={n_buckets}) so recovery completes "
             "under the table's real placement"

@@ -832,8 +832,7 @@ def test_keyed_sink_rejects_value_buckets_without_optin(
 
 
 # ------------------------------------------------------------------ r16:
-# pure-append ANN ingest channel + KeyedUpsertSink.rebucket (VERDICT r15
-# #2/#3)
+# pure-append ANN ingest channel (VERDICT r15 #2)
 
 
 def test_append_sink_epoch_is_o_batch_and_replay_dedups(spark, tmp_path):
@@ -931,229 +930,6 @@ def test_append_read_buckets_point_probe_reads_subset_and_agrees(
     assert 0 < sub.count() < sink.read().count()
 
 
-def test_rebucket_answers_identically(spark, tmp_path):
-    """KeyedUpsertSink.rebucket(n) (VERDICT r15 #3): re-sharding the
-    table under a new bucket count is a pure repartition — full read,
-    point-probe read, and the ANN top-k answer are all identical before
-    and after, under both growth (8->16) and shrink (16->4)."""
-    import numpy as np
-
-    from flink_tutorial_spark.operators.similarity import (
-        lsh_index,
-        lsh_topk_from_index,
-    )
-    from flink_tutorial_spark.sinks.foreach import KeyedUpsertSink
-
-    sink = KeyedUpsertSink(
-        spark, str(tmp_path / "idx"), key_cols=["vec_id"], n_buckets=8,
-        bucket_cols=["bucket"], stable_value_buckets=True,
-    )
-    rng = np.random.default_rng(7)
-    rows = [
-        (int(i), [float(x) for x in rng.standard_normal(64)])
-        for i in range(200)
-    ]
-    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    sink(lsh_index(vecs), 0)
-    q = lsh_index(vecs.where("vec_id < 5"))
-
-    probed_lsh = {r[0] for r in q.select("bucket").distinct().collect()}
-
-    def answers():
-        idx = sink.read().select("vec_id", "bucket", "embedding")
-        topk = sorted(
-            tuple(r) for r in lsh_topk_from_index(idx, q, k=3).collect()
-        )
-        # the point-probe's CO-RESIDENT rows legitimately change with the
-        # bucket count; what must be invariant is every row matching the
-        # probed LSH values being present in the pruned read
-        probe = sorted(
-            (r["vec_id"], r["bucket"])
-            for r in sink.read_buckets(q).collect()
-            if r["bucket"] in probed_lsh
-        )
-        return topk, probe
-
-    before_topk, before_probe = answers()
-    assert len(before_topk) > 0
-
-    for n in (16, 4):
-        sink.rebucket(n)
-        assert sink.n_buckets == n
-        live = sink._live_bucket_paths()
-        assert set(live) <= set(range(n)) and live
-        after_topk, after_probe = answers()
-        assert after_topk == before_topk
-        assert after_probe == before_probe
-        # exactly one generation on disk after a rebuild
-        gens = [
-            e
-            for e in os.listdir(str(tmp_path / "idx"))
-            if e != "links" and os.path.isdir(str(tmp_path / "idx" / e))
-        ]
-        assert len(gens) == 1
-
-    # and the sink keeps WORKING after a rebuild: a new epoch under the
-    # new count places and reads consistently
-    extra = [
-        (int(1000 + i), [float(x) for x in rng.standard_normal(64)])
-        for i in range(10)
-    ]
-    sink(
-        lsh_index(
-            spark.createDataFrame(extra, "vec_id long, embedding array<float>")
-        ),
-        1,
-    )
-    assert sink.read().count() == 210
-
-
-def test_append_rebucket_rewrites_layout_and_answers_identically(
-    spark, tmp_path
-):
-    """KeyedAppendSink.rebucket must REWRITE the epoch layout under the
-    new count (self-review r16: the parent's link-swap path would
-    silently flip n_buckets without touching the dirs, making point
-    probes compute new-count bucket ids against old-count directories —
-    dropped candidates), and answer identically after."""
-    import numpy as np
-
-    from flink_tutorial_spark.operators.similarity import (
-        lsh_index,
-        lsh_topk_from_index,
-    )
-    from flink_tutorial_spark.sinks.foreach import KeyedAppendSink
-
-    sink = KeyedAppendSink(
-        spark, str(tmp_path / "idx"), key_cols=["vec_id"], n_buckets=8,
-        bucket_cols=["bucket"], stable_value_buckets=True,
-    )
-    rng = np.random.default_rng(7)  # seed with known bucket collisions
-    rows = [
-        (int(i), [float(x) for x in rng.standard_normal(64)])
-        for i in range(200)
-    ]
-    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    sink(lsh_index(vecs.where("vec_id < 100")), 0)
-    sink(lsh_index(vecs.where("vec_id >= 100")), 1)
-    q = lsh_index(vecs.where("vec_id < 5"))
-
-    def answers():
-        idx = sink.read().select("vec_id", "bucket", "embedding")
-        topk = sorted(
-            tuple(r) for r in lsh_topk_from_index(idx, q, k=3).collect()
-        )
-        probe = sorted(
-            tuple(r)
-            for r in lsh_topk_from_index(
-                sink.read_buckets(q).select("vec_id", "bucket", "embedding"),
-                q,
-                k=3,
-            ).collect()
-        )
-        return topk, probe
-
-    before_topk, before_probe = answers()
-    assert before_topk == before_probe and before_topk
-
-    sink.rebucket(16)
-    assert sink.n_buckets == 16
-    # the layout was actually rewritten: one folded dir, new-count buckets
-    dirs = sink._epoch_dirs()
-    assert len(dirs) == 1
-    buckets_on_disk = {
-        int(s.split("=")[1])
-        for s in os.listdir(dirs[0])
-        if s.startswith("_bucket=")
-    }
-    assert buckets_on_disk <= set(range(16)) and max(buckets_on_disk) >= 8
-    after_topk, after_probe = answers()
-    assert after_topk == before_topk
-    assert after_probe == before_probe
-    # new epochs continue after the re-shard (ids resume past the fold)
-    sink(lsh_index(vecs.limit(0)), 2)  # empty epoch publishes fine
-    extra = [(1000, [1.0] * 64)]
-    sink(
-        lsh_index(
-            spark.createDataFrame(extra, "vec_id long, embedding array<float>")
-        ),
-        3,
-    )
-    assert sink.read().count() == 201
-
-
-def test_rebucket_preserves_epoch_ledger_and_lineage_guard(spark, tmp_path):
-    """Review r16: the ledger sink's replay protection is ENCODED in the
-    version-directory name (v{epoch}_*), so rebucket must publish under
-    that scheme (v{max ledger}_*) — an unparsable name would read as
-    ledger -1 on every bucket, silently re-applying replayed additive
-    epochs (double-count) and disarming the fresh-checkpoint guard."""
-    sink = _sum_sink(spark, tmp_path / "t", n_buckets=4)
-
-    def df(rows):
-        return spark.createDataFrame(rows, "k string, c long")
-
-    sink(df([("a", 1), ("b", 2)]), 0)
-    sink(df([("a", 10)]), 1)
-    assert _counts(sink) == [("a", 11), ("b", 2)]
-
-    sink.rebucket(8)
-    assert _counts(sink) == [("a", 11), ("b", 2)]
-    # replay of the last epoch is STILL a no-op (ledger survived as
-    # v{max}=v1, not -1)
-    sink(df([("a", 10)]), 1)
-    assert _counts(sink) == [("a", 11), ("b", 2)]
-    # fresh-checkpoint lineage guard still fires (probe a key whose
-    # bucket is LIVE — the guard reads the ledger off live buckets)
-    with pytest.raises(ValueError, match="lineage mismatch"):
-        sink(df([("a", 99)]), 0)
-    # and progress still applies
-    sink(df([("b", 5)]), 2)
-    assert _counts(sink) == [("a", 11), ("b", 7)]
-
-
-def test_rebucket_crash_mid_swap_recovers_on_construction(spark, tmp_path):
-    """Review r16: rebucket's link swap is bracketed by a pending marker
-    so a crash mid-swap cannot leave buckets silently unlinked (the next
-    epoch would have dropped their rows). A constructor on the marked
-    table completes the swap; constructing with a different bucket count
-    than the interrupted re-shard refuses with guidance."""
-    import json
-
-    from flink_tutorial_spark.sinks.foreach import KeyedUpsertSink
-
-    path = str(tmp_path / "t")
-    sink = KeyedUpsertSink(spark, path, key_cols=["k"], n_buckets=4)
-
-    def df(rows):
-        return spark.createDataFrame(rows, "k string, v long")
-
-    sink(df([("a", 1), ("b", 2), ("c", 3), ("d", 4)]), 0)
-    sink.rebucket(8)
-    want = sorted(tuple(r) for r in sink.read().collect())
-
-    # recreate the mid-swap crash state: marker present, one live link
-    # missing (the swap died after relinking only part of the set)
-    live = sink._live_bucket_paths()
-    version_dir = os.path.dirname(next(iter(live.values())))
-    with open(sink._rebucket_marker(), "w") as f:
-        json.dump({"version_dir": version_dir, "n_buckets": 8}, f)
-    os.unlink(sink._link(next(iter(live))))
-
-    # wrong count: refused, marker intact
-    with pytest.raises(ValueError, match="interrupted rebucket"):
-        KeyedUpsertSink(spark, path, key_cols=["k"], n_buckets=4)
-    assert os.path.exists(sink._rebucket_marker())
-
-    # right count: recovery completes the swap and clears the marker
-    sink2 = KeyedUpsertSink(spark, path, key_cols=["k"], n_buckets=8)
-    assert not os.path.exists(sink2._rebucket_marker())
-    assert sorted(tuple(r) for r in sink2.read().collect()) == want
-    # and the table keeps working
-    sink2(df([("e", 5)]), 1)
-    assert sink2.read().count() == 5
-
-
 def test_append_sink_rejects_fresh_checkpoint_on_stale_table(
     spark, tmp_path
 ):
@@ -1179,16 +955,17 @@ def test_append_sink_rejects_fresh_checkpoint_on_stale_table(
         sink(df([("a", 99)]), 0)  # fresh lineage on stale table: refused
     assert sorted(tuple(r) for r in sink.read().collect()) == [("a", 3)]
 
+
 # ---------------------------------------------------------------- r17:
-# bucket-count table meta, fold crash recovery, auto-compaction
-# (VERDICT r16 #3 + ADVICE r16)
+# bucket-count table meta, fold crash recovery (ADVICE r16)
 
 
 def test_stale_bucket_count_reconstruction_refused(spark, tmp_path):
-    """ADVICE r16 (medium): after a COMPLETED rebucket, reconstructing a
-    sink on the same path with the old count must raise — not silently
-    scan/probe under the wrong modulus (overwrite channel: read() drops
-    the grown buckets; append channel: point probes miss candidates)."""
+    """ADVICE r16 (medium): the bucket count is fixed for a table's
+    life, so reconstructing a sink on the same path with another count
+    must raise — not silently scan/probe under the wrong modulus
+    (overwrite channel: read() drops buckets >= n; append channel: point
+    probes miss candidates)."""
     from flink_tutorial_spark.sinks.foreach import (
         KeyedAppendSink,
         KeyedUpsertSink,
@@ -1201,18 +978,17 @@ def test_stale_bucket_count_reconstruction_refused(spark, tmp_path):
         path = str(tmp_path / sub)
         sink = cls(spark, path, key_cols=["k"], n_buckets=4)
         sink(df([("a", 1), ("b", 2), ("c", 3)]), 0)
-        sink.rebucket(8)
         with pytest.raises(ValueError, match="bucket-count mismatch"):
-            cls(spark, path, key_cols=["k"], n_buckets=4)
+            cls(spark, path, key_cols=["k"], n_buckets=8)
         # the recorded count reconstructs fine and answers identically
-        sink2 = cls(spark, path, key_cols=["k"], n_buckets=8)
+        sink2 = cls(spark, path, key_cols=["k"], n_buckets=4)
         assert sorted(tuple(r) for r in sink2.read().collect()) == [
             ("a", 1), ("b", 2), ("c", 3),
         ]
 
 
 def test_append_fold_crash_recovers_on_construction(spark, tmp_path):
-    """ADVICE r16: a crash between _fold_epochs' atomic publish and the
+    """ADVICE r16: a crash between compact()'s atomic publish and the
     superseded-dir removals leaves mixed epoch dirs; the pending marker
     makes the next constructor complete the removals (and refuse a
     wrong-count construction with guidance) instead of read_buckets
@@ -1286,89 +1062,6 @@ def test_append_fold_crash_before_publish_discards_marker(spark, tmp_path):
     assert sink2.read().count() == 1
 
 
-def test_append_auto_compaction_bounds_dirs_and_answers(spark, tmp_path):
-    """VERDICT r16 #3: with compact_every_n_epochs=N a long-running
-    append ingest holds the epoch-dir count <= N without any manual
-    compact() call, and the keyed table still answers exactly (full
-    read and point probe)."""
-    import numpy as np
-
-    from flink_tutorial_spark.operators.similarity import (
-        lsh_index,
-        lsh_topk_from_index,
-    )
-    from flink_tutorial_spark.sinks.foreach import KeyedAppendSink
-
-    sink = KeyedAppendSink(
-        spark, str(tmp_path / "idx"), key_cols=["vec_id"], n_buckets=8,
-        bucket_cols=["bucket"], stable_value_buckets=True,
-        compact_every_n_epochs=3,
-    )
-    rng = np.random.default_rng(7)  # seed with known bucket collisions
-    rows = [
-        (int(i), [float(x) for x in rng.standard_normal(64)])
-        for i in range(200)
-    ]
-    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    for e in range(10):  # 10 epochs of 20 vectors each
-        lo, hi = e * 20, (e + 1) * 20
-        sink(lsh_index(vecs.where(f"vec_id >= {lo} and vec_id < {hi}")), e)
-        assert len(sink._epoch_dirs()) <= 3
-
-    assert sink.read().count() == 200
-    q = lsh_index(vecs.where("vec_id < 5"))
-    full = sorted(
-        tuple(r)
-        for r in lsh_topk_from_index(
-            sink.read().select("vec_id", "bucket", "embedding"), q, k=3
-        ).collect()
-    )
-    probe = sorted(
-        tuple(r)
-        for r in lsh_topk_from_index(
-            sink.read_buckets(q).select("vec_id", "bucket", "embedding"),
-            q,
-            k=3,
-        ).collect()
-    )
-    assert full == probe and len(full) > 0
-
-    # a replay of the LAST epoch after its rows were folded away is
-    # still accepted and converges (equal id = replay by contract)
-    lo, hi = 9 * 20, 10 * 20
-    sink(lsh_index(vecs.where(f"vec_id >= {lo} and vec_id < {hi}")), 9)
-    assert sink.read().count() == 200
-
-
-def test_rebucket_refuses_unparsable_ledger_names(spark, tmp_path):
-    """ADVICE r16: an unparsable version-dir name means the name-encoded
-    replay ledger is already damaged — rebucket must fail loudly before
-    rewriting the table on top of it (the old max(ledger,0) clamp
-    silently fabricated ledger epoch 0)."""
-    import shutil
-
-    sink = _sum_sink(spark, tmp_path / "t", n_buckets=4)
-    sink(spark.createDataFrame([("a", 1)], "k string, c long"), 0)
-
-    # damage every version dir name, then repoint the links (the links
-    # are what _live_bucket_paths resolves)
-    root = str(tmp_path / "t")
-    for entry in os.listdir(root):
-        full = os.path.join(root, entry)
-        if entry.startswith("v") and os.path.isdir(full):
-            bad = os.path.join(root, "damaged_" + entry[1:])
-            shutil.move(full, bad)
-            for sub in os.listdir(bad):
-                if sub.startswith("_bucket="):
-                    b = int(sub.split("=")[1])
-                    link = sink._link(b)
-                    if os.path.lexists(link):
-                        os.unlink(link)
-                    os.symlink(os.path.join(bad, sub), link)
-    with pytest.raises(ValueError, match="unreliable"):
-        sink.rebucket(8)
-
-
 def test_pre_meta_table_wrong_count_detected_from_layout(spark, tmp_path):
     """Pre-meta adoption guard (review r17): reconstructing a legacy
     (meta-less) table with a too-small count is caught from the layout
@@ -1391,203 +1084,35 @@ def test_pre_meta_table_wrong_count_detected_from_layout(spark, tmp_path):
     assert sink2.read().count() == 64
 
 
-def test_append_rebucket_post_publish_failure_keeps_new_count(
-    spark, tmp_path, monkeypatch
-):
-    """Review r17: if the re-shard fold fails AFTER its atomic publish
-    (e.g. the meta write), the table layout already IS the new count —
-    the live sink must keep it (restoring the old count would probe the
-    wrong modulus) and complete the fold bookkeeping in-process."""
-    from flink_tutorial_spark.sinks import foreach as fx
-
-    path = str(tmp_path / "t")
-    sink = fx.KeyedAppendSink(spark, path, key_cols=["k"], n_buckets=4)
-
-    def df(rows):
-        return spark.createDataFrame(rows, "k string, v long")
-
-    sink(df([(f"k{i}", i) for i in range(32)]), 0)
-    sink(df([("k0", 100)]), 1)
-
-    calls = {"n": 0}
-    real = fx.KeyedAppendSink._write_meta
-
-    def boom(self):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise OSError("disk full")
-        real(self)
-
-    monkeypatch.setattr(fx.KeyedAppendSink, "_write_meta", boom)
-    with pytest.raises(OSError, match="disk full"):
-        sink.rebucket(8)
-
-    # published fold: new count kept, bookkeeping completed in-process
-    assert sink.n_buckets == 8
-    assert not os.path.exists(sink._fold_marker())
-    assert len(sink._epoch_dirs()) == 1
-    got = {(r["k"], r["v"]) for r in sink.read().collect()}
-    assert ("k0", 100) in got and len(got) == 32
-    # and a reconstruction under the new count passes the meta check
-    monkeypatch.setattr(fx.KeyedAppendSink, "_write_meta", real)
-    sink2 = fx.KeyedAppendSink(spark, path, key_cols=["k"], n_buckets=8)
-    assert sink2.read().count() == 32
-
-
-def test_upsert_rebucket_post_publish_failure_recovers_in_process(
-    spark, tmp_path, monkeypatch
-):
-    """ADVICE r17 + review r18: on the keyed-overwrite channel the
-    post-marker commit sequence IS _recover_rebucket (one code path for
-    live rebucket and crash recovery). A failure after the marker write
-    (the publish point) must leave the live instance consistent for
-    probing — count new, links already swapped (the swap precedes the
-    meta write) — with the marker intact so the next constructor (or a
-    retry) completes the bookkeeping."""
-    from flink_tutorial_spark.sinks import foreach as fx
-
-    path = str(tmp_path / "t")
-    sink = fx.KeyedUpsertSink(spark, path, key_cols=["k"], n_buckets=4)
-
-    def df(rows):
-        return spark.createDataFrame(rows, "k string, v long")
-
-    sink(df([(f"k{i}", i) for i in range(32)]), 0)
-    sink(df([("k0", 100)]), 1)
-    before = {(r["k"], r["v"]) for r in sink.read().collect()}
-
-    calls = {"n": 0}
-    real = fx.KeyedUpsertSink._write_meta
-
-    def boom(self):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise OSError("disk full")
-        real(self)
-
-    monkeypatch.setattr(fx.KeyedUpsertSink, "_write_meta", boom)
-    with pytest.raises(OSError, match="disk full"):
-        sink.rebucket(8)
-
-    # marker was the publish point: new count kept, links swapped, reads
-    # correct; the marker survives the failed meta write for the retry
-    assert sink.n_buckets == 8
-    assert os.path.exists(sink._rebucket_marker())
-    live = sink._live_bucket_paths()
-    assert live and set(live) <= set(range(8))
-    assert {(r["k"], r["v"]) for r in sink.read().collect()} == before
-    # a fresh constructor under the new count completes the recovery
-    # (meta written, marker gone) and the sink keeps working
-    monkeypatch.setattr(fx.KeyedUpsertSink, "_write_meta", real)
-    sink2 = fx.KeyedUpsertSink(spark, path, key_cols=["k"], n_buckets=8)
-    assert not os.path.exists(sink2._rebucket_marker())
-    assert sink2.read().count() == 32
-    sink(df([("k1", 200)]), 2)
-    got = {(r["k"], r["v"]) for r in sink.read().collect()}
-    assert ("k1", 200) in got and len(got) == 32
-
-
-def test_upsert_rebucket_marker_write_failure_restores_old_count(
-    spark, tmp_path, monkeypatch
-):
-    """ADVICE r17 twin: if the marker itself never lands, nothing
-    published — links and meta still hold the old layout, so the live
-    instance must restore the old count (keeping the new one would
-    probe new-count ids against old links)."""
-    from flink_tutorial_spark.sinks import foreach as fx
-
-    path = str(tmp_path / "t")
-    sink = fx.KeyedUpsertSink(spark, path, key_cols=["k"], n_buckets=4)
-    rows = [(f"k{i}", i) for i in range(32)]
-    sink(spark.createDataFrame(rows, "k string, v long"), 0)
-    before = {(r["k"], r["v"]) for r in sink.read().collect()}
-
-    monkeypatch.setattr(
-        fx.KeyedUpsertSink,
-        "_rebucket_marker",
-        lambda self: str(tmp_path / "nosuchdir" / "marker.json"),
-    )
-    n_dirs_before = len(os.listdir(path))
-    with pytest.raises(FileNotFoundError):
-        sink.rebucket(8)
-    monkeypatch.undo()
-
-    assert sink.n_buckets == 4
-    # the orphaned new-count rewrite is cleaned up, not leaked (review
-    # r18: epoch-level pruning could never empty a dir whose bucket ids
-    # exceed the old count)
-    assert len(os.listdir(path)) == n_dirs_before
-    assert {(r["k"], r["v"]) for r in sink.read().collect()} == before
-    # and the table is still fully operational: the interrupted re-shard
-    # can simply be re-run
-    sink.rebucket(8)
-    assert sink.n_buckets == 8
-    assert {(r["k"], r["v"]) for r in sink.read().collect()} == before
-
-
-def test_append_rebucket_unreadable_marker_keeps_new_count(
-    spark, tmp_path, monkeypatch
-):
-    """ADVICE r17: an unreadable fold marker during rebucket failure
-    handling is UNKNOWN publish state — the fold may have published, so
-    restoring the old count could put the live sink on the wrong
-    modulus. The handler must keep the new count and surface both
-    errors instead of silently defaulting to restore."""
-    from flink_tutorial_spark.sinks import foreach as fx
-
-    path = str(tmp_path / "t")
-    sink = fx.KeyedAppendSink(spark, path, key_cols=["k"], n_buckets=4)
-    sink(
-        spark.createDataFrame(
-            [(f"k{i}", i) for i in range(32)], "k string, v long"
-        ),
-        0,
-    )
-
-    real = fx.KeyedAppendSink._write_meta
-
-    def boom(self):
-        # simulate a crash that also mangles the marker: the fold has
-        # already published (rename + removals ran before _write_meta)
-        with open(self._fold_marker(), "w") as f:
-            f.write("{not json")
-        raise OSError("disk full")
-
-    monkeypatch.setattr(fx.KeyedAppendSink, "_write_meta", boom)
-    with pytest.raises(RuntimeError, match="publish state unknown"):
-        sink.rebucket(8)
-    monkeypatch.setattr(fx.KeyedAppendSink, "_write_meta", real)
-
-    # unknown publish state: the new count is kept (the fold DID
-    # publish here), the marker is left for repair
-    assert sink.n_buckets == 8
-    assert os.path.exists(sink._fold_marker())
-    assert len(sink._epoch_dirs()) == 1
-    assert sink.read().count() == 32
-    # operator repairs by removing the corrupt marker; reconstruction
-    # under the published count then works after re-recording meta
-    os.unlink(sink._fold_marker())
-    sink._write_meta()
-    sink2 = fx.KeyedAppendSink(spark, path, key_cols=["k"], n_buckets=8)
-    assert sink2.read().count() == 32
+def _rebucket_marker(root):
+    """The re-shard marker earlier versions of the keyed-overwrite sink
+    wrote; a constructor that finds one refuses the table naming it."""
+    return os.path.join(root, "_rebucket_pending.json")
 
 
 def test_constructor_surfaces_unreadable_markers(spark, tmp_path):
     """Symmetric hardening of the ADVICE r17 unreadable-marker rule: a
-    corrupt pending marker at CONSTRUCTION time (rebucket marker on the
-    overwrite channel, fold marker on the append channel) must raise an
-    actionable repair error, not a bare json decode error — and removing
-    the marker must make construction work again."""
+    corrupt fold marker at CONSTRUCTION time must raise an actionable
+    repair error, not a bare json decode error — and removing the marker
+    must make construction work again. On the overwrite channel an
+    earlier version's re-shard marker raises naming the file whatever it
+    holds, a well-formed one included."""
+    import json
+    import re
+
     from flink_tutorial_spark.sinks import foreach as fx
 
     up = str(tmp_path / "up")
     sink = fx.KeyedUpsertSink(spark, up, key_cols=["k"], n_buckets=4)
     sink(spark.createDataFrame([("a", 1)], "k string, v long"), 0)
-    with open(sink._rebucket_marker(), "w") as f:
-        f.write("{not json")
-    with pytest.raises(RuntimeError, match="marker.*is unreadable"):
-        fx.KeyedUpsertSink(spark, up, key_cols=["k"], n_buckets=4)
-    os.unlink(sink._rebucket_marker())
+    marker = _rebucket_marker(up)
+    live = os.path.dirname(next(iter(sink._live_bucket_paths().values())))
+    for text in ("{not json", json.dumps({"version_dir": live, "n_buckets": 4})):
+        with open(marker, "w") as f:
+            f.write(text)
+        with pytest.raises(RuntimeError, match=re.escape(marker)):
+            fx.KeyedUpsertSink(spark, up, key_cols=["k"], n_buckets=4)
+    os.unlink(marker)
     assert fx.KeyedUpsertSink(spark, up, key_cols=["k"], n_buckets=4).read().count() == 1
 
     ap = str(tmp_path / "ap")
@@ -1607,8 +1132,10 @@ def test_wrong_shape_marker_is_unreadable_not_executed(spark, tmp_path):
     wrong shape must hit the same unreadable-marker repair error as bad
     json — never be executed. The nightmare case is a string
     `superseded` (iterating it per-character would rmtree '/'); non-dict
-    payloads and wrong-typed fields are the same class."""
+    payloads and wrong-typed fields are the same class. An earlier
+    version's re-shard marker of any shape raises naming the file."""
     import json as _json
+    import re
 
     from flink_tutorial_spark.sinks import foreach as fx
 
@@ -1633,12 +1160,13 @@ def test_wrong_shape_marker_is_unreadable_not_executed(spark, tmp_path):
     up = str(tmp_path / "up")
     usink = fx.KeyedUpsertSink(spark, up, key_cols=["k"], n_buckets=4)
     usink(spark.createDataFrame([("a", 1)], "k string, v long"), 0)
+    marker = _rebucket_marker(up)
     for bad in ({"version_dir": 9, "n_buckets": 4}, {"n_buckets": 4}, 42):
-        with open(usink._rebucket_marker(), "w") as f:
+        with open(marker, "w") as f:
             _json.dump(bad, f)
-        with pytest.raises(RuntimeError, match="marker.*is unreadable"):
+        with pytest.raises(RuntimeError, match=re.escape(marker)):
             fx.KeyedUpsertSink(spark, up, key_cols=["k"], n_buckets=4)
-    os.unlink(usink._rebucket_marker())
+    os.unlink(marker)
     assert fx.KeyedUpsertSink(spark, up, key_cols=["k"], n_buckets=4).read().count() == 1
 
 
@@ -1647,8 +1175,11 @@ def test_marker_paths_must_resolve_inside_table_root(spark, tmp_path):
     table root — '/', an absolute path elsewhere, or the table root
     itself — must raise the unreadable-marker repair error, never reach
     recovery's rmtree. Covers `superseded` and `final` on the append
-    channel and `version_dir` on the overwrite channel."""
+    channel; on the overwrite channel an earlier version's re-shard
+    marker naming such a `version_dir` raises naming the file and
+    touches nothing."""
     import json as _json
+    import re
 
     from flink_tutorial_spark.sinks import foreach as fx
 
@@ -1681,17 +1212,18 @@ def test_marker_paths_must_resolve_inside_table_root(spark, tmp_path):
     up = str(tmp_path / "up")
     usink = fx.KeyedUpsertSink(spark, up, key_cols=["k"], n_buckets=4)
     usink(spark.createDataFrame([("a", 1)], "k string, v long"), 0)
+    marker = _rebucket_marker(up)
     for bad in (
         {"version_dir": "/", "n_buckets": 4},
         {"version_dir": outside, "n_buckets": 4},
         {"version_dir": up, "n_buckets": 4},
     ):
-        with open(usink._rebucket_marker(), "w") as f:
+        with open(marker, "w") as f:
             _json.dump(bad, f)
-        with pytest.raises(RuntimeError, match="marker.*is unreadable"):
+        with pytest.raises(RuntimeError, match=re.escape(marker)):
             fx.KeyedUpsertSink(spark, up, key_cols=["k"], n_buckets=4)
         assert os.path.exists(os.path.join(outside, "data.txt"))
-    os.unlink(usink._rebucket_marker())
+    os.unlink(marker)
     assert fx.KeyedUpsertSink(spark, up, key_cols=["k"], n_buckets=4).read().count() == 1
 
 
@@ -1716,79 +1248,32 @@ def test_marker_bool_and_nonpositive_counts_are_unreadable(spark, tmp_path):
     assert fx.KeyedAppendSink(spark, ap, key_cols=["k"], n_buckets=4).read().count() == 1
 
 
-def test_recover_rebucket_prune_compares_realpaths(spark, tmp_path, monkeypatch):
-    """ADVICE r18 (low): _recover_rebucket used raw string equality to
-    decide which version dir survives the prune, so a recovering
-    constructor spelling self.path differently from the crashed writer
-    (e.g. a `/./` segment) would rmtree the dir the links were just
-    swapped to, leaving every bucket link dangling."""
-    import json
-
-    from flink_tutorial_spark.sinks import foreach as fx
-
-    path = str(tmp_path / "t")
-    sink = fx.KeyedUpsertSink(spark, path, key_cols=["k"], n_buckets=4)
-    sink(
-        spark.createDataFrame(
-            [(f"k{i}", i) for i in range(32)], "k string, v long"
-        ),
-        0,
-    )
-    # crash immediately after the marker lands: the commit sequence
-    # (recovery itself) never runs
-    monkeypatch.setattr(
-        fx.KeyedUpsertSink,
-        "_recover_rebucket",
-        lambda self: (_ for _ in ()).throw(OSError("crash mid-commit")),
-    )
-    with pytest.raises(OSError, match="crash mid-commit"):
-        sink.rebucket(8)
-    monkeypatch.undo()
-    assert os.path.exists(sink._rebucket_marker())
-    # rewrite the marker's version_dir under an equivalent-but-different
-    # spelling of the table root (realpath-identical)
-    with open(sink._rebucket_marker()) as f:
-        pending = json.load(f)
-    variant = os.path.join(str(tmp_path), ".", "t")
-    pending["version_dir"] = os.path.join(
-        variant, os.path.basename(pending["version_dir"])
-    )
-    with open(sink._rebucket_marker(), "w") as f:
-        json.dump(pending, f)
-    # recovery under the ORIGINAL spelling must keep the swapped-to dir
-    sink2 = fx.KeyedUpsertSink(spark, path, key_cols=["k"], n_buckets=8)
-    assert not os.path.exists(sink2._rebucket_marker())
-    assert sink2.read().count() == 32
-
-
-def test_rebucket_marker_write_failure_leaves_no_tmp(spark, tmp_path, monkeypatch):
-    """ADVICE r18 (low): a failure between the tmp marker's creation and
-    os.replace must clean the stray .tmp out of the table root on BOTH
-    channels (alongside the existing version-dir / count restores)."""
+def test_meta_and_fold_marker_write_failures_leave_no_tmp(
+    spark, tmp_path, monkeypatch
+):
+    """ADVICE r18 (low): publish.write_atomic removes its .tmp when the
+    replace fails. A failed table-meta write (a sink's first
+    construction) and a failed fold-marker write (compact) leave no
+    stray .tmp in the table root; the failed fold publishes nothing."""
     from flink_tutorial_spark.sinks import foreach as fx
 
     real_replace = os.replace
 
     def boom(src, dst):
-        if dst.endswith("_pending.json"):
+        if dst.endswith(("_pending.json", "_table_meta.json")):
             raise OSError("disk full on replace")
         return real_replace(src, dst)
 
     up = str(tmp_path / "up")
-    usink = fx.KeyedUpsertSink(spark, up, key_cols=["k"], n_buckets=4)
-    usink(
-        spark.createDataFrame(
-            [(f"k{i}", i) for i in range(32)], "k string, v long"
-        ),
-        0,
-    )
     monkeypatch.setattr(fx.os, "replace", boom)
     with pytest.raises(OSError, match="disk full"):
-        usink.rebucket(8)
+        fx.KeyedUpsertSink(spark, up, key_cols=["k"], n_buckets=4)
     monkeypatch.undo()
-    assert usink.n_buckets == 4
     assert not any(e.endswith(".tmp") for e in os.listdir(up))
-    assert usink.read().count() == 32
+    assert not os.path.exists(os.path.join(up, "_table_meta.json"))
+    usink = fx.KeyedUpsertSink(spark, up, key_cols=["k"], n_buckets=4)
+    usink(spark.createDataFrame([("a", 1)], "k string, v long"), 0)
+    assert usink.read().count() == 1
 
     ap = str(tmp_path / "ap")
     asink = fx.KeyedAppendSink(spark, ap, key_cols=["k"], n_buckets=4)
@@ -1809,6 +1294,109 @@ def test_rebucket_marker_write_failure_leaves_no_tmp(spark, tmp_path, monkeypatc
     assert not any(e.endswith(".tmp") for e in os.listdir(ap))
     assert len(asink._epoch_dirs()) == 2  # fold never published
     assert asink.read().count() == 32
+
+
+def test_prune_compares_realpaths(spark, tmp_path):
+    """ADVICE r18 (low): an epoch's prune keeps each dirty bucket's live
+    and N-1 dirs by realpath. A sink whose root is spelled differently
+    from the paths its links resolve to (a trailing `/.`) must keep both
+    across epochs, not remove the dirs its links point at."""
+    from flink_tutorial_spark.sinks.foreach import KeyedUpsertSink
+
+    path = str(tmp_path / "t")
+    sink = KeyedUpsertSink(spark, path + "/.", key_cols=["k"], n_buckets=1)
+    prev = None
+    for e in range(3):
+        sink(spark.createDataFrame([("a", e), ("b", 10)], "k string, v long"), e)
+        live = sink._live_bucket_paths()[0]
+        on_disk = {
+            os.path.realpath(os.path.join(path, v, "_bucket=0"))
+            for v in os.listdir(path)
+            if v.startswith("v")
+        }
+        assert on_disk == ({live} if prev is None else {live, prev})
+        prev = live
+    assert sorted(tuple(r) for r in sink.read().collect()) == [("a", 2), ("b", 10)]
+
+
+def test_dangling_bucket_link_fails_naming_the_bucket(spark, tmp_path):
+    """Bucket links are absolute, so after a `mv` of the table dir they
+    dangle. A sink at the new path must refuse to read or merge, naming
+    the bucket and the link target, instead of silently dropping that
+    bucket's rows."""
+    import shutil
+
+    from flink_tutorial_spark.sinks.foreach import KeyedUpsertSink
+
+    old, new = str(tmp_path / "old"), str(tmp_path / "new")
+    sink = KeyedUpsertSink(spark, old, key_cols=["k"], n_buckets=4)
+    rows = spark.createDataFrame(
+        [(f"k{i}", i) for i in range(32)], "k string, v long"
+    )
+    sink(rows, 0)
+    shutil.move(old, new)
+
+    moved = KeyedUpsertSink(spark, new, key_cols=["k"], n_buckets=4)
+    dangling = r"bucket \d of keyed table .*new is dangling: its link .* points at .*old"
+    with pytest.raises(RuntimeError, match=dangling):
+        moved.read()
+    with pytest.raises(RuntimeError, match=dangling):
+        moved.read_buckets(rows)
+    with pytest.raises(RuntimeError, match=dangling):
+        moved(rows, 1)
+
+
+def test_parent_format_fold_marker_completes_at_its_count(spark, tmp_path):
+    """Earlier versions could re-shard an append table: the fold
+    published one `e…_r…` dir bucketed under the new count and recorded
+    that count in its fold marker before the meta write. A table left
+    between publish and meta write refuses the old count, and completes
+    under the marker's count: superseded dirs gone, meta re-recorded,
+    same answers, and it takes one more epoch."""
+    import json
+
+    from flink_tutorial_spark.sinks.foreach import KeyedAppendSink
+
+    def df(rows):
+        return spark.createDataFrame(rows, "k string, v long")
+
+    path = str(tmp_path / "t")
+    sink = KeyedAppendSink(spark, path, key_cols=["k"], n_buckets=4)
+    sink(df([(f"k{i}", i) for i in range(32)]), 0)
+    sink(df([("k0", 100)]), 1)
+    want = sorted(tuple(r) for r in sink.read().collect())
+    superseded = sink._epoch_dirs()
+
+    # the fold's output: the latest row per key as one epoch-1 dir
+    # bucketed under 8, moved into the table under the `r` tag
+    fold8 = KeyedAppendSink(
+        spark, str(tmp_path / "fold8"), key_cols=["k"], n_buckets=8
+    )
+    fold8(sink.read(), 1)
+    final = os.path.join(path, "epochs", "e000000000001_r0123abcd")
+    os.rename(fold8._epoch_dirs()[0], final)
+    with open(sink._fold_marker(), "w") as f:
+        json.dump({"final": final, "superseded": superseded, "n_buckets": 8}, f)
+
+    with pytest.raises(ValueError, match="interrupted fold"):
+        KeyedAppendSink(spark, path, key_cols=["k"], n_buckets=4)
+    assert os.path.exists(sink._fold_marker())
+
+    sink8 = KeyedAppendSink(spark, path, key_cols=["k"], n_buckets=8)
+    assert not os.path.exists(sink8._fold_marker())
+    assert sink8._epoch_dirs() == [final]
+    with open(sink8._meta_path()) as f:
+        assert json.load(f) == {"n_buckets": 8}
+    assert sorted(tuple(r) for r in sink8.read().collect()) == want
+    # point probes compute bucket ids under 8 and find the folded rows
+    probed = {
+        r["k"]: r["v"]
+        for r in sink8.read_buckets(df([("k0", 0), ("k5", 0)])).collect()
+    }
+    assert probed["k0"] == 100 and probed["k5"] == 5
+    sink8(df([("k1", 101)]), 2)
+    got = dict(tuple(r) for r in sink8.read().collect())
+    assert got["k1"] == 101 and len(got) == 32
 
 
 @pytest.mark.parametrize("cls_name", ["KeyedUpsertSink", "KeyedAppendSink"])

@@ -16,16 +16,13 @@ hash-bucketed BY the LSH bucket), and measures
    20-vector query set.
 
 Usage: python tools/profile_ann_ingest.py [n_vectors] [dim] [n_files] [channel]
-Defaults 100_000 x 64 x 10 overwrite. channel=append profiles the r16
-pure-append + dedup-on-read channel (KeyedAppendSink) instead: same
-topology and measurements, plus compact() timed separately — the
-append channel's epoch writes only the batch (no dirty-bucket
-read-merge-write), which is the mitigation the r15 run's append-epoch
-cost pointed at. channel=append-auto (r17) runs the append channel
-under the compact_every_n_epochs=4 policy: no manual compact() call
-anywhere; the reported probe cost IS the steady state a long-running
-ingest sees, and epoch_dirs_after_build shows the bound holding.
-Prints one JSON line.
+Defaults 100_000 x 64 x 10 overwrite; channel is overwrite or append.
+channel=append profiles the r16 pure-append + dedup-on-read channel
+(KeyedAppendSink) instead: same topology and measurements, plus
+compact() timed separately — the append channel's epoch writes only
+the batch (no dirty-bucket read-merge-write), which is the mitigation
+the r15 run's append-epoch cost pointed at. Compaction is manual: the
+tool calls compact() once, after the 1% append. Prints one JSON line.
 """
 
 from __future__ import annotations
@@ -107,14 +104,7 @@ def main() -> None:
     dim = int(sys.argv[2]) if len(sys.argv) > 2 else 64
     n_files = int(sys.argv[3]) if len(sys.argv) > 3 else 10
     channel = sys.argv[4] if len(sys.argv) > 4 else "overwrite"
-    sink_cls = {
-        "overwrite": KeyedUpsertSink,
-        "append": KeyedAppendSink,
-        "append-auto": KeyedAppendSink,
-    }[channel]
-    extra = (
-        {"compact_every_n_epochs": 4} if channel == "append-auto" else {}
-    )
+    sink_cls = {"overwrite": KeyedUpsertSink, "append": KeyedAppendSink}[channel]
     spark = get_spark("annprof", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     base = scratch_dir()
     src = os.path.join(base, "src")
@@ -135,7 +125,6 @@ def main() -> None:
         n_buckets=64,
         bucket_cols=["bucket"],
         stable_value_buckets=True,  # vec_ids are append-only here
-        **extra,
     )
     probe = Probe()
     spark.streams.addListener(probe)
@@ -180,7 +169,6 @@ def main() -> None:
         n_buckets=64,
         bucket_cols=["bucket"],
         stable_value_buckets=True,
-        **extra,
     )
     corpus = spark.read.parquet(src)
     t0 = time.perf_counter()
@@ -223,11 +211,6 @@ def main() -> None:
     if channel == "append":
         out["pre_compact_probe_s"] = round(pre_compact_probe_s, 2)
         out["compact_s"] = round(compact_s, 2)
-    if channel == "append-auto":
-        # the policy bound: after build + the 1% append, the table holds
-        # at most compact_every_n_epochs dirs with no manual compact()
-        out["compact_every_n_epochs"] = 4
-        out["epoch_dirs_after_build"] = len(sink._epoch_dirs())
     print(json.dumps(out))
 
 
