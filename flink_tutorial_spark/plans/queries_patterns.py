@@ -1158,13 +1158,13 @@ cum AS (
 
 
 def qsketch_rows(events: DataFrame, *cols: str) -> DataFrame:
-    """Per-ROW bucket coordinates (*cols, e, m) — the shared row-level
-    stage of the quantile sketch (value -> octave e, sub-bucket m).
-    qsketch_buckets aggregates it; the live fold
-    (streaming/stateful.quantile_day_fold) consumes it raw, so the
-    bucketing rule cannot drift between the batch family and the live
-    twin (the kmv_kth/hll_reg lesson). `cols` are passthrough columns
-    kept on every row (defaults to event_type)."""
+    """Per-ROW bucket coordinates (*cols, e, m) — the row-level stage
+    of the quantile sketch (value -> octave e, sub-bucket m).
+    qsketch_buckets aggregates it, for the batch family and for the
+    live twin (queries_streaming.quantile_day_cells) alike, so the
+    bucketing rule cannot drift between them (the kmv_kth/hll_reg
+    lesson). `cols` are passthrough columns kept on every row
+    (defaults to event_type)."""
     keys = list(cols) or ["event_type"]
     ev = events.select(
         *keys,

@@ -2823,6 +2823,26 @@ _QUANTILE_ROLLING_LIVE_ORACLE = _REG["value_quantile_rolling"].oracle.replace(
 assert _QUANTILE_ROLLING_LIVE_ORACLE != _REG["value_quantile_rolling"].oracle
 
 
+def quantile_day_cells(events: DataFrame) -> DataFrame:
+    """Live (day, event_type, e, m, c) quantile-sketch cells of closed
+    days: the batch family's qsketch_buckets grouped by a 1-day
+    event-time window, so the bucketing rule cannot drift from
+    value_quantile_*. Run in append mode, Spark emits each day's cells
+    once, when `window.end <= watermark`. With delay 0 the watermark is
+    max(ts) floored to the ms, and a day end is a whole ms, so that is
+    exactly the oracle's `day + 1 day <= max(ts)`. The window state is
+    one row per open cell: at most ~512 per (day, event_type), however
+    many events a day has."""
+    from flink_tutorial_spark.plans.queries_patterns import qsketch_buckets
+
+    windowed = events.withWatermark("ts", "0 seconds").withColumn(
+        "w", F.window("ts", "1 day")
+    )
+    return qsketch_buckets(windowed, "w", "event_type").select(
+        F.col("w.start").alias("day"), "event_type", "e", "m", "c"
+    )
+
+
 @query(
     "streaming_quantile_rolling",
     oracle=_QUANTILE_ROLLING_LIVE_ORACLE,
@@ -2830,70 +2850,26 @@ assert _QUANTILE_ROLLING_LIVE_ORACLE != _REG["value_quantile_rolling"].oracle
 )
 def streaming_quantile_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling 7-day p50/p95/p99 from LIVE-maintained daily quantile
-    cells — the catalog's closed-day EventTimeTimeout fold (VERDICT
-    r12 #4; EMA shares the contract). State is one
-    sparse cell vector per (day, event_type, shard) — bounded by
-    32 * octaves (~512 cells) however many events a day has — emitted
-    once when the watermark passes the day end
-    (streaming/stateful.quantile_day_fold, EventTimeTimeout), and any
+    cells. The live stage (quantile_day_cells) is Spark's append-mode
+    window aggregate over qsketch_buckets: each (day, event_type) cell
+    set, bounded by 32 * octaves (~512 cells) however many events a
+    day has, emits once when the watermark passes the day end. Any
     trailing window is then a vector ADD over <= 7 x ~512 cells per
     group on the converged table: value_quantile_rolling's algebra fed
     by live cells instead of a batch pass, stated by its oracle
-    restricted to closed days. No calibration pipeline is needed — the
-    oracle is pure sketch — so this is a SINGLE-pipeline live query.
+    restricted to closed days. No calibration pipeline is needed (the
+    oracle is pure sketch), so this is a SINGLE-pipeline live query.
 
-    Bucket coordinates come from the shared row-level builder
-    (qsketch_rows), sharding from value_quantile_sharded's key
-    (event_id mod 16): the read-side shard sum is that query's proven
-    merge. localCheckpoint cuts the memory-sink lineage before the
-    report branches the cell table (days + rolling merge — the r10
-    self-join lesson)."""
-    from flink_tutorial_spark.plans.queries_patterns import (
-        qsketch_estimate,
-        qsketch_rows,
-    )
-    from flink_tutorial_spark.streaming.stateful import quantile_day_fold
+    localCheckpoint cuts the memory-sink lineage before the report
+    branches the cell table (days + rolling merge — the r10 self-join
+    lesson)."""
+    from flink_tutorial_spark.plans.queries_patterns import qsketch_estimate
 
     events = stream_table(spark, sf_dir, "events")
-    rows = (
-        qsketch_rows(
-            events.withColumn("day", F.date_trunc("day", "ts")).withColumn(
-                "shard", F.pmod("event_id", F.lit(16))
-            ),
-            "ts",
-            "day",
-            "event_type",
-            "shard",
-        )
-        .withColumn("idx", F.col("e") * 32 + F.col("m"))
-        .withWatermark("ts", "0 seconds")
-        # project to exactly what the fold reads before the Arrow
-        # boundary (guide §4.1): e/m are folded into idx already
-        .select("ts", "day", "event_type", "shard", "idx")
+    b0 = plan_capture.checkpoint(
+        run_to_memory(quantile_day_cells(events), "append"), "ckpt:quantile_cells"
     )
-    folded = quantile_day_fold(rows, "day", "event_type", "shard", "idx")
-    cells_tbl = plan_capture.checkpoint(run_to_memory(folded, "append"), "ckpt:quantile_fold")
-    # sparse vectors -> (day, type, e, m, c) cells, shards summed (the
-    # value_quantile_sharded merge); <= types x days x ~512 rows
-    b0 = (
-        cells_tbl.select(
-            "day", "event_type", F.explode(F.arrays_zip("idxs", "counts")).alias("z")
-        )
-        .select(
-            "day",
-            "event_type",
-            F.col("z.idxs").alias("idx"),
-            F.col("z.counts").alias("c"),
-        )
-        .groupBy(
-            "day",
-            "event_type",
-            F.expr("idx div 32").alias("e"),
-            (F.col("idx") % 32).alias("m"),
-        )
-        .agg(F.sum("c").cast("long").alias("c"))
-    )
-    days = b0.select("day").distinct()  # closed days only (fold emission)
+    days = b0.select("day").distinct()  # closed days only (window emission)
     merged = (
         b0.withColumn("off", F.explode(F.sequence(F.lit(0), F.lit(6))))
         .withColumn(

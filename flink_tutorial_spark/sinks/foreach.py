@@ -808,10 +808,10 @@ class EventTimeHighWatermark:
     tracks max(event ts) over the epochs seen, persisted to a one-line
     file after every update (publish.write_atomic). max() is idempotent,
     so an epoch replay after recovery converges — and the persisted file is
-    the restart story (the engine-side fold operators get the same
+    the restart story (the engine-side stateful operators get the same
     watermark from the checkpoint WAL). Readers use it to state which
-    days are CLOSED (day end <= high watermark), the same emission
-    predicate the EventTimeTimeout folds prove ms-exactly."""
+    days are CLOSED (day end <= high watermark), the same predicate as
+    an append-mode day window's `window.end <= watermark`."""
 
     def __init__(self, path: str):
         self.path = path

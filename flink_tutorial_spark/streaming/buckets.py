@@ -1,5 +1,5 @@
-"""Bucketed keyed state: the scaffolding shared by the bucket- and
-shard-keyed applyInPandasWithState operators in stateful.py and cep.py.
+"""Bucketed keyed state: the scaffolding shared by the bucket-keyed
+applyInPandasWithState operators in stateful.py and cep.py.
 
 Why buckets (the key-cardinality rule): applyInPandasWithState pays one
 Python dispatch per group per micro-batch, so keying state by entity
@@ -19,8 +19,7 @@ This module owns the three decisions those operators share:
    Spark integral column, checked when the plan is built (any other
    type would bucket as NULL at run time). Only the columns the kernel
    reads cross the Arrow boundary, because groupBy +
-   applyInPandasWithState is opaque to column pruning. The day-folds
-   key on an upstream hash shard instead, under the same check.
+   applyInPandasWithState is opaque to column pruning.
 2. The state codec: a bucket's state is entity-tagged parallel arrays.
    The first array holds each entry's entity id and the others its
    values, so one state row carries every entity of the bucket.
@@ -66,27 +65,6 @@ def by_bucket(
     )
     return bucketed.groupBy("_bucket").applyInPandasWithState(
         fn, output_schema, state_schema, "append", timeout
-    )
-
-
-def by_shard(
-    df: DataFrame,
-    op: str,
-    shard_col: str,
-    fn,
-    output_schema: StructType,
-    state_schema: StructType,
-) -> DataFrame:
-    """Run the event-time fold `fn` once per value of the upstream hash
-    shard `shard_col`. No projection: the watermark column must reach
-    the operator, whose late-row filter keeps closed days closed."""
-    _require_integral(df, op, shard_col)
-    return df.groupBy(shard_col).applyInPandasWithState(
-        fn,
-        output_schema,
-        state_schema,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
     )
 
 

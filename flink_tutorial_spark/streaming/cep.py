@@ -22,7 +22,7 @@ from pyspark.sql.types import (
 )
 
 from flink_tutorial_spark.streaming import buckets
-from flink_tutorial_spark.streaming.stateful import one_frame, ts_us
+from flink_tutorial_spark.streaming.stateful import keyed_process, one_frame, ts_us
 
 SEQ_OUT = StructType(
     [
@@ -470,9 +470,7 @@ def timer_gated_forward(
         if out:
             yield pd.DataFrame(out, columns=[f.name for f in GATE_OUT.fields])
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn, GATE_OUT, _GATE_STATE, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_process(df, [key_col], fn, GATE_OUT, _GATE_STATE)
 
 
 TIMEOUT_OUT = StructType(

@@ -564,9 +564,7 @@ def rolling_zscore(
         if out:
             yield pd.DataFrame(out, columns=[f.name for f in ZSCORE_OUT.fields])
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn, ZSCORE_OUT, _ZSCORE_STATE, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_process(df, [key_col], fn, ZSCORE_OUT, _ZSCORE_STATE)
 
 
 SCD2_OUT = StructType(
@@ -787,9 +785,7 @@ def gap_fill_stream(df: DataFrame, key_col: str, ts_col: str) -> DataFrame:
                 }
             )
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn, GAPFILL_OUT, _GAPFILL_STATE, "append", GroupStateTimeout.NoTimeout
-    )
+    return keyed_process(df, [key_col], fn, GAPFILL_OUT, _GAPFILL_STATE)
 
 
 LEDGER_OUT = StructType(
@@ -972,142 +968,4 @@ def ema_fold(
             )
         state.update((float(ema), int(n)))
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn, EMA_OUT, _EMA_STATE, "append", GroupStateTimeout.NoTimeout
-    )
-
-
-#: closed-day emission rule of the shard-keyed day-fold below. Spark
-#: fires event-time timers on `timeoutTimestamp < watermark`, both in
-#: ms; with delay 0 the watermark is wm_ms = floor(max_ts_us / 1000).
-#: A day end is a whole ms (day_end_ms = day_end_us / 1000 exactly),
-#: so a day's cell emits iff day_end_ms - 1 < wm_ms iff
-#: day_end_ms <= floor(max_ts_us / 1000) iff day_end_us <= max_ts_us:
-#: the oracles' `day + INTERVAL 1 DAY <= max(ts)` predicate exactly,
-#: with no ms-rounding gap (a row at 23:59:59.999 leaves the day open,
-#: one at 00:00 of the next day closes it). The fold checks that
-#: predicate per entry against state.getCurrentWatermarkMs() on every
-#: invocation (data or timeout) and arms its bucket timer at the min
-#: open day_end_ms - 1 (buckets.save), so a bucket without data emits
-#: in the first no-data batch whose watermark passes that day's end.
-#: After a day closes, any further row of it is < watermark and
-#: dropped by the late filter, so a closed cell never reopens.
-_DAY_US = 86_400_000_000
-
-
-def _day_end_ms(day_us):
-    return (day_us + _DAY_US) // 1_000
-
-
-QUANTILE_FOLD_OUT = StructType(
-    [
-        StructField("day", TimestampType()),
-        StructField("event_type", StringType()),
-        StructField("shard", LongType()),
-        StructField("idxs", ArrayType(LongType())),
-        StructField("counts", ArrayType(LongType())),
-    ]
-)
-_QUANTILE_FOLD_STATE = StructType(
-    [
-        StructField("days", ArrayType(LongType())),  # us, one per cell
-        StructField("types", ArrayType(StringType())),  # parallel
-        StructField("idxs", ArrayType(LongType())),
-        StructField("counts", ArrayType(LongType())),
-    ]
-)
-
-
-def quantile_day_fold(
-    df: DataFrame, day_col: str, type_col: str, shard_col: str, idx_col: str
-) -> DataFrame:
-    """Live HDR-histogram fold, bucketed by shard — the closed-day
-    EventTimeTimeout fold (VERDICT r12 #4). The reference's keyed
-    windowed-state pattern
-    (UniqueVisitorWithBloom.scala:76-120) at the quantile sketch's
-    footprint.
-
-    Keyed by the upstream hash shard alone (buckets.py): keying by
-    (day, event_type, shard) made 2400 near-singleton dispatches at
-    sf0.1. State per bucket is the sparse cells, flattened into four
-    parallel
-    entry-tagged arrays (days, types, idxs, counts) — one element per
-    OPEN (day, type, idx) cell, each day bounded by 32 * octaves
-    (~512) cells however many EVENTS it has: counts grow but cells do
-    not. idx = e * 32 + m comes from
-    the shared row-level builder (plans.queries_patterns.qsketch_rows),
-    so the bucketing rule cannot drift from the batch family. The merge
-    is NOT idempotent (sum double-counts on replay), so a foreachBatch
-    sink needs an epoch ledger for it (EpochLedgerMergeAggSink); here
-    the ENGINE's state store checkpoints it exactly-once.
-
-    Emission is the closed-day contract (ms-floor proof in the _DAY_US
-    note): each (day, type)
-    vector emits once, in the first micro-batch whose watermark passes
-    the day end, checked per cell against getCurrentWatermarkMs() with
-    one per-bucket EventTimeTimeout at the MIN open day end. The
-    per-batch fold is one pandas groupby-sum over (state cells +
-    batch rows) per bucket."""
-    import numpy as np
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        days, types, idxs, counts = buckets.load(state, 4)
-        cells = pd.DataFrame(
-            {
-                "_d": np.asarray(days, dtype="int64"),
-                "_t": np.asarray(types, dtype=object),
-                "_i": np.asarray(idxs, dtype="int64"),
-                "_c": np.asarray(counts, dtype="int64"),
-            }
-        )
-        if not state.hasTimedOut:
-            pdf = one_frame(pdfs)
-            if pdf is not None:
-                batch = pd.DataFrame(
-                    {
-                        "_d": ts_us(pdf[day_col]),
-                        "_t": pdf[type_col],
-                        "_i": pdf[idx_col].to_numpy(dtype="int64"),
-                        "_c": np.ones(len(pdf), dtype="int64"),
-                    }
-                )
-                cells = (
-                    pd.concat([cells, batch], ignore_index=True)
-                    .groupby(["_d", "_t", "_i"], sort=True, as_index=False)["_c"]
-                    .sum()
-                )
-        closed = _day_end_ms(cells["_d"].to_numpy()) - 1 < state.getCurrentWatermarkMs()
-        if closed.any():
-            out_d, out_t, out_i, out_c = [], [], [], []
-            # state/fold output is (day, type, idx)-sorted, so each
-            # (day, type) group's idxs come out ascending — the same
-            # order the per-key np.union1d fold emitted
-            for (dd, tt), sub in cells[closed].groupby(["_d", "_t"], sort=True):
-                out_d.append(dd)
-                out_t.append(tt)
-                out_i.append(sub["_i"].tolist())
-                out_c.append(sub["_c"].tolist())
-            yield pd.DataFrame(
-                {
-                    "day": pd.to_datetime(out_d, unit="us"),
-                    "event_type": out_t,
-                    "shard": key[0],
-                    "idxs": out_i,
-                    "counts": out_c,
-                }
-            )
-            cells = cells[~closed]
-        buckets.save(
-            state,
-            tuple(cells[c] for c in ("_d", "_t", "_i", "_c")),
-            _day_end_ms(cells["_d"].to_numpy()) - 1,
-        )
-
-    return buckets.by_shard(
-        df,
-        "quantile_day_fold",
-        shard_col,
-        fn,
-        QUANTILE_FOLD_OUT,
-        _QUANTILE_FOLD_STATE,
-    )
+    return keyed_process(df, [key_col], fn, EMA_OUT, _EMA_STATE)

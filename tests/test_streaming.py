@@ -1255,6 +1255,7 @@ def _run_ckpt(spark, src, build, out_dir, ckpt):
         .start()
     )
     q.awaitTermination()
+    return q
 
 
 def _restart_equals_single(spark, tmp_path, batch1, batch2, build, sort_key):
@@ -1785,193 +1786,113 @@ def test_crash_recovery_complete_mode_sketch(spark, tmp_path):
     assert sum(t[2] for t in want) == 4 * (len(batch1) + len(batch2))
 
 
-def test_quantile_day_fold_state_is_bounded(spark, sf_dir):
-    """The live quantile fold's state must be KEY-bounded (days x types
-    x shards rows, <= ~512 cells each), NOT O(events) — the VERDICT
-    r12 #4 claim, asserted via the state-store metrics a
-    StreamingQueryListener reports (the same evidence channel as
-    tools/profile_layers.py's streaming.state_rows and
-    streaming.state_mb)."""
-    import time
+def _quantile_cells(s):
+    """The live quantile stage over the test event schema."""
+    from flink_tutorial_spark.plans.queries_streaming import quantile_day_cells
 
-    from pyspark.sql.streaming import StreamingQueryListener
+    return quantile_day_cells(s.withColumnRenamed("kind", "event_type"))
 
-    from flink_tutorial_spark import plans
-    from flink_tutorial_spark.session import load_table
 
-    class Probe(StreamingQueryListener):
-        def __init__(self):
-            self.rows = []
-
-        def onQueryStarted(self, event):
-            pass
-
-        def onQueryProgress(self, event):
-            for so in event.progress.stateOperators or []:
-                self.rows.append((so.operatorName, so.numRowsTotal))
-
-        def onQueryIdle(self, event):
-            pass
-
-        def onQueryTerminated(self, event):
-            pass
-
-    probe = Probe()
-    spark.streams.addListener(probe)
-    try:
-        result = (
-            plans.REGISTRY["streaming_quantile_rolling"].fn(spark, sf_dir).count()
-        )
-        deadline = time.time() + 30
-        fold_rows: list = []
-        while time.time() < deadline:
-            fold_rows = [
-                n for (op, n) in probe.rows if "applyInPandasWithState" in op
-            ]
-            if fold_rows:
-                time.sleep(2)
-                fold_rows = [
-                    n
-                    for (op, n) in probe.rows
-                    if "applyInPandasWithState" in op
-                ]
-                break
-            time.sleep(0.5)
-    finally:
-        spark.streams.removeListener(probe)
-    assert result > 0
-    assert fold_rows, f"no fold state metrics captured: {probe.rows}"
-    events = load_table(spark, sf_dir, "events")
-    n_keys = (
-        events.select(
-            F.date_trunc("day", "ts"), "event_type", F.pmod("event_id", F.lit(16))
-        )
-        .distinct()
-        .count()
+def _cells(spark, path):
+    return sorted(
+        (r.day, r.event_type, r.e, r.m, r.c)
+        for r in spark.read.parquet(path).collect()
     )
-    n_events = events.count()
-    assert max(fold_rows) <= n_keys, (max(fold_rows), n_keys)
-    # the bound the fold earns: keys, not events — make sure the data is
-    # big enough that the assertion distinguishes them
-    assert n_events > n_keys
 
 
-def test_crash_recovery_quantile_fold_state(spark, tmp_path):
-    """quantile_day_fold's sparse cell-vector state AND its event-time
-    timeout survive a restart (the catalog's timer-EMITTING fold) —
-    with the extra bite that this fold's merge is
-    ADDITIVE, so any state loss or double-fold shows up as a wrong
-    count, not just a wrong set: batch 1 folds two 1.0s and one 2.56
-    into day-0 state and emits nothing (day open — asserted); after
-    the restart, batch 2 adds a third 1.0 and a day-1 event closes
-    day 0, so the emitted counts (3 for the 1.0 cell, 1 for the 2.56
-    cell) are only right if the carried counts round-tripped exactly
-    once. Output must row-equal an uninterrupted run."""
-    from flink_tutorial_spark.plans.queries_patterns import qsketch_rows
-    from flink_tutorial_spark.streaming.stateful import quantile_day_fold
+def test_quantile_day_cells_state_is_bounded(spark, tmp_path):
+    """The live quantile cells' window state must be bounded by CELLS,
+    not events: six daily files of 2,000 events each, one file per
+    micro-batch. A day's cells stay in state until the next day's batch
+    moves the watermark past its end, so the stateStoreSave
+    numRowsTotal of every batch is at most the cells of two consecutive
+    days, far below the 12,000 events streamed."""
+    import numpy as np
 
-    def build(s):
-        st = (
-            s.withColumnRenamed("kind", "event_type")
-            .withColumn("day", F.date_trunc("day", "ts"))
-            .withColumn("shard", F.pmod("user", F.lit(2)))
+    from flink_tutorial_spark.plans.queries_patterns import qsketch_buckets
+
+    rng = np.random.default_rng(7)
+    n_days, per_day = 6, 2_000
+    src = str(tmp_path / "src")
+    for d in range(n_days):
+        secs = np.sort(rng.integers(0, 86_400, per_day)) + d * 86_400
+        values = np.round(10 ** rng.uniform(-2, 3, per_day), 2)
+        kinds = rng.choice(["x", "y", "z"], per_day)
+        _write_one_batch(
+            src,
+            [
+                _row(int(t), kind=str(k), value=float(v))
+                for t, k, v in zip(secs, kinds, values)
+            ],
+            d,
         )
-        rows = (
-            qsketch_rows(st, "ts", "day", "event_type", "shard")
-            .withColumn("idx", F.col("e") * 32 + F.col("m"))
-            .withWatermark("ts", "0 seconds")
-        )
-        return quantile_day_fold(rows, "day", "event_type", "shard", "idx")
-
-    # value=1.0 -> vc=100 -> e=6, m=18 -> idx=210;
-    # value=2.56 -> vc=256 -> e=8, m=0 -> idx=256
-    batch1 = [
-        _row(1, user=1, value=1.0),
-        _row(2, user=1, value=1.0),
-        _row(3, user=1, value=2.56),
+    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+    q = _run_ckpt(spark, src, _quantile_cells, out, ck)
+    state_rows = [
+        so.numRowsTotal
+        for p in q.recentProgress
+        for so in p.stateOperators
+        if so.operatorName == "stateStoreSave"
     ]
-    # post-restart: one more 1.0 (its count must MERGE to 3, not reset
-    # to 1 or double) + a day-1 event that closes day 0
-    batch2 = [_row(6, user=1, value=1.0), _row(86500, user=1, value=1.0)]
+    assert len(state_rows) >= n_days, q.recentProgress
+
+    batch = spark.read.schema(EVENT_SCHEMA).parquet(src)
+    per_day_cells = [
+        r["count"]
+        for r in qsketch_buckets(
+            batch.withColumn("day", F.date_trunc("day", "ts")), "day", "kind"
+        )
+        .groupBy("day")
+        .count()
+        .orderBy("day")
+        .collect()
+    ]
+    assert len(per_day_cells) == n_days
+    bound = max(a + b for a, b in zip(per_day_cells, per_day_cells[1:]))
+    assert 0 < max(state_rows) <= bound, (state_rows, per_day_cells)
+    # the bound distinguishes cells from events
+    assert bound < n_days * per_day
+    # and every day but the last (still open) emitted its cells
+    assert len(_cells(spark, out)) == sum(per_day_cells[:-1])
+
+
+def test_crash_recovery_quantile_day_cells(spark, tmp_path):
+    """The live quantile cells' window state survives a restart. The
+    cell merge is ADDITIVE, so any state loss or double count shows up
+    as a wrong count, not just a wrong set: batch 1 counts two 1.0s and
+    one 2.56 into day 0 and emits nothing (day open — asserted); after
+    the restart, batch 2 adds a third 1.0 and a day-1 event closes day
+    0, so the emitted counts (3 for the 1.0 cell, 1 for the 2.56 cell)
+    are only right if the carried counts round-tripped exactly once.
+    Output must row-equal an uninterrupted run."""
+    # value=1.0 -> vc=100 -> e=6, m=18; value=2.56 -> vc=256 -> e=8, m=0
+    batch1 = [
+        _row(1, value=1.0),
+        _row(2, value=1.0),
+        _row(3, value=2.56),
+    ]
+    batch2 = [_row(6, value=1.0), _row(86500, value=1.0)]
 
     src_a = str(tmp_path / "src_a")
     out_a, ck_a = str(tmp_path / "out_a"), str(tmp_path / "ck_a")
     _write_one_batch(src_a, batch1, 0)
-    _run_ckpt(spark, src_a, build, out_a, ck_a)
+    _run_ckpt(spark, src_a, _quantile_cells, out_a, ck_a)
     assert (
         spark.read.parquet(out_a).count() == 0
     ), "day-0 cells emitted before the day closed"
     _write_one_batch(src_a, batch2, 1)
-    _run_ckpt(spark, src_a, build, out_a, ck_a)  # restart
+    _run_ckpt(spark, src_a, _quantile_cells, out_a, ck_a)  # restart
 
     src_b = str(tmp_path / "src_b")
     _write_one_batch(src_b, batch1, 0)
     _write_one_batch(src_b, batch2, 1)
     out_b, ck_b = str(tmp_path / "out_b"), str(tmp_path / "ck_b")
-    _run_ckpt(spark, src_b, build, out_b, ck_b)
+    _run_ckpt(spark, src_b, _quantile_cells, out_b, ck_b)
 
-    def snap(path):
-        return sorted(
-            (r.day, r.event_type, r.shard, list(r.idxs), list(r.counts))
-            for r in spark.read.parquet(path).collect()
-        )
-
-    got, want = snap(out_a), snap(out_b)
+    got, want = _cells(spark, out_a), _cells(spark, out_b)
     assert got == want
-    assert got == [
-        (T0.to_pydatetime(), "x", 1, [210, 256], [3, 1]),
-    ]
-
-
-def test_quantile_fold_shared_bucket_emits_per_day_type(spark, tmp_path):
-    """The r20 shard-bucketed quantile_day_fold holds every (day, type)
-    cell vector of a shard in one bucket: emission must stay per
-    (day, event_type) with day-local counts — one shard (pmod 1), two
-    types and two closed days through a single bucket, day 0 closing
-    in a data invocation and day 1 in the trailing timeout batch."""
-    from flink_tutorial_spark.plans.queries_patterns import qsketch_rows
-    from flink_tutorial_spark.streaming.stateful import quantile_day_fold
-
-    def build(s):
-        st = (
-            s.withColumnRenamed("kind", "event_type")
-            .withColumn("day", F.date_trunc("day", "ts"))
-            .withColumn("shard", F.pmod("user", F.lit(1)))
-        )
-        rows = (
-            qsketch_rows(st, "ts", "day", "event_type", "shard")
-            .withColumn("idx", F.col("e") * 32 + F.col("m"))
-            .withWatermark("ts", "0 seconds")
-        )
-        return quantile_day_fold(rows, "day", "event_type", "shard", "idx")
-
-    # value=1.0 -> idx 210; value=2.56 -> idx 256 (see the crash test)
-    batch0 = [
-        _row(1, kind="x", value=1.0),
-        _row(2, kind="x", value=1.0),
-        _row(3, kind="x", value=2.56),
-        _row(4, kind="y", value=1.0),
-        _row(86500, kind="x", value=1.0),
-    ]
-    batch1 = [_row(2 * 86400 + 100, kind="x", value=1.0)]
-
-    src = str(tmp_path / "src")
-    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
-    _write_one_batch(src, batch0, 0)
-    _write_one_batch(src, batch1, 1)
-    _run_ckpt(spark, src, build, out, ck)
-
-    got = sorted(
-        (r.day, r.event_type, r.shard, list(r.idxs), list(r.counts))
-        for r in spark.read.parquet(out).collect()
-    )
     day0 = T0.to_pydatetime()
-    day1 = (T0 + pd.Timedelta(days=1)).to_pydatetime()
-    assert got == [
-        (day0, "x", 0, [210, 256], [2, 1]),  # day-0 x: two 1.0s + one 2.56
-        (day0, "y", 0, [210], [1]),  # same bucket, own (day, type) row
-        (day1, "x", 0, [210], [1]),  # day 1 kept its own counts
-    ]
+    assert got == [(day0, "x", 6, 18, 3), (day0, "x", 8, 0, 1)]
 
 
 def _ms_row(ms, user, kind="x", value=1.0):
@@ -1982,30 +1903,14 @@ def _ms_row(ms, user, kind="x", value=1.0):
 _DAY_MS = 86_400_000
 
 
-def test_quantile_fold_emits_day_at_stalled_watermark(spark, tmp_path):
+def test_quantile_day_cells_emit_day_at_stalled_watermark(spark, tmp_path):
     """Day 0 must emit when the watermark stops exactly at its end:
     batch 0 ends day 0 at 23:59:59.999, batch 1 is one row at exactly
     00:00:00.000 of day 1, then no more data arrives. Batch 1 runs at
     watermark day_end - 1 ms (day 0 still open); the trailing no-data
-    batch runs at watermark day_end, where day_end_ms - 1 < wm_ms closes
-    day 0, so the bucket timer armed in batch 1 must fire there."""
-    from flink_tutorial_spark.plans.queries_patterns import qsketch_rows
-    from flink_tutorial_spark.streaming.stateful import quantile_day_fold
-
-    def build(s):
-        st = (
-            s.withColumnRenamed("kind", "event_type")
-            .withColumn("day", F.date_trunc("day", "ts"))
-            .withColumn("shard", F.pmod("user", F.lit(1)))
-        )
-        rows = (
-            qsketch_rows(st, "ts", "day", "event_type", "shard")
-            .withColumn("idx", F.col("e") * 32 + F.col("m"))
-            .withWatermark("ts", "0 seconds")
-        )
-        return quantile_day_fold(rows, "day", "event_type", "shard", "idx")
-
-    # value=1.0 -> idx 210; value=2.56 -> idx 256 (see the crash test)
+    batch runs at watermark day_end, where `window.end <= watermark`
+    closes day 0. Day 1 stays open."""
+    # value=1.0 -> (e=6, m=18); value=2.56 -> (e=8, m=0)
     src = str(tmp_path / "src")
     out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
     _write_one_batch(
@@ -2018,13 +1923,10 @@ def test_quantile_fold_emits_day_at_stalled_watermark(spark, tmp_path):
         0,
     )
     _write_one_batch(src, [_ms_row(_DAY_MS, 4)], 1)
-    _run_ckpt(spark, src, build, out, ck)
+    _run_ckpt(spark, src, _quantile_cells, out, ck)
 
-    got = sorted(
-        (r.day, r.event_type, r.shard, list(r.idxs), list(r.counts))
-        for r in spark.read.parquet(out).collect()
-    )
-    assert got == [(T0.to_pydatetime(), "x", 0, [210, 256], [2, 1])]
+    day0 = T0.to_pydatetime()
+    assert _cells(spark, out) == [(day0, "x", 6, 18, 2), (day0, "x", 8, 0, 1)]
 
 
 def test_match_or_timeout_fires_at_stalled_watermark(spark, tmp_path):
@@ -2070,7 +1972,6 @@ def _string_key_plans():
     from flink_tutorial_spark.streaming.stateful import (
         blacklist_filter,
         clamped_ledger,
-        quantile_day_fold,
         scd2_closed_intervals,
         transition_pairs,
     )
@@ -2094,7 +1995,6 @@ def _string_key_plans():
         "match_or_timeout": lambda s: match_or_timeout(
             s, "key", "ts", "kind", "create", "pay", 60
         ),
-        "quantile_day_fold": lambda s: quantile_day_fold(s, "day", "kind", "key", "user"),
     }
 
 
@@ -2108,13 +2008,12 @@ def _string_key_plans():
         "detect_consecutive",
         "detect_sequence",
         "match_or_timeout",
-        "quantile_day_fold",
     ],
 )
 def test_bucketed_state_rejects_string_key_at_plan_build(spark, tmp_path, op):
-    """A string entity key (or day-fold shard column) would bucket as
-    NULL at run time; the operator must refuse it with a TypeError while
-    the plan is built, before any query starts."""
+    """A string entity key would bucket as NULL at run time; the
+    operator must refuse it with a TypeError while the plan is built,
+    before any query starts."""
     src = str(tmp_path / "src")
     write_batches(src, [[_row(0)]])
     stream = (
